@@ -264,9 +264,8 @@ object Bench {
         TemporalJoins.asofJoin(l, r, Seq("user_id"), "ts", "ts",
           Seq("click_id", "click_value"))
       }),
-      // the same as-of shape on the whole-operator tier (AsofJoinExec
-      // sort-merge) — recorded next to asof_join so the two plan shapes'
-      // costs stay comparable round over round
+      // the same as-of join through its whole-operator name; asof_join
+      // delegates to it, so the two legs now run one plan
       "asof_native" -> (() => mat {
         val l = eventsSf.filter(col("event_type") === "purchase")
           .select("user_id", "event_id", "ts")
@@ -688,8 +687,8 @@ object Bench {
       // that as a scaling claim).
       // Retake threshold 7.0 → 5.0 (r10): the r9 asof_native leg drew
       // 6.80× — below the old threshold, so no retake fired — while a
-      // 5-rep alternating probe (tools/AsofScaleProbe) measures its
-      // median at 3.13× vs composed 3.01× on identical panels; the
+      // 5-rep alternating probe measured its median at 3.13× vs the
+      // since-removed composed form's 3.01× on identical panels; the
       // native 10× leg is bimodal (1.6–2.2 s fast mode, ~5.3 s slow
       // draws under heap pressure), so ratios past 5 warrant the
       // settle+retake before being recorded as scaling claims.

@@ -2244,7 +2244,7 @@ object SparkEntry {
         .select(col("user_id"), col("ts"), col("value").as("error_value"))
       TemporalJoins.pointInTimeJoin(spine, Seq("user_id"), "ts",
         Seq((clicks, "ts", Seq("click_value"), None),
-          (errors, "ts", Seq("error_value"), None)), native = true)
+          (errors, "ts", Seq("error_value"), None)))
     }),
 
     // the same two-step PIT through the SQL front door: chained

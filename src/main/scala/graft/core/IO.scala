@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Testdata table loaders (TESTDATA.md layout: one parquet per table). */
 object IO {
@@ -18,7 +18,8 @@ object IO {
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val (df, scanParts) = scan(spark, path)
     val typed = df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.dataType == LongType && f.name == "ts")
         // nanos long → µs → NTZ timestamp (truncation == DuckDB's read)
@@ -64,9 +65,8 @@ object IO {
     // (every sf0.1 bench table clears it; every sf0.001 table is under
     // it). Env-overridable, size-based — not tuned to any core count.
     val parallelism = spark.sparkContext.defaultParallelism
-    // row-group-accurate where it can be (see effectiveScanUnits): a
-    // big single-row-group file reports inflated split counts
-    val scanParts = effectiveScanUnits(df).getOrElse(df.rdd.getNumPartitions)
+    // scanParts is row-group-accurate (see effectiveScanUnits): a big
+    // single-row-group file reports inflated split counts
     val scanBytes = df.queryExecution.analyzed.stats.sizeInBytes
     val minBytes = BigInt(sys.env.getOrElse(
       "SPARK_GRAFT_SCAN_NORM_MIN_BYTES", "131072"))
@@ -83,16 +83,24 @@ object IO {
   }
 
   /** Effective parallelism of a file scan: parquet is splittable only at
-    * row-group granularity, so a single-row-group file BIGGER than
-    * `maxPartitionBytes` still reports many split-partitions while every
-    * row lands in the one task holding the row-group start — the split
-    * count lies (measured r13, tools/SpreadScaleProbe: a 1.3 GB 1-RG
-    * file read as "11 partitions" ran its scan stage at parallelism
-    * 1.0). When the scan has few files, read the footers and count the
-    * actual row groups; plenty-of-files scans and non-file plans return
-    * None (the split count is honest there). Plan-time footer reads
-    * only — never a Spark job. */
-  def effectiveScanUnits(df: org.apache.spark.sql.DataFrame): Option[Int] =
+    * row-group granularity, so it is `min(row groups, scan splits)`. A
+    * single-row-group file BIGGER than `maxPartitionBytes` reports many
+    * split-partitions while every row lands in the one task holding the
+    * row-group start (measured r13: a 1.3 GB 1-RG file read as "11
+    * partitions" ran its scan stage at parallelism 1.0); a small file
+    * with many row groups is one split, so one task. When the scan has
+    * few files, read the footers and count the actual row groups;
+    * plenty-of-files scans and non-file plans use the split count alone
+    * (it is honest there). Plan-time footer reads only — never a Spark
+    * job. */
+  def effectiveScanUnits(df: DataFrame): Int = {
+    val splits = df.rdd.getNumPartitions
+    rowGroupCount(df).fold(splits)(math.min(_, splits))
+  }
+
+  /** Row groups over a scan's files, from their footers; None for a
+    * non-file plan or one with more than 8 files. */
+  private def rowGroupCount(df: DataFrame): Option[Int] =
     try {
       val files = df.inputFiles
       if (files.isEmpty || files.length > 8) None
@@ -106,6 +114,72 @@ object IO {
         }.sum)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** What a parquet read resolves on the driver before any row is read:
+    * the inferred schema (a Spark job) and the scan width,
+    * `min(row groups, splits)` (footer reads and scan planning). */
+  private final case class Resolved(schema: StructType, scanUnits: Int)
+
+  /** SQL confs that change what parquet schema inference returns, or
+    * how the files are split into scan partitions. */
+  private val ResolveConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    "spark.sql.leafNodeDefaultParallelism")
+
+  private val MemoEntries = 64
+
+  /** Per-path scan resolution, keyed on the path, the file listing
+    * (name, length, mtime of every file under it), [[ResolveConfs]] and
+    * the session parallelism: rewriting, adding or deleting a file
+    * changes the key. LRU-bounded at [[MemoEntries]]. */
+  private val memo = new java.util.LinkedHashMap[AnyRef, Resolved](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[AnyRef, Resolved]): Boolean = size() > MemoEntries
+  }
+
+  /** The file listing under `path` as a memo key, or None when it
+    * cannot be listed (a missing path then fails in `spark.read` with
+    * Spark's own error). */
+  private def listing(spark: SparkSession, path: String): Option[AnyRef] =
+    try {
+      import org.apache.hadoop.fs.{FileStatus, Path}
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      // listStatus, not listFiles: no block-location lookups per file
+      def walk(st: FileStatus): Seq[(String, Long, Long)] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      Some((path, walk(fs.getFileStatus(root)).sorted,
+        ResolveConfs.map(spark.conf.getOption(_)),
+        spark.sparkContext.defaultParallelism))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** `spark.read.parquet(path)` plus its scan width. An unchanged table
+    * (same listing, same confs) reads with its memoized schema, so it
+    * starts no schema-inference job, reads no footers and plans no
+    * scan. */
+  private def scan(spark: SparkSession, path: String): (DataFrame, Int) = {
+    val key = listing(spark, path)
+    key.flatMap(k => memo.synchronized(Option(memo.get(k)))) match {
+      case Some(r) => (spark.read.schema(r.schema).parquet(path), r.scanUnits)
+      case None =>
+        val df = spark.read.parquet(path)
+        val r = Resolved(df.schema, effectiveScanUnits(df))
+        key.foreach(k => memo.synchronized(memo.put(k, r)))
+        (df, r.scanUnits)
+    }
+  }
 
   /** Partition count for the single-row-group normalization above. A
     * FIXED constant, not `defaultParallelism`: hash(key) % N with fixed N

@@ -51,7 +51,6 @@ object Similarity {
     // a single-row-group file bigger than maxPartitionBytes reports many
     // split-partitions while delivering every row to one task
     val units = graft.core.IO.effectiveScanUnits(df)
-      .getOrElse(df.rdd.getNumPartitions)
     if (parts >= 2 && units * 4 <= parallelism)
       df.repartition(parts, col(key))
     else df

@@ -12,13 +12,15 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *
   * Scale design, per operator:
   *
-  *  - '''asofJoin''': never a non-equi join. Both sides are tagged and
-  *    unioned, hash-partitioned on the `by` keys (ONE exchange), sorted
-  *    within partitions, and the match is a `last(_, ignoreNulls)` running
-  *    carry inside a codegen'd WindowExec. `nearest` adds a second sort
-  *    (descending) over the same exchange, not a second shuffle. A
-  *    broadcast-range join would need the right side small; this form
-  *    scales to both sides huge, skew-bounded by the hottest `by` key.
+  *  - '''asofJoin''': never a non-equi join, and one operator:
+  *    [[asofJoinNative]]'s sort-merge `AsofJoinExec` (each side
+  *    hash-partitioned on the `by` keys and sorted by time, then one
+  *    forward merge pass). Building it starts no Spark job. A hot `by`
+  *    key is handled when the query runs: the query-stage rule
+  *    [[graft.plans.SplitSkewedTemporalJoin]] splits a skewed left
+  *    shuffle partition under Spark's `skewJoin` thresholds.
+  *    [[asofJoinSalted]] is the explicit, eager tool for a key hot on
+  *    both sides.
   *  - '''rangeJoin''': intervals explode into fixed-width time buckets and
   *    the join becomes an equi-join on (by, bucket) + exact residual
   *    filter — the classic bucketed range join. Each (left, right) pair
@@ -82,143 +84,30 @@ object TemporalJoins {
     * ambiguous (any engine picks one arbitrarily) — pre-aggregate the
     * right side per (by, time) if that matters, as the gate queries do.
     *
-    * `by` must be non-empty: a global as-of would funnel everything
-    * through one window partition. Pre-bucket the time axis and carry
-    * boundary rows if a keyless as-of is ever needed at scale.
+    * `by` must be non-empty: a keyless as-of would funnel everything
+    * through one merge partition.
     *
     * Null times: right rows with a null time are ignored; left rows with
     * a null time are kept, unmatched (polars drops them — keeping the
     * row with null carries is the lossless superset).
+    *
+    * One operator: this is [[asofJoinNative]] under its polars name.
+    * Building the DataFrame starts no Spark job; a hot `by` key is split
+    * at query-stage time ([[graft.plans.SplitSkewedTemporalJoin]]).
     */
   def asofJoin(left: DataFrame, right: DataFrame, by: Seq[String],
                leftTime: String, rightTime: String, rightCols: Seq[String],
                direction: String = "backward",
                toleranceUs: Option[Long] = None,
                matchedTime: String = "asof_ts",
-               allowExactMatches: Boolean = true): DataFrame = {
-    require(by.nonEmpty,
-      "asofJoin: empty `by` would single-partition the window; supply keys")
-    require(Seq("backward", "forward", "nearest").contains(direction),
-      s"asofJoin: unknown direction '$direction'")
-    require(rightCols.nonEmpty, "asofJoin: no right columns to carry")
-    toleranceUs.foreach(t => require(t >= 0, "asofJoin: negative tolerance"))
-
-    // hot-key handling is the default here too (r13): the union+window
-    // carry funnels a hot `by` key into ONE window partition exactly like
-    // the native merge does — above the size floor, route through the
-    // detect-and-slice path (spec-pinned row-equal to this form; row
-    // ORDER differs, as documented on asofJoinSalted)
-    if (autoSaltEligible(left, right))
-      return asofJoinSalted(left, right, by, leftTime, rightTime, rightCols,
-        direction, toleranceUs, matchedTime, allowExactMatches)
-
-    val eq = nameEq(left.sparkSession)
-    val outNames = rightCols.map(c =>
-      if (left.columns.exists(eq(_, c))) c + "_right" else c)
-
-    // Right payload rides inside ONE struct so the ignoreNulls carry skips
-    // left rows (whose payload is null) but never a right row whose value
-    // columns happen to be null — polars semantics, not "last non-null".
-    val payload = struct(
-      (col(rightTime).as("__rt") +: micros(right, rightTime).as("__rtu") +:
-        rightCols.map(col)): _*)
-    val rTagged = right.select(
-      (by.map(col) :+ micros(right, rightTime).as("__tu") :+
-        payload.as("__p") :+ lit(0).as("__tag")): _*)
-      .filter(col("__tu").isNotNull)
-    val lTagged = left
-      .withColumn("__tu", micros(left, leftTime))
-      .withColumn("__tag", lit(1))
-    val uni = lTagged.unionByName(rTagged, allowMissingColumns = true)
-
-    // Equal timestamps: with allowExactMatches the right row (tag 0)
-    // sorts first in BOTH orders, so matches are inclusive (>= / <=)
-    // like the oracle's ASOF JOIN; with allowExactMatches=false (pandas
-    // merge_asof's strict mode) the left row sorts first, so an
-    // equal-ts right row is not yet visible — strictly-before/after.
-    val tagOrder =
-      if (allowExactMatches) col("__tag").asc else col("__tag").desc
-    val part = Window.partitionBy(by.map(col): _*)
-    val frame = (w: org.apache.spark.sql.expressions.WindowSpec) =>
-      w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val back = last(when(col("__tag") === 0, col("__p")), ignoreNulls = true)
-      .over(frame(part.orderBy(col("__tu").asc, tagOrder)))
-    val fwd = last(when(col("__tag") === 0, col("__p")), ignoreNulls = true)
-      .over(frame(part.orderBy(col("__tu").desc, tagOrder)))
-
-    val carried = direction match {
-      case "backward" => uni.withColumn("__m", back)
-      case "forward" => uni.withColumn("__m", fwd)
-      case "nearest" =>
-        uni.withColumn("__mb", back).withColumn("__mf", fwd)
-          .withColumn("__m",
-            when(col("__mb").isNull, col("__mf"))
-              .when(col("__mf").isNull, col("__mb"))
-              .when(col("__tu") - col("__mb.__rtu") <=
-                    col("__mf.__rtu") - col("__tu"), col("__mb"))
-              .otherwise(col("__mf")))
-    }
-
-    // null-time left rows never match (their sort position is
-    // direction-dependent, so the carry must not leak into them)
-    val withinTol = toleranceUs match {
-      case Some(t) =>
-        when(col("__tu").isNotNull && col("__m").isNotNull &&
-          abs(col("__tu") - col("__m.__rtu")) <= t, col("__m"))
-      case None => when(col("__tu").isNotNull, col("__m"))
-    }
-    val outCols =
-      left.columns.toSeq.map(col) ++
-        (col("__mok.__rt").as(matchedTime) +:
-          rightCols.zip(outNames).map { case (c, o) =>
-            col("__mok").getField(c).as(o)
-          })
-    carried.filter(col("__tag") === 1)
-      .withColumn("__mok", withinTol)
-      .select(outCols: _*)
-  }
+               allowExactMatches: Boolean = true): DataFrame =
+    asofJoinNative(left, right, by, leftTime, rightTime, rightCols,
+      direction, toleranceUs, matchedTime, allowExactMatches)
 
   // ── shared plumbing for the whole-operator tier (asofJoinNative /
   // rangeJoinNative): name resolution under the session's
   // case-sensitivity, and merge-key derivation (tightest-common-type
   // cast + float NaN/-0.0 normalization) ──────────────────────────────
-
-  // ── default skew handling (r13, r12 verdict ask #4) ─────────────────
-  // Hot-key routing is now the DEFAULT on asofJoin/asofJoinNative, not an
-  // opt-in: when the combined plan-time size estimate of the two sides
-  // clears `graft.asof.autoSalt.minBytes`, the call routes through
-  // [[asofJoinSalted]], whose one stats pass detects keys holding ≥ 5% of
-  // all rows and time-slices them (falling through to the plain merge
-  // when nothing is hot — the stats pass is then the only cost). Below
-  // the floor the plain plan runs untouched: a sub-floor input fits a
-  // single task comfortably even when fully skewed, so detection would
-  // cost more than the worst case it prevents. The floor compares
-  // COMPRESSED plan estimates (parquet file bytes for scans), so 16 MB
-  // corresponds to roughly 10⁷ rows of narrow panel data — the scale
-  // where a 50%-hot key is several seconds of single-task merge.
-  // Calibration probe (r13, see OPTIMIZATION_r13.md): the sf0.1 bench
-  // events sides estimate 1.8 MB (plain path kept), the sf0.01 gate
-  // 0.2 MB (plain), the 10×-scale 10⁷-row panels 320 MB (detect), a
-  // 10⁸-row zipfian parquet panel ~72 MB (detect). Session-conf knobs
-  // (no rebuild needed to flip them):
-  //   graft.asof.autoSalt          on/off            (default true)
-  //   graft.asof.autoSalt.minBytes detection floor   (default 16 MB)
-  private val AutoSaltMinBytesDefault: Long = 16L * 1024 * 1024
-
-  private def autoSaltEligible(left: DataFrame, right: DataFrame): Boolean = {
-    val spark = left.sparkSession
-    // the salted path's stats pass is a batch collect — never route a
-    // streaming frame (micro-batch embedders keep the plain plan)
-    if (left.isStreaming || right.isStreaming) false
-    else if (!spark.conf.get("graft.asof.autoSalt", "true").toBoolean) false
-    else try {
-      import org.apache.spark.sql.GraftPlanBridge
-      val minBytes = BigInt(spark.conf.get("graft.asof.autoSalt.minBytes",
-        AutoSaltMinBytesDefault.toString))
-      GraftPlanBridge.analyzed(left).stats.sizeInBytes +
-        GraftPlanBridge.analyzed(right).stats.sizeInBytes >= minBytes
-    } catch { case scala.util.control.NonFatal(_) => false }
-  }
 
   /** Name equality under the session's `spark.sql.caseSensitive` —
     * the comparison every collision/rename decision must use, because
@@ -242,8 +131,8 @@ object TemporalJoins {
         s"temporal native join: no column $name on the $side side"))
   }
 
-  /** Tightest common type per key (the coercion unionByName gives the
-    * composed forms), failing loudly on incompatible pairs. */
+  /** Tightest common type per key (the coercion `unionByName` would
+    * give), failing loudly on incompatible pairs. */
   private def commonKeyTypes(left: DataFrame, right: DataFrame,
       byL: Seq[String], byR: Seq[String],
       by: Seq[String]): Seq[org.apache.spark.sql.types.DataType] =
@@ -286,51 +175,34 @@ object TemporalJoins {
         keyTypes(i) == DoubleType || keyTypes(i) == FloatType)
   }
 
-  /** [[asofJoin]] on the whole-operator Catalyst tier: builds a
-    * [[graft.plans.AsofJoin]] logical node planned by
+  /** The as-of join ([[asofJoin]]'s semantics) as a whole-operator
+    * Catalyst node: a [[graft.plans.AsofJoin]] logical node planned by
     * [[graft.plans.GraftStrategy]] into the sort-merge
-    * [[graft.plans.AsofJoinExec]]. Identical semantics and output
-    * schema to the composed form (spec-pinned equality on every
-    * direction × tolerance × exact-match combination), different plan:
-    * two per-side exchanges + sorts and a single O(|L|+|R|) merge pass
-    * instead of one union exchange + WindowExec over both sides — the
-    * left side's partitioning/ordering survive to downstream operators,
-    * and deterministic left-side filters written above the join are
-    * pushed below it by [[graft.plans.PushFilterThroughAsofJoin]].
+    * [[graft.plans.AsofJoinExec]] — two per-side exchanges + sorts and a
+    * single O(|L|+|R|) merge pass. The left side's partitioning/ordering
+    * survive to downstream operators, and deterministic left-side
+    * filters written above the join are pushed below it by
+    * [[graft.plans.PushFilterThroughAsofJoin]].
     *
-    * Registers the strategy/rule on the live session (idempotent), so
-    * it works with or without `spark.sql.extensions=
-    * graft.plans.GraftExtensions`.
+    * Starts no Spark job while the DataFrame is built. Skew is handled
+    * when the query runs: if the materialized left shuffle holds a
+    * partition above Spark's `spark.sql.adaptive.skewJoin.*` thresholds,
+    * [[graft.plans.SplitSkewedTemporalJoin]] splits it and replicates the
+    * matching right partition (row-identical to the unsplit merge). A
+    * key hot on BOTH sides still sorts its whole right partition in each
+    * split; [[asofJoinSalted]] is the explicit tool for that shape.
+    *
+    * Registers the strategy/rules on the live session (idempotent), so
+    * it works whether or not the session loaded
+    * [[graft.plans.GraftExtensions]].
     *
     * The merge runs on derived key columns: each `by` key is cast to
-    * the tightest common type of the two sides (the coercion
-    * `unionByName` gives the composed form) and float/double keys are
-    * NaN/-0.0-normalized (what NormalizeFloatingNumbers does for a
-    * window partition key — the custom node is invisible to that
-    * rule), so mixed-width or floating keys match identically on both
-    * plan shapes instead of silently missing across partitions. */
+    * the tightest common type of the two sides and float/double keys are
+    * NaN/-0.0-normalized (what NormalizeFloatingNumbers does for a join
+    * or window key — the custom node is invisible to that rule), so
+    * mixed-width or floating keys match instead of silently missing
+    * across partitions. */
   def asofJoinNative(left: DataFrame, right: DataFrame, by: Seq[String],
-                     leftTime: String, rightTime: String,
-                     rightCols: Seq[String],
-                     direction: String = "backward",
-                     toleranceUs: Option[Long] = None,
-                     matchedTime: String = "asof_ts",
-                     allowExactMatches: Boolean = true): DataFrame =
-    // hot-key handling is the default, not an opt-in (r13): above the
-    // size floor, detect-and-slice via asofJoinSalted (pure fall-through
-    // to the plain merge when no key is hot); below it, the plain plan
-    if (autoSaltEligible(left, right))
-      asofJoinSalted(left, right, by, leftTime, rightTime, rightCols,
-        direction, toleranceUs, matchedTime, allowExactMatches)
-    else
-      asofJoinNativePlain(left, right, by, leftTime, rightTime, rightCols,
-        direction, toleranceUs, matchedTime, allowExactMatches)
-
-  /** The plain (no skew detection) whole-operator merge —
-    * [[asofJoinSalted]]'s building block and [[asofJoinNative]]'s
-    * below-floor path. */
-  private def asofJoinNativePlain(
-                     left: DataFrame, right: DataFrame, by: Seq[String],
                      leftTime: String, rightTime: String,
                      rightCols: Seq[String],
                      direction: String = "backward",
@@ -423,14 +295,17 @@ object TemporalJoins {
   }
 
   /** Skew-resistant [[asofJoinNative]] for zipfian `by` keys, where one
-    * key holds a large share of BOTH sides and the sort-merge exec's
-    * hash clustering necessarily lands it in one task (AQE's
-    * OptimizeSkewedJoin only rewrites SortMergeJoinExec, never a custom
-    * node — the r11 scale probe measured the 50%-hot-key leg at 35× for
-    * a 100× scale-up vs 13× uniform). Since r13 this is the DEFAULT
-    * routing target of [[asofJoin]]/[[asofJoinNative]] above the
-    * `graft.asof.autoSalt.minBytes` plan-estimate floor — calling it
-    * directly only bypasses the floor and pins the salt parameters.
+    * key holds a large share of BOTH sides. The default path's
+    * query-stage split ([[graft.plans.SplitSkewedTemporalJoin]]) cuts the
+    * hot LEFT partition but replicates the whole right partition into
+    * every split, so a key hot on both sides still sorts its full right
+    * share in each task. This explicit tool slices the hot key's TIME
+    * range on both sides instead.
+    *
+    * Starts Spark jobs while the DataFrame is built: the stats pass
+    * below (one `collect` of the key total and one `count` that caches
+    * the hot-key bounds). They run under the job description
+    * `graft asofJoinSalted: hot-key stats`.
     *
     * Shape: one map-side-combined stats pass over the key projections of
     * both sides finds keys whose combined row share exceeds
@@ -508,22 +383,27 @@ object TemporalJoins {
       .agg(count(lit(1)).as("__gscnt"), min("__gstu").as("__gsmn"),
         max("__gstu").as("__gsmx"))
       .persist()
-    val total = stats.agg(sum("__gscnt")).collect()(0).getLong(0)
-    val bounds = stats
-      .filter(col("__gscnt") >= lit(hotKeyShare * total) &&
-        col("__gsmn").isNotNull)
-      .orderBy(col("__gscnt").desc)
-      .limit(maxHotKeys)
-      .withColumn("__gsw",
-        greatest(lit(1L),
-          ceil((col("__gsmx") - col("__gsmn") + 1L) / lit(B.toDouble))
-            .cast("long")))
-      .cache()
-    val nHot = bounds.count()
+    val sc = spark.sparkContext
+    val prevDesc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("graft asofJoinSalted: hot-key stats")
+    val (bounds, nHot) = try {
+      val total = stats.agg(sum("__gscnt")).collect()(0).getLong(0)
+      val b = stats
+        .filter(col("__gscnt") >= lit(hotKeyShare * total) &&
+          col("__gsmn").isNotNull)
+        .orderBy(col("__gscnt").desc)
+        .limit(maxHotKeys)
+        .withColumn("__gsw",
+          greatest(lit(1L),
+            ceil((col("__gsmx") - col("__gsmn") + 1L) / lit(B.toDouble))
+              .cast("long")))
+        .cache()
+      (b, b.count())
+    } finally sc.setJobDescription(prevDesc)
     stats.unpersist()
     if (nHot == 0) {
       bounds.unpersist()
-      return asofJoinNativePlain(left, right, by, leftTime, rightTime,
+      return asofJoinNative(left, right, by, leftTime, rightTime,
         rightCols, direction, toleranceUs, matchedTime, allowExactMatches)
     }
 
@@ -581,10 +461,10 @@ object TemporalJoins {
     }
     val rightHotS = rHotRep.drop("__gstu").drop(boundCols: _*)
 
-    val cold = asofJoinNativePlain(leftCold, rightCold, by, leftTime,
+    val cold = asofJoinNative(leftCold, rightCold, by, leftTime,
       rightTime, rightCols, direction, toleranceUs, matchedTime,
       allowExactMatches)
-    val hot = asofJoinNativePlain(leftHotS, rightHotS, by :+ "__gslice",
+    val hot = asofJoinNative(leftHotS, rightHotS, by :+ "__gslice",
       leftTime, rightTime, rightCols, direction, toleranceUs,
       matchedTime, allowExactMatches)
       .drop("__gslice")
@@ -595,28 +475,17 @@ object TemporalJoins {
     * against several feature tables in sequence — the leakage-free
     * training-snapshot assembly (each feature value is the latest
     * at-or-before the spine row's time, never a future one). One
-    * backward [[asofJoin]] per feature table: each is one hash exchange
-    * on the same `by` keys, so the spine's partitioning is reused
-    * between steps. The i-th table's matched timestamp lands in
-    * `asof_ts_i`.
-    *
-    * `native = true` runs each step on the whole-operator tier
-    * ([[asofJoinNative]]) instead of the window carry — the chained
-    * steps then genuinely reuse one exchange: AsofJoinExec reports
-    * `outputPartitioning = left`, so step i+1's left side is already
-    * clustered on `by` and EnsureRequirements inserts no new shuffle
-    * (the union+window form re-shuffles the union every step). */
+    * backward [[asofJoin]] per feature table. The chained steps reuse
+    * one spine exchange: AsofJoinExec reports `outputPartitioning =
+    * left`, so step i+1's left side is already clustered on `by` and
+    * EnsureRequirements inserts no new shuffle. The i-th table's
+    * matched timestamp lands in `asof_ts_i`. */
   def pointInTimeJoin(spine: DataFrame, by: Seq[String], spineTime: String,
-      features: Seq[(DataFrame, String, Seq[String], Option[Long])],
-      native: Boolean = false): DataFrame =
+      features: Seq[(DataFrame, String, Seq[String], Option[Long])]): DataFrame =
     features.zipWithIndex.foldLeft(spine) {
       case (acc, ((ft, timeCol, cols, tol), i)) =>
-        if (native)
-          asofJoinNative(acc, ft, by, spineTime, timeCol, cols,
-            toleranceUs = tol, matchedTime = s"asof_ts_$i")
-        else
-          asofJoin(acc, ft, by, spineTime, timeCol, cols,
-            toleranceUs = tol, matchedTime = s"asof_ts_$i")
+        asofJoin(acc, ft, by, spineTime, timeCol, cols,
+          toleranceUs = tol, matchedTime = s"asof_ts_$i")
     }
 
   /** Interval (range) join: left rows whose `leftTime` falls in the right

@@ -9,18 +9,15 @@ import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute,
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter,
   LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
-  Distribution, Partitioning}
+  Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** Whole-operator Catalyst tier: a native as-of join.
+/** Whole-operator Catalyst tier: the engine's one as-of join.
   *
-  * The engine's composed [[graft.ops.TemporalJoins.asofJoin]] expresses
-  * the operator as union + window carry — one exchange over
-  * '''left ∪ right''' and a WindowExec whose sort buffers both sides
-  * together. This file is the operator the planner would pick at scale:
-  * a first-class logical node ([[AsofJoin]]), a planner strategy
-  * ([[GraftStrategy]]), and a sort-merge physical operator
+  * [[graft.ops.TemporalJoins.asofJoin]] and `asofJoinNative` both build
+  * this operator: a first-class logical node ([[AsofJoin]]), a planner
+  * strategy ([[GraftStrategy]]), and a sort-merge physical operator
   * ([[AsofJoinExec]]) that declares `ClusteredDistribution` on each
   * side's keys and `(keys, time)` child orderings, letting
   * EnsureRequirements insert the two per-side exchanges/sorts (and AQE
@@ -30,13 +27,15 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   * no window state, no union, no payload struct — and the left side's
   * partitioning/ordering survive to downstream operators
   * (`outputPartitioning = left`), so a following per-key aggregation
-  * reuses the exchange.
+  * reuses the exchange. A skewed left shuffle partition is split at
+  * query-stage time by [[SplitSkewedTemporalJoin]].
   *
-  * Semantics are bit-compatible with the composed operator (the spec
-  * pins equality on all direction × tolerance × exact-match forms):
+  * Semantics (spec-pinned against a driver-side as-of composed from
+  * this definition on all direction × tolerance × exact-match forms):
   * per left row the latest right row at-or-before (`backward`),
   * earliest at-or-after (`forward`), or closest (`nearest`, ties →
-  * backward) within equal keys, optionally within `toleranceUs`;
+  * backward) within equal keys (null keys group together, as in a
+  * window partition), optionally within `toleranceUs`;
   * `allowExactMatches = false` makes both comparisons strict. Left rows
   * with a null time stay unmatched; right rows with a null time are
   * ignored. Reference surface: polars `DataFrame.join_asof`
@@ -74,8 +73,9 @@ case class AsofJoin(
 }
 
 /** Plans [[AsofJoin]] to [[AsofJoinExec]]. Injected via
-  * [[GraftExtensions]] (`spark.sql.extensions`) or the live-session
-  * path [[GraftPlanning.ensure]]. */
+  * [[GraftExtensions]] (loaded for every session through its
+  * ServiceLoader entry) or the live-session path
+  * [[GraftPlanning.ensure]]. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoin(l, r, lk, rk, lt, rt, carry, cAttrs, dir, tol, exact) =>
@@ -201,13 +201,17 @@ object PruneAsofJoinColumns extends Rule[LogicalPlan] {
   }
 }
 
-/** Live-session registration for the planner tier (the analogue of
-  * [[GraftFunctions.register]] for sessions built without
-  * `spark.sql.extensions=graft.plans.GraftExtensions`). Idempotent. */
+/** Live-session registration for the planner tier, called by every
+  * builder of an [[AsofJoin]] / [[IntervalJoin]] node. It is the one
+  * registration path of the two optimizer rules: as user-provided
+  * optimizations they run after Spark's own operator optimizations.
+  * The strategy is added only when [[GraftExtensions]] has not injected
+  * it. Idempotent. */
 object GraftPlanning {
   def ensure(spark: SparkSession): Unit = synchronized {
     val e = GraftPlanBridge.experimental(spark)
-    if (!e.extraStrategies.contains(GraftStrategy))
+    // a session that loaded GraftExtensions already plans the node
+    if (!GraftPlanBridge.plannerStrategies(spark).contains(GraftStrategy))
       e.extraStrategies = e.extraStrategies :+ GraftStrategy
     if (!e.extraOptimizations.contains(PushFilterThroughAsofJoin))
       e.extraOptimizations = e.extraOptimizations :+ PushFilterThroughAsofJoin
@@ -239,14 +243,19 @@ case class AsofJoinExec(
     toleranceUs: Option[Long],
     allowExactMatches: Boolean,
     left: SparkPlan,
-    right: SparkPlan)
+    right: SparkPlan,
+    isSkewJoin: Boolean = false)
   extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ carryAttrs
   override def producedAttributes: AttributeSet = AttributeSet(carryAttrs)
 
+  // a skew-split child pairs left splits with replicated right
+  // partitions (SplitSkewedTemporalJoin): co-partitioned, but no longer
+  // hash-clustered
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
+    if (isSkewJoin) UnspecifiedDistribution :: UnspecifiedDistribution :: Nil
+    else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTimeUs, Ascending),

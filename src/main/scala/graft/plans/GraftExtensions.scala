@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{GraftRegistryBridge, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftRegistryBridge, SparkSession, SparkSessionExtensions,
+  SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -11,10 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * [[MinhashSigExpr]]) is what keeps the hot key/similarity/sampling
   * paths inside whole-stage codegen; this registers the same expressions
   * as SQL functions so a `spark.sql(...)` user gets them too — the
-  * idiomatic Spark extension route (`spark.sql.extensions=
-  * graft.plans.GraftExtensions` at session build, or
-  * [[GraftFunctions.register]] on a live session; both share one
-  * description list, so the two paths cannot drift).
+  * idiomatic Spark extension route. Every session built with graft on
+  * the classpath loads this class through the
+  * `SparkSessionExtensionsProvider` ServiceLoader entry in
+  * `META-INF/services` (`spark.sql.extensions=graft.plans.GraftExtensions`
+  * does the same explicitly); [[GraftFunctions.register]] covers a live
+  * session built before. Both paths share one description list, so they
+  * cannot drift.
   *
   * Registered functions:
   *   - `graft_fnv64(text)` → bigint — deterministic FNV-1a 64 fingerprint
@@ -51,18 +55,20 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   - `graft_group_dynamic(table, id_col, time_col, value_col, every,
   *     period[, offset[, agg]])` — sliding dynamic group-by.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.descriptions.foreach(ext.injectFunction)
     // the whole-operator SQL front door: FROM-clause TVFs building the
     // same analyzed plans as the Scala API (graft_asof, graft_range_join)
     GraftFunctions.tableDescriptions.foreach(ext.injectTableFunction)
-    // whole-operator tier: the AsofJoin logical node's planner strategy
-    // and its left-filter pushdown rule (live-session path:
+    // whole-operator tier: the AsofJoin/IntervalJoin planner strategy
+    // (their optimizer rules are registered by the node builders,
     // GraftPlanning.ensure)
     ext.injectPlannerStrategy(_ => GraftStrategy)
-    ext.injectOptimizerRule(_ => PushFilterThroughAsofJoin)
-    ext.injectOptimizerRule(_ => PruneAsofJoinColumns)
+    // as-of / interval skew handling at query-stage time, from the
+    // materialized shuffle statistics (no live-session path: the AQE
+    // rule list is fixed when the session is built)
+    ext.injectQueryStagePrepRule(_ => SplitSkewedTemporalJoin)
   }
 }
 

@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
   UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
-  Distribution, Partitioning}
+  Distribution, Partitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 /** Whole-operator tier, second node: a native interval (range) join.
@@ -33,10 +33,12 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * matches — unlike [[AsofJoin]]'s window-style null grouping, because
   * the composed twin here is a real join, not a window).
   *
-  * [[PushFilterThroughAsofJoin]] and [[PruneAsofJoinColumns]] cover
-  * this node too: every output row carries its left row's columns
-  * unchanged, so deterministic left-only predicates commute, and a
-  * parent Project prunes both children below their exchanges.
+  * [[PushFilterThroughAsofJoin]], [[PruneAsofJoinColumns]] and
+  * [[SplitSkewedTemporalJoin]] cover this node too: every output row
+  * carries its left row's columns unchanged, so deterministic left-only
+  * predicates commute, a parent Project prunes both children below
+  * their exchanges, and a skewed left partition can be split against
+  * its replicated right partition.
   */
 case class IntervalJoin(
     left: LogicalPlan,
@@ -74,14 +76,18 @@ case class IntervalJoinExec(
     payloadAttrs: Seq[Attribute],
     inclusiveEnd: Boolean,
     left: SparkPlan,
-    right: SparkPlan)
+    right: SparkPlan,
+    isSkewJoin: Boolean = false)
   extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ payloadAttrs
   override def producedAttributes: AttributeSet = AttributeSet(payloadAttrs)
 
+  // skew-split children (SplitSkewedTemporalJoin) are co-partitioned but
+  // no longer hash-clustered
   override def requiredChildDistribution: Seq[Distribution] =
-    ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
+    if (isSkewJoin) UnspecifiedDistribution :: UnspecifiedDistribution :: Nil
+    else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTimeUs, Ascending),

@@ -198,14 +198,20 @@ object DeepScale {
       case (name, f) => runLeg(name, f(panel1), f(panelN))
     }
 
-    // ── zipfian-skew leg (VERDICT r10 ask #7): 50% of all rows on ONE
-    // key, the rest across the normal key range — the asof exchange's
-    // hot-partition envelope MEASURED, not assumed. AQE's
-    // OptimizeSkewedJoin targets SortMergeJoinExec, not custom exec
-    // nodes, so the hot key is one task by construction; this leg
-    // records what that costs at `factor`× next to the uniform
+    // ── zipfian-skew legs (VERDICT r10 ask #7): 50% of all rows on ONE
+    // key, the rest across the normal key range — the as-of exchange's
+    // hot-partition envelope MEASURED, not assumed, next to the uniform
     // asof_native leg (same total rows, same operator, only the key
-    // distribution differs).
+    // distribution differs). Three paths:
+    //  - asof_native_skew: the default path; SplitSkewedTemporalJoin
+    //    splits the hot left partition at query-stage time when it
+    //    clears Spark's spark.sql.adaptive.skewJoin.* thresholds (pass
+    //    lower ones as -D system properties to make a small factor
+    //    qualify);
+    //  - asof_skew_unsalted: the same call with
+    //    spark.sql.adaptive.skewJoin.enabled=false, the raw single-task
+    //    envelope;
+    //  - asof_salted: the explicit asofJoinSalted time-slice path.
     def zipfPanel(nSeries: Int, len: Int): DataFrame =
       spark.range(nSeries.toLong * len).select(
         when(pmod(xxhash64(col("id"), lit(7L)), lit(2)) === 0, lit(0L))
@@ -214,7 +220,7 @@ object DeepScale {
           lit(1704067200000000L)).cast("timestamp_ntz").as("ts"),
         (sin(col("id") % len / lit(6.0)) * 10.0 +
           pmod(xxhash64(col("id")), lit(1000)) / lit(1000.0)).as("value"))
-    val skewLegs = Seq("asof_native_skew", "asof_skew_unsalted")
+    val skewLegs = Seq("asof_native_skew", "asof_skew_unsalted", "asof_salted")
     if (skewLegs.exists(want)) {
       zipfPanel(1000, 1000).write.mode("overwrite").parquet(s"$dir/zipf1")
       zipfPanel(1000 * factor, 1000).write.mode("overwrite")
@@ -222,33 +228,23 @@ object DeepScale {
     }
     lazy val zipf1 = spark.read.parquet(s"$dir/zipf1")
     lazy val zipfN = spark.read.parquet(s"$dir/zipfN")
-    // asof_native_skew is the DEFAULT path (r13: asofJoinNative detects
-    // hot keys itself above the graft.asof.autoSalt.minBytes floor and
-    // routes through the time-slice split — no caller opt-in, the r12
-    // verdict ask #4); the floor is forced to 0 here so BOTH legs run
-    // detection and the ratio isolates scaling, not the floor crossing.
-    // asof_skew_unsalted opts OUT via session conf to keep the raw
-    // single-task envelope measured, so the delta stays visible round
-    // over round.
-    def skewLeg(name: String, salted: Boolean): Leg = {
+    def skewLeg(name: String): Leg = {
       def run(p: DataFrame): DataFrame = { val (l, r) = asofSides(p)
-        if (salted) {
-          spark.conf.set("graft.asof.autoSalt.minBytes", "0")
-          try TemporalJoins.asofJoinNative(l, r, Seq("user_id"), "ts", "ts",
+        if (name == "asof_salted")
+          TemporalJoins.asofJoinSalted(l, r, Seq("user_id"), "ts", "ts",
             Seq("rv"))
-          finally spark.conf.unset("graft.asof.autoSalt.minBytes")
-        } else {
-          spark.conf.set("graft.asof.autoSalt", "false")
-          try TemporalJoins.asofJoinNative(l, r, Seq("user_id"), "ts", "ts",
-            Seq("rv"))
-          finally spark.conf.set("graft.asof.autoSalt", "true")
-        } }
-      runLeg(name, run(zipf1), run(zipfN))
+        else
+          TemporalJoins.asofJoinNative(l, r, Seq("user_id"), "ts", "ts",
+            Seq("rv")) }
+      // the skew rule reads the conf while the query runs, so it stays
+      // set for the whole leg
+      val key = "spark.sql.adaptive.skewJoin.enabled"
+      val prev = spark.conf.getOption(key)
+      if (name == "asof_skew_unsalted") spark.conf.set(key, "false")
+      try runLeg(name, run(zipf1), run(zipfN))
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
     }
-    val skewResults = Seq(
-      "asof_native_skew" -> true, "asof_skew_unsalted" -> false)
-      .filter(s => want(s._1))
-      .map { case (n, salted) => skewLeg(n, salted) }
+    val skewResults = skewLegs.filter(want).map(skewLeg)
 
     val qs = (results ++ temporalResults ++ skewResults).map { leg =>
       s""""${leg.name}":{"t1":${f"${leg.t1}%.3f"},"t$factor":${f"${leg.tN}%.3f"},"ratio":${f"${leg.ratio}%.2f"},"rows_out1":${leg.rows1},"rows_outN":${leg.rowsN},"ratio_rownorm":${f"${leg.rowNorm}%.2f"}}"""

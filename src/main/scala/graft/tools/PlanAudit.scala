@@ -171,7 +171,7 @@ object PlanAudit {
         "video", stride = 1)
     })
     // round-9 temporal & layout tier
-    audit("asof join (expect ONE hash exchange + window carry, ZERO join operators)", {
+    audit("asof join (expect per-side hash exchanges + AsofJoin merge, ZERO join operators)", {
       val l = ev.filter(col("event_type") === "purchase")
         .select("user_id", "event_id", "ts")
       val r = ev.filter(col("event_type") === "click")

@@ -1,0 +1,100 @@
+package graft.core
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.TestSpark
+import graft.ops.TemporalJoins
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Building a DataFrame starts no Spark job the caller did not ask for:
+  * the as-of joins (whose skew handling now waits for shuffle
+  * statistics at run time) and a re-read of an unchanged table through
+  * [[IO.table]] (whose schema and row-group count are memoized). Also
+  * pins the memo's invalidation and the row-group-aware scan width. */
+class JobFreeBuildSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftListenerBridge.waitUntilEmpty(sc)
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = f
+      GraftListenerBridge.waitUntilEmpty(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private def tmpDir(): String =
+    Files.createTempDirectory("graft_io_spec").toString
+
+  test("building asofJoin and asofJoinNative above the old 16 MB estimate starts no job") {
+    val ev = spark.range(0L, 4000000L).select(
+      (col("id") % 1000).as("k"),
+      timestamp_micros(col("id") * 1000000L).cast("timestamp_ntz").as("t"),
+      (col("id") * 0.5).as("v"))
+    val l = ev.filter(col("id") % 2 === 0).select("k", "t")
+    val r = ev.filter(col("id") % 2 === 1).select(col("k"), col("t"),
+      col("v").as("rv"))
+    val est = org.apache.spark.sql.GraftPlanBridge.analyzed(l).stats.sizeInBytes +
+      org.apache.spark.sql.GraftPlanBridge.analyzed(r).stats.sizeInBytes
+    assert(est >= BigInt(16L * 1024 * 1024), s"estimate $est below 16 MB")
+    val (_, jobs) = jobsDuring {
+      TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t", Seq("rv"))
+      TemporalJoins.asofJoinNative(l, r, Seq("k"), "t", "t", Seq("rv"),
+        direction = "nearest")
+    }
+    assert(jobs === 0)
+  }
+
+  test("a second IO.table call on an unchanged file starts no job") {
+    val dir = tmpDir()
+    spark.range(0L, 500L).select(col("id").as("a"), (col("id") * 2.0).as("b"))
+      .coalesce(1).write.parquet(s"$dir/memo.parquet")
+    val first = IO.table(spark, dir, "memo")
+    val (second, jobs) = jobsDuring(IO.table(spark, dir, "memo"))
+    assert(jobs === 0)
+    assert(second.schema === first.schema)
+    assert(second.count() === 500L)
+  }
+
+  test("IO.table returns the new schema after a table is overwritten") {
+    val dir = tmpDir()
+    spark.range(0L, 10L).select(col("id").as("a"))
+      .write.parquet(s"$dir/inv.parquet")
+    assert(IO.table(spark, dir, "inv").columns.toSeq === Seq("a"))
+    spark.range(0L, 10L).select(col("id").cast("string").as("b"),
+        (col("id") * 1.5).as("c"))
+      .write.mode("overwrite").parquet(s"$dir/inv.parquet")
+    val again = IO.table(spark, dir, "inv")
+    assert(again.columns.toSeq === Seq("b", "c"))
+    assert(again.schema("b").dataType.typeName === "string")
+    assert(again.count() === 10L)
+  }
+
+  test("scan normalization fires on a small file with many row groups") {
+    val dir = tmpDir()
+    // one ~0.5 MB file (one scan split) cut into many 16 KB row groups;
+    // random doubles keep it incompressible, above the 128 KB floor
+    spark.range(0L, 40000L).select(col("id").as("event_id"),
+        rand(7).as("v1"), rand(11).as("v2"))
+      .coalesce(1).write.option("parquet.block.size", 16384)
+      .parquet(s"$dir/events.parquet")
+    val raw = spark.read.parquet(s"$dir/events.parquet")
+    assert(raw.rdd.getNumPartitions === 1)
+    assert(IO.effectiveScanUnits(raw) === 1,
+      "many row groups in one split still scan as one task")
+    assert(spark.sparkContext.defaultParallelism >= 4)
+    assert(IO.table(spark, dir, "events").rdd.getNumPartitions === 32,
+      "the one-task scan must be normalized to 32 partitions")
+  }
+}

@@ -6,14 +6,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-/** Contract of the skew-resistant tier: [[TemporalJoins.asofJoinSalted]]
-  * returns exactly [[TemporalJoins.asofJoinNative]]'s rows on every
+/** Contract of the skew tier. The explicit
+  * [[TemporalJoins.asofJoinSalted]] returns exactly
+  * [[TemporalJoins.asofJoinNative]]'s rows on every
   * direction × tolerance × exact-match combination, on a fixture with a
   * genuinely hot key (zipfian 50%-on-one-key, the r11 scale-probe
   * distribution), on one where nothing crosses the hot threshold (pure
   * fall-through), and on boundary shapes the slice replication must
   * survive (sparse right side where the carry spans many empty slices,
-  * hot NULL key, all-rows-one-timestamp degenerate width). */
+  * hot NULL key, all-rows-one-timestamp degenerate width). The default
+  * path's query-stage split returns the unsplit plan's rows on every
+  * combination too. */
 class AsofJoinSaltedSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -143,54 +146,72 @@ class AsofJoinSaltedSpec extends AnyFunSuite {
     assert(strict.collect().forall(_.getAs[Double]("rv") === 4.0))
   }
 
-  // ── r13: skew handling is the DEFAULT path, not an opt-in ───────────
+  // ── the default path: query-stage skew split, no opt-in ─────────────
+  // asofJoin/asofJoinNative build a plain merge; when the materialized
+  // left shuffle has a partition above Spark's skewJoin thresholds,
+  // SplitSkewedTemporalJoin splits it and replicates the matching right
+  // partition. The thresholds are lowered so the KB-scale zipfian
+  // fixture qualifies; "unsplit" is the same call with
+  // spark.sql.adaptive.skewJoin.enabled=false.
+  import graft.SkewSplitTesting._
+
+  private def splitVsUnsplit(build: => DataFrame)
+      : ((Seq[String], Int), (Seq[String], Int)) =
+    withConfs(spark, LowThresholds) {
+      (runSplit(build), withConfs(spark, SkewOff)(runSplit(build)))
+    }
+
   test("auto-routing: asofJoinNative detects and slices with no opt-in") {
-    spark.conf.set("graft.asof.autoSalt.minBytes", "0")
-    try {
-      val auto = TemporalJoins.asofJoinNative(lZipf, rZipf, Seq("k"), "t",
-        "t", Seq("rv"))
-      // routed: the detect-and-slice two-branch union (hot + cold)
-      assert(auto.queryExecution.optimizedPlan.collect {
-        case p if p.nodeName == "AsofJoin" => p
-      }.size === 2)
-      spark.conf.set("graft.asof.autoSalt", "false")
-      val plain = try TemporalJoins.asofJoinNative(lZipf, rZipf, Seq("k"),
-        "t", "t", Seq("rv"))
-      finally spark.conf.set("graft.asof.autoSalt", "true")
-      assert(plain.queryExecution.optimizedPlan.collect {
-        case p if p.nodeName == "AsofJoin" => p
-      }.size === 1)
-      assert(canon(auto) === canon(plain))
-    } finally spark.conf.unset("graft.asof.autoSalt.minBytes")
+    val ((split, nSplit), (plain, nPlain)) = splitVsUnsplit(
+      TemporalJoins.asofJoinNative(lZipf, rZipf, Seq("k"), "t", "t",
+        Seq("rv")))
+    assert(nSplit === 1, "the hot left partition must be split")
+    assert(nPlain === 0)
+    assert(split === plain)
+    assert(split.size === 800)
   }
 
-  test("auto-routing: the composed asofJoin routes above the floor too") {
-    spark.conf.set("graft.asof.autoSalt.minBytes", "0")
-    try {
-      val auto = TemporalJoins.asofJoin(lZipf, rZipf, Seq("k"), "t", "t",
-        Seq("rv"))
-      assert(auto.queryExecution.optimizedPlan.collect {
-        case p if p.nodeName == "AsofJoin" => p
-      }.size === 2, "composed form must route through the sliced merge")
-      spark.conf.set("graft.asof.autoSalt", "false")
-      val plain = try TemporalJoins.asofJoin(lZipf, rZipf, Seq("k"), "t",
-        "t", Seq("rv"))
-      finally spark.conf.set("graft.asof.autoSalt", "true")
-      assert(plain.queryExecution.optimizedPlan.collect {
-        case p if p.nodeName == "AsofJoin" => p
-      }.isEmpty, "opt-out composed form keeps the window carry")
-      assert(canon(auto) === canon(plain))
-    } finally spark.conf.unset("graft.asof.autoSalt.minBytes")
+  test("asofJoin gets the same query-stage split as asofJoinNative") {
+    val ((split, nSplit), (plain, nPlain)) = splitVsUnsplit(
+      TemporalJoins.asofJoin(lZipf, rZipf, Seq("k"), "t", "t", Seq("rv")))
+    assert(nSplit === 1, "asofJoin delegates to the native operator")
+    assert(nPlain === 0)
+    assert(split === plain)
   }
 
   test("below the detection floor the plain single-node plan is kept") {
-    // default floor (16 MB) vs a KB-scale fixture: no routing, no stats
-    // pass — the plan is the unchanged single AsofJoin merge
+    // Spark's default thresholds (256 MB) vs a KB-scale fixture: one
+    // AsofJoin node, no split at run time
     val df = TemporalJoins.asofJoinNative(lZipf, rZipf, Seq("k"), "t", "t",
       Seq("rv"))
     assert(df.queryExecution.optimizedPlan.collect {
       case p if p.nodeName == "AsofJoin" => p
     }.size === 1)
+    assert(runSplit(df)._2 === 0)
+  }
+
+  test("the split decision logs one graft.events line with its inputs") {
+    val (_, lines) = captureEvents(withConfs(spark, LowThresholds)(
+      runSplit(TemporalJoins.asofJoinNative(lZipf, rZipf, Seq("k"), "t",
+        "t", Seq("rv")))))
+    val skew = lines.filter(_.contains("\"event\":\"skew_split\""))
+    assert(skew.size === 1, lines.mkString("\n"))
+    Seq("\"op\":\"AsofJoinExec\"", "\"median_bytes\":", "\"max_bytes\":",
+      "\"threshold_bytes\":", "\"splits\":", "\"kept\":true")
+      .foreach(f => assert(skew.head.contains(f), skew.head))
+  }
+
+  for {
+    dir <- Seq("backward", "forward", "nearest")
+    exact <- Seq(true, false)
+    tol <- Seq(None, Some(3600L * 1000000L))
+  } test(s"split == unsplit on zipfian keys: $dir exact=$exact tol=${tol.isDefined}") {
+    val ((split, nSplit), (plain, _)) = splitVsUnsplit(
+      TemporalJoins.asofJoinNative(lZipf, rZipf, Seq("k"), "t", "t",
+        Seq("rv"), direction = dir, toleranceUs = tol,
+        allowExactMatches = exact))
+    assert(nSplit === 1)
+    assert(split === plain)
   }
 
   test("hot key splits into multiple merge partitions (the point)") {

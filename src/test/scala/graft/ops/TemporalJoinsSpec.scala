@@ -154,13 +154,16 @@ class TemporalJoinsSpec extends AnyFunSuite {
     assert(row.getAs[Double]("v") == 5.0 && row.getAs[Double]("v_right") == 9.0)
   }
 
-  test("asofJoin plan: one exchange, zero join operators") {
+  test("asofJoin plan: one AsofJoin merge, no generic join operator") {
     val out = TemporalJoins.asofJoin(leftDf, rightDf, Seq("k"), "t", "t", Seq("rv"))
     out.write.format("noop").mode("overwrite").save()
     val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), s"asofJoin plan must not contain a join:\n$plan")
+      .split("== Initial Plan ==").head
+    assert("AsofJoin".r.findAllIn(plan).length == 1, plan)
+    Seq("SortMergeJoin", "HashJoin", "NestedLoopJoin", "CartesianProduct", "Window")
+      .foreach(op => assert(!plan.contains(op), s"asofJoin plan has $op:\n$plan"))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"expected 1 hash exchange, got $exchanges:\n$plan")
+    assert(exchanges == 2, s"expected one hash exchange per side, got $exchanges:\n$plan")
   }
 
   test("pointInTimeJoin: multi-table snapshot, leakage-free") {

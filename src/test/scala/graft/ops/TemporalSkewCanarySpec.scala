@@ -6,17 +6,17 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew canary for the temporal-join tier: one key carrying 50% of both
-  * sides is the worst shape for a by-key window operator — every row of
-  * the hot key lands in one window partition and is sorted by one task.
+  * sides is the worst shape for a by-key merge — every row of the hot
+  * key lands in one shuffle partition and is sorted by one task.
   *
-  * Operating envelope pinned here: correctness is unaffected (the carry
+  * Operating envelope pinned here: correctness is unaffected (the match
   * is per-key, so co-resident cold keys in the same hash partition don't
-  * interleave), and the cost model is explicit — a per-key ORDERED scan
-  * is inherently sequential per key in ANY engine (kdb's aj, polars'
-  * join_asof single-thread the key too); the distributed win is across
-  * keys. For a key so hot one task's sort spills, the documented valve
-  * is time-bucketing the hot key upstream (bucket boundary rows carried
-  * twice) — the same pre-bucket note as `asofJoin`'s scaladoc. */
+  * interleave), including when the query-stage rule splits the hot left
+  * partition against its replicated right partition (lowered Spark
+  * skewJoin thresholds make the KB-scale fixture qualify). A per-key
+  * ORDERED scan is sequential per key in ANY engine (kdb's aj, polars'
+  * join_asof single-thread the key too); for a key hot on both sides
+  * the explicit valve is `asofJoinSalted`'s time slicing. */
 class TemporalSkewCanarySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -42,6 +42,27 @@ class TemporalSkewCanarySpec extends AnyFunSuite {
       col("rv") =!= col("v")).count()
     assert(bad == 0, s"$bad mismatched carries under skew")
     assert(out.count() == nRows)
+  }
+
+  test("rangeJoinNative: query-stage split of the hot key == unsplit plan") {
+    import graft.SkewSplitTesting._
+    val l = side(offsetUs = 1)
+    // each right row opens a 3 µs interval: a hot-key probe at 2i+1
+    // falls in exactly the interval [2i, 2i+3). The right side gets a
+    // map layout unlike the left's, so a split that read only part of
+    // the right partition would miss matches.
+    val r = side(offsetUs = 0).repartition(3).select(col("k"),
+      col("tu").as("s"), (col("tu") + 3).as("e"), col("v").as("rv"))
+    def build = TemporalJoins.rangeJoinNative(l, r, Seq("k"), "tu", "s", "e")
+    val ((split, nSplit), (plain, nPlain)) = withConfs(spark, LowThresholds) {
+      (runSplit(build), withConfs(spark, SkewOff)(runSplit(build)))
+    }
+    assert(nSplit === 1, "the hot left partition must be split")
+    assert(nPlain === 0)
+    assert(split === plain)
+    assert(split.size.toLong ===
+      TemporalJoins.rangeJoin(l, r, Seq("k"), "tu", "s", "e", bucketUs = 4)
+        .count())
   }
 
   test("sessionize: hot key session ids stay per-key consistent") {

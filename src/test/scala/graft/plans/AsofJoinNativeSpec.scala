@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-/** The whole-operator tier's contract: [[AsofJoinExec]] is
-  * bit-equivalent to the composed window-carry asofJoin on every
-  * direction × tolerance × exact-match combination (randomized data,
-  * unambiguous by construction), the physical plan is the merge shape
+/** The whole-operator tier's contract: [[AsofJoinExec]] equals the
+  * as-of join composed on the driver from its definition (`composed`
+  * below) on every direction × tolerance × exact-match combination
+  * (randomized data, unambiguous by construction), the physical plan is
+  * the merge shape
   * (AsofJoinExec present, no WindowExec, per-side sorts), the strict
   * mode's two-slot history survives an equal-timestamp probe, and
   * [[PushFilterThroughAsofJoin]] moves left-only filters below the
@@ -52,21 +53,64 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     (l.cache(), r.cache())
   }
 
-  private def canon(df: DataFrame): Seq[String] =
-    df.collect().map(_.toString).sorted.toSeq
+  private def micros(t: Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+
+  /** The as-of join composed on the driver from its definition — the
+    * reference the native merge is checked against. Per left row: the
+    * right rows of the same key (null = null, as a window partition
+    * groups them) with a non-null time; backward takes the latest
+    * at-or-before (strictly before when `exact` is false), forward the
+    * earliest at-or-after, nearest the closer of the two (a distance tie
+    * goes backward); a pick farther than `tolUs` is dropped; a null left
+    * time never matches. Returns left id → (matched time, carried
+    * value). Unlike TemporalJoinsPropertySpec's reference it takes the
+    * nullable keys and times of this fixture. */
+  private def composed(l: DataFrame, r: DataFrame, dir: String = "backward",
+      exact: Boolean = true, tolUs: Option[Long] = None, id: String = "lid",
+      value: String = "rv"): Map[Long, (Option[Timestamp], Option[Any])] = {
+    val rs = r.select("k", "t", value).collect().filter(!_.isNullAt(1))
+      .map(x => (Option(x.get(0)), micros(x.getAs[Timestamp](1)),
+        x.getAs[Timestamp](1), Option(x.get(2))))
+    l.select("k", "t", id).collect().map { x =>
+      val pick = if (x.isNullAt(1)) None else {
+        val lt = micros(x.getAs[Timestamp](1))
+        val same = rs.filter(_._1 == Option(x.get(0)))
+        val back = same.filter(c => if (exact) c._2 <= lt else c._2 < lt)
+          .maxByOption(_._2)
+        val fwd = same.filter(c => if (exact) c._2 >= lt else c._2 > lt)
+          .minByOption(_._2)
+        (dir match {
+          case "backward" => back
+          case "forward" => fwd
+          case _ => (back, fwd) match {
+            case (Some(b), Some(f)) =>
+              if (lt - b._2 <= f._2 - lt) Some(b) else Some(f)
+            case (b, f) => b.orElse(f)
+          }
+        }).filter(c => tolUs.forall(t => math.abs(lt - c._2) <= t))
+      }
+      x.getLong(2) -> (pick.map(_._3), pick.flatMap(_._4))
+    }.toMap
+  }
+
+  /** A native result in [[composed]]'s shape. */
+  private def matched(df: DataFrame, id: String = "lid", time: String = "asof_ts",
+      value: String = "rv"): Map[Long, (Option[Timestamp], Option[Any])] =
+    df.select(id, time, value).collect().map(x => x.getLong(0) ->
+      (Option(x.getAs[Timestamp](1)), Option(x.get(2)))).toMap
 
   for {
     dir <- Seq("backward", "forward", "nearest")
     exact <- Seq(true, false)
     tol <- Seq(None, Some(3600L * 1000000L))
   } test(s"native == composed: $dir exact=$exact tol=${tol.isDefined}") {
-    val composed = TemporalJoins.asofJoin(lRand, rRand, Seq("k"), "t", "t",
-      Seq("rv"), direction = dir, toleranceUs = tol,
-      allowExactMatches = exact)
     val native = TemporalJoins.asofJoinNative(lRand, rRand, Seq("k"), "t",
       "t", Seq("rv"), direction = dir, toleranceUs = tol,
       allowExactMatches = exact)
-    assert(canon(native) === canon(composed))
+    val want = composed(lRand, rRand, dir, exact, tol)
+    assert(want.size === 300)
+    assert(matched(native) === want)
   }
 
   test("plan shape: AsofJoinExec merge, no WindowExec, per-side sorts") {
@@ -167,9 +211,8 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     assert(aj.left.output.exists(_.name == "__ltu"))
     assert(aj.right.output.exists(_.name == "__rtu"))
     // and the values are unchanged by the rewrite
-    val expected = TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t",
-      Seq("rv", "wide_r")).select("k", "lid", "rv")
-    assert(canon(narrow) === canon(expected))
+    assert(narrow.collect().map(x => x.getLong(1) -> Option(x.get(2))).toMap ===
+      composed(l, r).map { case (id, (_, v)) => id -> v })
   }
 
   test("pruning fires through the residual Filter the pushdown leaves") {
@@ -191,9 +234,11 @@ class AsofJoinNativeSpec extends AnyFunSuite {
       s"unused left column not pruned through the residual Filter:\n$opt")
     assert(!aj.carryAttrs.exists(_.name == "wide_r"),
       "unused carry not pruned through the residual Filter")
-    val expected = TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t",
-      Seq("rv", "wide_r")).filter(col("rv") > 0.5).select("k", "lid", "rv")
-    assert(canon(narrow) === canon(expected))
+    val expected = composed(l, r).collect {
+      case (id, (_, Some(v: Double))) if v > 0.5 => id -> Option[Any](v)
+    }
+    assert(narrow.collect().map(x => x.getLong(1) -> Option(x.get(2))).toMap ===
+      expected)
   }
 
   test("matchedTime / duplicate rightCols collisions fail loudly") {
@@ -227,7 +272,7 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     val r = (1 to 10).map(i => (1L,
       new Timestamp(1704067200000L + i * 1000L), i * 2.0))
       .toDF("k", "t", "val")
-    // composed form: right `val` must be renamed val_right (resolution is
+    // asofJoin: right `val` must be renamed val_right (resolution is
     // case-insensitive by default, so left Val vs right val IS ambiguous)
     val out = TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t", Seq("val"))
     assert(out.columns.contains("val_right"), out.columns.mkString(","))
@@ -243,8 +288,7 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     val f2 = (1 to 60).map(i => ((i % 6).toLong,
       new Timestamp(1704067200000L + i * 900L), i * 2.0)).toDF("k", "t", "f2")
     val feats = Seq((f1, "t", Seq("f1"), None), (f2, "t", Seq("f2"), None))
-    val native = TemporalJoins.pointInTimeJoin(spine, Seq("k"), "t", feats,
-      native = true)
+    val native = TemporalJoins.pointInTimeJoin(spine, Seq("k"), "t", feats)
     native.collect()
     // AQE's string repeats the tree under "== Initial Plan ==" — count
     // only the final plan section
@@ -253,8 +297,12 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     val exchanges = "Exchange hashpartitioning".r.findAllIn(s).size
     assert(exchanges === 3, // spine once + one per feature table, never 4+
       s"expected 3 exchanges (spine + 2 features), got $exchanges:\n$s")
-    val composed = TemporalJoins.pointInTimeJoin(spine, Seq("k"), "t", feats)
-    assert(canon(native) === canon(composed))
+    // each step equals the driver-side as-of of the spine on that table
+    val steps = Seq((f1, "f1", "asof_ts_0"), (f2, "f2", "asof_ts_1"))
+    steps.foreach { case (f, v, ts) =>
+      assert(matched(native, "sid", ts, v) ===
+        composed(spine, f, id = "sid", value = v))
+    }
   }
 
   test("mixed-width keys coerce to the common type (int left, long right)") {
@@ -275,10 +323,8 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     val l = Seq((-0.0, ts("2024-01-01 10:00:00"), "a")).toDF("k", "t", "lv")
     val r = Seq((0.0, ts("2024-01-01 09:00:00"), 1.0)).toDF("k", "t", "rv")
     val native = TemporalJoins.asofJoinNative(l, r, Seq("k"), "t", "t", Seq("rv"))
-    val composed = TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t", Seq("rv"))
-    assert(canon(native) === canon(composed))
     assert(native.collect()(0).getAs[java.lang.Double]("rv") === 1.0,
-      "-0.0 and 0.0 keys must land in one group on both plan shapes")
+      "-0.0 and 0.0 keys must land in one group")
   }
 
   test("case-insensitive name resolution under the default session conf") {
@@ -296,10 +342,10 @@ class AsofJoinNativeSpec extends AnyFunSuite {
     val r = Seq((1L, ts("2024-01-01 09:00:00"), 1.0)).toDF("k", "t", "rv")
     val native = TemporalJoins.asofJoinNative(l, r, Seq("k"), "t", "t",
       Seq("k", "rv"))
-    val composed = TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t",
-      Seq("k", "rv"))
     assert(native.columns.contains("k_right"))
-    assert(canon(native) === canon(composed))
+    val row = native.collect().toSeq
+    assert(row.map(x => (x.getAs[Long]("k"), x.getAs[Long]("k_right"),
+      x.getAs[Double]("rv"))) === Seq((1L, 1L, 1.0)))
   }
 
   test("merge output equals composed on the documented doc example") {

@@ -259,8 +259,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         "'uid', 't', 't', 'b', NULL, 1)")
       .select("uid", "t", "a", "b").collect().map(_.toSeq).toSet
     val viaApi = graft.ops.TemporalJoins.pointInTimeJoin(spine, Seq("uid"),
-        "t", Seq((f1, "t", Seq("a"), None), (f2, "t", Seq("b"), None)),
-        native = true)
+        "t", Seq((f1, "t", Seq("a"), None), (f2, "t", Seq("b"), None)))
       .select("uid", "t", "a", "b").collect().map(_.toSeq).toSet
     assert(viaSql === viaApi)
     assert(viaApi.map(s => (s(2), s(3))) ===
