@@ -1,6 +1,7 @@
 package graft
 
-import graft.core.{IO, PanelCols}
+import graft.BenchLegs.{Ctx, Input, Leg, PC, Tier, mat, synthPanel}
+import graft.core.IO
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -8,33 +9,31 @@ import org.apache.spark.sql.functions._
 /** Benchmark main — implements the BASELINE.md suite: the reference's
   * harness shapes (pairwise DTW, PELT, ETS panels — bench_kmedoids.py /
   * bench_pelt.py / bench_ets.py) plus sf-scale engine queries on the
-  * driver testdata. Prints ONE JSON line.
+  * driver testdata. Prints ONE JSON line. The legs are
+  * [[BenchLegs.timed]].
+  *
+  * {{{
+  *   sbt "runMain graft.Bench"                        # full suite
+  *   sbt "runMain graft.Bench q1_agg,minhash_lsh"     # only these legs
+  * }}}
+  *
+  * Given a comma-separated list of leg names, only those legs are timed
+  * and the cold and scale tiers are skipped; an unknown name fails.
+  *
+  * Env:
+  *   SPARK_GRAFT_SF_DIR       data dir                (default: the sf0.1 testdata)
+  *   SPARK_GRAFT_CPUS         local core count        (default 32)
+  *   SPARK_GRAFT_BENCH_ITERS  draws per leg           (default 3, median reported)
+  *   SPARK_GRAFT_SCALE_PROOF  0 skips the scale tiers (default 1)
+  *   OPT_EXPLAIN_DIR          if set, write `explain(formatted)` of each
+  *                            leg to $OPT_EXPLAIN_DIR/<leg>.txt
   *
   * Methodology: every timed query materializes through the `noop` sink —
   * `count()` would let Catalyst prune exactly the columns under test. A
   * warmup pass absorbs JVM/codegen first-run cost so numbers reflect
-  * steady-state throughput.
+  * steady-state throughput. Every draw is kept in `bench_out.json`.
   */
 object Bench {
-
-  private implicit val PC: PanelCols =
-    PanelCols("user_id", "ts", "value", tieBreak = Seq("event_id"))
-
-  /** Deterministic synthetic panel: `nSeries` × `len` rows with trend,
-    * seasonality, hash-noise, and a level shift halfway (for PELT). */
-  private def synthPanel(spark: SparkSession, nSeries: Int, len: Int): DataFrame =
-    spark.range(nSeries.toLong * len).select(
-      (col("id") / len).cast("long").as("user_id"),
-      timestamp_micros((col("id") % len) * 3600000000L +
-        lit(1704067200000000L)).cast("timestamp_ntz").as("ts"),
-      lit(0L).as("event_id"),
-      (sin(col("id") % len / lit(6.0)) * 10.0 +
-        (col("id") % len) * 0.01 +
-        when(col("id") % len >= len / 2, 5.0).otherwise(0.0) +
-        pmod(xxhash64(col("id")), lit(1000)) / lit(1000.0)).as("value"))
-
-  private def mat(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
 
   /** 1-minute load average — recorded per query so the bench artifact
     * self-adjudicates co-residency (VERDICT r7 "what's wrong" #1: the
@@ -46,69 +45,66 @@ object Bench {
       try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
 
-  /** Cumulative process CPU seconds (whole JVM — in local mode that is
-    * driver + all executor threads). Recorded per query next to wall time
-    * so the artifact distinguishes "we burned more cycles" (real work,
-    * CPU tracks wall × parallelism) from "we waited" (co-residency or IO
-    * stall: wall grows, CPU doesn't). VERDICT r8 "what's wrong" #1. */
-  private def procCpuSecs(): Double =
-    try {
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-        case os: com.sun.management.OperatingSystemMXBean =>
-          os.getProcessCpuTime / 1e9
-        case _ => -1.0
-      }
-    } catch { case _: Throwable => -1.0 }
-
-  /** Per-query trailing medians from the prior rounds' recorded
-    * BENCH_r*.json artifacts in the cwd (the driver wraps the sbt tail;
-    * the JSON line is extracted from `parsed` or scraped from `tail`).
-    * Empty on any parse trouble — adjudication then simply never fires. */
-  private def trailingMedians(): Map[String, Double] = try {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val re = """\{"metric":.*\}""".r
-    val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-    val perRound: Seq[Map[String, Double]] = files.toSeq.flatMap { f =>
-      try {
-        val root = JsonMethods.parse(java.nio.file.Files.readString(f.toPath))
-        val qjson: Option[JValue] = (root \ "parsed") match {
-          case p: JObject => Some(p \ "queries")
-          case _ => (root \ "tail") match {
-            case JString(t) =>
-              re.findFirstIn(t).map(s => JsonMethods.parse(s) \ "queries")
-            case _ => None
-          }
-        }
-        qjson.collect { case JObject(fields) =>
-          fields.collect {
-            case (k, JDouble(v)) => k -> v
-            case (k, JInt(v)) => k -> v.toDouble
-          }.toMap
-        }
-      } catch { case _: Throwable => None }
+  /** One wall + CPU draw of `run`; (−1, −1) when it throws. */
+  private def timeOnce(name: String, run: () => Unit): (Double, Double) = {
+    val c0 = BenchLegs.procCpuSecs()
+    val t0 = System.nanoTime()
+    val ok = try { run(); true } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
     }
-    perRound.flatMap(_.keys).distinct.flatMap { k =>
-      val vs = perRound.flatMap(_.get(k)).filter(_ > 0).sorted
-      if (vs.isEmpty) None else Some(k -> vs(vs.size / 2))
-    }.toMap
-  } catch { case _: Throwable => Map.empty }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val cpu = {
+      val c1 = BenchLegs.procCpuSecs()
+      if (c0 >= 0 && c1 >= 0) c1 - c0 else -1.0
+    }
+    if (ok) (wall, cpu) else (-1.0, -1.0)
+  }
+
+  /** Every draw of one leg, in order; a failed draw is −1. */
+  private final case class Draws(name: String, wall: Seq[Double],
+      cpu: Seq[Double], loadBefore: Double, loadAfter: Double) {
+    private val good = wall.indices.filter(wall(_) >= 0).sortBy(wall)
+    /** Wall and CPU of the median draw (odd count → true median). */
+    val (secs, cpuSecs) =
+      if (good.isEmpty) (-1.0, -1.0)
+      else { val i = good(good.size / 2); (wall(i), cpu(i)) }
+    def json: String = {
+      val w = good.map(wall)
+      "{\"wall\":" + wall.mkString("[", ",", "]") +
+        ",\"cpu\":" + cpu.mkString("[", ",", "]") +
+        ",\"median\":" + secs +
+        ",\"min\":" + (if (w.isEmpty) -1.0 else w.min) +
+        ",\"max\":" + (if (w.isEmpty) -1.0 else w.max) + "}"
+    }
+  }
+
+  private def draws(name: String, n: Int, run: () => Unit): Draws = {
+    val lb = loadAvg()
+    val ds = (1 to n).map(_ => timeOnce(name, run))
+    Draws(name, ds.map(_._1), ds.map(_._2), lb, loadAvg())
+  }
+
+  /** The faster of two draws of a scale leg. */
+  private def best2(run: () => Unit): Double = {
+    val ts = Seq(timeOnce("scale", run)._1, timeOnce("scale", run)._1)
+      .filter(_ >= 0)
+    if (ts.isEmpty) -1.0 else ts.min
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // Median of N draws per query: a single draw can't distinguish a
+    // 1.5× run-to-run swing (shuffle-file reuse, GC, codegen cache) from
+    // a real regression. Odd N → true median element.
+    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
+    val explainDir = sys.env.get("OPT_EXPLAIN_DIR")
+    val subset: Option[Seq[Leg]] = args.headOption.map(BenchLegs.select)
+    val legs = subset.getOrElse(BenchLegs.timed)
     // engine defaults (UTC, AQE coalesce floor) come from ONE shared
     // source — graft.core.GraftSession — so the bench measures exactly
     // the configuration Verify and library users run (r12 verdict #7)
-    val spark = graft.core.GraftSession.withEngineDefaults(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory",
-          sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")))
-      .getOrCreate()
+    val spark = BenchLegs.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // ── cold-scan tier (r12 verdict ask #8) ──────────────────────────
@@ -118,363 +114,157 @@ object Bench {
     // exclude from their steady-state numbers. Reported as its own
     // `total_cold` field + per-leg `cold_scan_*` entries; kept OUT of
     // `value`/`total_full` so those stay round-over-round comparable.
-    val coldIters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3")
-      .toInt.max(1)
-    // absorb first-action JVM/codegen startup on a table outside the tier
-    try spark.read.parquet(s"$sfDir/nation.parquet")
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    val coldTables = Seq("lineitem", "events", "orders", "documents",
-      "embeddings")
-    val cold: Seq[(String, Double)] = coldTables.map { t =>
-      val ts = (1 to coldIters).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { mat(IO.table(spark, sfDir, t)); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] cold_scan_$t failed: ${e.getMessage}")
-            false }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }.filter(_ >= 0).sorted
-      (s"cold_scan_$t", if (ts.isEmpty) -1.0 else ts(ts.size / 2))
+    // The reported number is the FIRST draw: later draws read a warm
+    // page cache, so a median would not be a cold number.
+    val cold: Seq[Draws] = if (subset.isDefined) Seq.empty else {
+      // absorb first-action JVM/codegen startup on a table outside the tier
+      try mat(spark.read.parquet(s"$sfDir/nation.parquet"))
+      catch { case _: Throwable => () }
+      Seq("lineitem", "events", "orders", "documents", "embeddings").map { t =>
+        draws(s"cold_scan_$t", iters, () => mat(IO.table(spark, sfDir, t)))
+      }
     }
+    def coldSecs(d: Draws): Double = d.wall.head
 
-    val events = IO.events(spark, sfDir).cache()
-    events.count() // pin the scan
-
-    val benches: Seq[(String, () => Unit)] = Seq(
-      // sf-scale engine queries (headline surface)
-      "q1_agg" -> (() => mat(SparkEntry.queries("q1_agg")(spark, sfDir))),
-      "window_pipeline" -> (() => mat(
-        Features.rollingFeatures(
-          Features.calendarFeatures(
-            Features.lagFeatures(events, Seq(1, 7, 14))), Seq(7)))),
-      "forecast_score" -> (() => mat({
-        val fc = ForecastBaselines.ses(events, h = 7)
-        val pred = events.withColumn("y_hat", lag(col("value"), 1).over(PC.w))
-          .filter(col("y_hat").isNotNull)
-        Metrics.grouped(pred, "value", "y_hat").join(
-          fc.groupBy("user_id").agg(avg("y_hat").as("fc_mean")), Seq("user_id"))
-      })),
-      "impute_outliers" -> (() => mat(
-        Outliers.treat(Outliers.detect(
-          Impute.impute(events, "forward_fill"), "zscore"), "clip"))),
-      "resample_decompose" -> (() => mat(
-        Decomposition.seasonal(events, freq = 24))),
-      "dedup_exact" -> (() => mat(
-        Dedup.exact(IO.documents(spark, sfDir)))),
-      "minhash_lsh" -> (() => mat(
-        Dedup.minhashLsh(IO.documents(spark, sfDir), threshold = 0.5))),
-      "text_quality" -> (() => mat(
-        TextOps.qualityMetrics(IO.documents(spark, sfDir).drop("n_chars")))),
-      "knn_brute" -> (() => mat({
-        val emb = IO.embeddings(spark, sfDir)
-        Similarity.bruteForceTopK(emb, emb.limit(100), k = 10)
-      })),
-      "cusum_changepoint" -> (() => mat(Changepoint.cusum(events))),
-      // reference harness shapes (BASELINE.md): pairwise / PELT / ETS
-      "pairwise_dtw_50x30" -> (() => mat(
-        Distances.pairwise(synthPanel(spark, 50, 30), "dtw"))),
-      "pairwise_dtw_band_500x100" -> (() => mat(
-        Distances.pairwise(synthPanel(spark, 500, 100), "dtw",
-          Map("window" -> 10.0)))),
-      "pelt_panel_1000x1000" -> (() => mat(
-        Changepoint.pelt(synthPanel(spark, 1000, 1000), "mean"))),
-      "ets_panel_1000x1000" -> (() => mat({
-        // both ETS models from ONE grouped pass: a single shuffle of the
-        // 1M-row panel instead of 2 scans × (groupBy + futureDates window)
-        val p = synthPanel(spark, 1000, 1000)
-        ForecastBaselines.multiForecast(p, h = 12, Seq(
-          "ses" -> (ys => graft.kernels.Ets.ses(ys, 0.3, 12)),
-          "hw" -> (ys => graft.kernels.Ets.holtWinters(ys, 0.3, 0.1, 0.1, 12, true, 12))))
-      })),
-      "mann_kendall_panel" -> (() => mat(
-        Changepoint.mannKendall(synthPanel(spark, 1000, 1000)))))
-
-    // round-6 curation tier — benched separately so `value` stays
-    // like-for-like with earlier rounds (full sum in `total_full`)
-    val curationBenches: Seq[(String, () => Unit)] = Seq(
-      "semdedup" -> (() => mat({
-        val emb = IO.embeddings(spark, sfDir).select("vec_id", "embedding")
-        Similarity.semDedup(emb, Similarity.ivfCentroids(emb), threshold = 0.95)
-      })),
-      "unigram_logprob" -> (() => mat(
-        TextOps.unigramLogProb(IO.documents(spark, sfDir), vocabSize = 500))),
-      "pack_plan" -> (() => mat(
-        Packing.packPlan(IO.documents(spark, sfDir), seqLen = 128, nShards = 8))),
-      "curation_funnel" -> (() => mat(
-        SparkEntry.queries("doc_curation_pipeline")(spark, sfDir))))
-
-    // round-8 neural tier — benched OUTSIDE both totals (own field) so
-    // "value"/"total_full" stay round-over-round comparable. These time
-    // the production-scale paths: the broadcast-spec per-series forward
-    // (assignment) and the zero-shuffle image-conv embedding map. The
-    // small DEC fit runs once, untimed (bounded-sample driver cost).
-    val decFitForBench = graft.kernels.DeepModels.decFit(
-      DeepClustering.collectSeries(events, cap = 256).map(_._2),
-      graft.kernels.DeepModels.DeepCfg(k = 3, embeddingDim = 4, nFilters = 4,
-        pretrainEpochs = 2, finetuneEpochs = 1), idec = false)
-    val neuralBenches: Seq[(String, () => Unit)] = Seq(
-      "neural_assign" -> (() => mat(DeepClustering.assign(events, decFitForBench))),
-      "vision_embed" -> (() => mat(VisionEmbed.visionEmbeddings(events))))
-
-    // round-9 selection/curation tier — own field (total_selection) so the
-    // earlier totals stay round-over-round comparable. Bounded fits
-    // (classifier weights, IVF centroids) run once, untimed — the timed
-    // paths are the distributed scoring/dedup passes a 100 TB run repeats.
-    val docsB = IO.documents(spark, sfDir).cache()
-    docsB.count()
-    val embB = IO.embeddings(spark, sfDir).select("vec_id", "embedding").cache()
-    embB.count()
-    val clfModel = Selection.textClassifierFit(docsB, col("lang") === "en",
-      buckets = 64, sampleCap = 1000)
-    val protoCenters = Similarity.ivfCentroids(embB)
-    // streaming-scorer model fit, untimed (bounded driver cost, once per
-    // corpus) — the timed kn_target_ppl path is the distributed scoring map
-    val knTargetModel = TextOps.knModelFit(
-      docsB.filter(col("lang") === "en"), buckets = 1024)
-    // round-9 media tier — own field (total_media): the real-codec
-    // decode paths (encode fixture + decode + stats inside one narrow
-    // UDF pass over the corpus)
-    val mediaBenches: Seq[(String, () => Unit)] = Seq(
-      "media_funnel" -> (() => mat(
-        SparkEntry.queries("mm_curation_funnel")(spark, sfDir))),
-      "media_pixels" -> (() => mat(
-        SparkEntry.queries("mm_pixel_features")(spark, sfDir))),
-      "media_jpeg" -> (() => mat(
-        SparkEntry.queries("mm_jpeg_features")(spark, sfDir))),
-      "media_resize" -> (() => mat(
-        SparkEntry.queries("mm_resize")(spark, sfDir))),
-      "media_scenes" -> (() => mat(
-        SparkEntry.queries("mm_scene_changes")(spark, sfDir))),
-      "media_audio_seg" -> (() => mat(
-        SparkEntry.queries("mm_audio_segments")(spark, sfDir))))
-
-    // round-9 temporal-join tier — own field (total_temporal). Times the
-    // one-exchange window as-of join, the bucketed equi range join, and
-    // gap sessionization on the sf events table (the shapes a feature
-    // pipeline runs per training snapshot).
-    val eventsSf = IO.events(spark, sfDir)
-    val temporalBenches: Seq[(String, () => Unit)] = Seq(
-      "asof_join" -> (() => mat {
-        val l = eventsSf.filter(col("event_type") === "purchase")
-          .select("user_id", "event_id", "ts")
-        val r = eventsSf.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-            col("value").as("click_value"))
-        TemporalJoins.asofJoin(l, r, Seq("user_id"), "ts", "ts",
-          Seq("click_id", "click_value"))
-      }),
-      // the same as-of join through its whole-operator name; asof_join
-      // delegates to it, so the two legs now run one plan
-      "asof_native" -> (() => mat {
-        val l = eventsSf.filter(col("event_type") === "purchase")
-          .select("user_id", "event_id", "ts")
-        val r = eventsSf.filter(col("event_type") === "click")
-          .select(col("user_id"), col("ts"), col("event_id").as("click_id"),
-            col("value").as("click_value"))
-        TemporalJoins.asofJoinNative(l, r, Seq("user_id"), "ts", "ts",
-          Seq("click_id", "click_value"))
-      }),
-      "range_join" -> (() => mat {
-        val err = eventsSf.filter(col("event_type") === "error")
-          .select(col("user_id"), col("event_id").as("error_id"),
-            col("ts").as("w_start"),
-            (col("ts") + expr("INTERVAL 1 DAY")).as("w_end"))
-        val clk = eventsSf.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts"))
-        TemporalJoins.rangeJoin(clk, err, Seq("user_id"), "ts",
-          "w_start", "w_end", bucketUs = 6L * 3600 * 1000000)
-      }),
-      // the same range shape on the whole-operator tier (no explosion)
-      "range_native" -> (() => mat {
-        val err = eventsSf.filter(col("event_type") === "error")
-          .select(col("user_id"), col("event_id").as("error_id"),
-            col("ts").as("w_start"),
-            (col("ts") + expr("INTERVAL 1 DAY")).as("w_end"))
-        val clk = eventsSf.filter(col("event_type") === "click")
-          .select(col("user_id"), col("event_id").as("click_id"), col("ts"))
-        TemporalJoins.rangeJoinNative(clk, err, Seq("user_id"), "ts",
-          "w_start", "w_end")
-      }),
-      "sessionize" -> (() => mat(
-        TemporalJoins.sessionize(eventsSf, Seq("user_id"), "ts",
-            gapUs = 6L * 3600 * 1000000, tieBreak = Seq("event_id"))
-          .groupBy(col("user_id"), col("session_id"))
-          .agg(min("ts").as("session_start"), count(lit(1)).as("n_events")))),
-      // z-order rewrite: the range-exchange + sort a layout OPTIMIZE pays
-      "zorder_layout" -> (() => mat(
-        Layout.zorderBy(eventsSf.withColumn("hr",
-            expr("(unix_micros(cast(ts as timestamp)) div 3600000000) % 4096")),
-          Seq("user_id", "hr"), numFiles = 32, bits = 12))),
-      "group_dynamic" -> (() => mat(
-        Resample.groupByDynamic(eventsSf, every = "30 minutes",
-          period = "2 hours"))),
-      "rolling_by_time" -> (() => mat(
-        Features.rollingByTime(eventsSf, windowUs = 6L * 3600 * 1000000,
-          aggs = Seq("mean", "count")))))
-
-    val selectionBenches: Seq[(String, () => Unit)] = Seq(
-      "html_strip" -> (() => mat(
-        TextOps.htmlStrip(SparkEntry.htmlDocs(docsB)))),
-      "line_dedup" -> (() => mat(Dedup.lineDedup(SparkEntry.linedDocs(docsB)))),
-      "span_dedup" -> (() => mat(Dedup.spanDedup(docsB))),
-      "kn_perplexity" -> (() => mat(TextOps.knPerplexity(docsB, buckets = 4096))),
-      "kn_target_ppl" -> (() => mat(
-        graft.streaming.StreamingOps.streamingKnScore(docsB, knTargetModel))),
-      "pack_execute" -> (() => mat(
-        Packing.executePack(docsB, seqLen = 128, nShards = 8))),
-      "dsir_weights" -> (() => mat(
-        Selection.dsirWeights(docsB, col("lang") === "en", buckets = 64))),
-      "classifier_score" -> (() => mat(
-        Selection.textClassifierScore(docsB, clfModel))),
-      "prototype_prune" -> (() => mat(
-        Similarity.prototypePrune(embB, protoCenters, keepFrac = 0.7))))
-
-    // round-9 sketch/foundation tier — own field (total_sketch): the
-    // bounded-state aggregations (CMS counters, HLL registers — fixed
-    // shuffle size regardless of corpus) and the Chronos tokenization
-    // map a foundation-training corpus pays per pass
-    val sketchBenches: Seq[(String, () => Unit)] = Seq(
-      "cms_heavy" -> (() => mat(
-        Sketches.cmsHeavyHitters(docsB, minFrac = 0.01))),
-      "hll_distinct" -> (() => mat(Sketches.hllDistinctTokens(docsB))),
-      // cached frame like its tier siblings — timing through
-      // SparkEntry.queries would re-scan parquet every iteration and
-      // make the trailing-median adjudication flap on disk-cache state
-      "chronos_tokens" -> (() => mat(
-        graft.ops.Foundation.chronosTokenize(events))))
-
+    val ctx = new Ctx(spark, sfDir)
+    ctx.prepare()
     // warmup: absorb JIT/codegen first-run cost on a small slice
-    mat(Features.lagFeatures(events.limit(1000), Seq(1)))
-    mat(ForecastBaselines.ses(events.limit(2000), h = 2))
+    mat(Features.lagFeatures(ctx.events.limit(1000), Seq(1)))
+    mat(ForecastBaselines.ses(ctx.events.limit(2000), h = 2))
 
-    // Median of N iterations per query: a single-iteration wall time can't
-    // distinguish a 1.5× run-to-run swing (shuffle-file reuse, GC, codegen
-    // cache) from a real regression, so round-over-round comparisons on one
-    // sample produce false regressions. Odd N → true median element.
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
+    explainDir.foreach { d =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
+      legs.foreach { leg =>
+        val txt = leg.body(ctx).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(d, s"${leg.name}.txt"), txt)
+      }
+    }
+
     val loadStart = loadAvg()
-    case class QRes(name: String, secs: Double, cpuSecs: Double,
-      loadBefore: Double, loadAfter: Double, rerun: Option[Double] = None)
-    def timeOnce(name: String, run: () => Unit): (Double, Double) = {
-      val c0 = procCpuSecs()
-      val t0 = System.nanoTime()
-      val ok = try { run(); true } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
-      }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val cpu = { val c1 = procCpuSecs(); if (c0 >= 0 && c1 >= 0) c1 - c0 else -1.0 }
-      if (ok) (wall, cpu) else (-1.0, -1.0)
-    }
-    def timeAll(suite: Seq[(String, () => Unit)]): Seq[QRes] =
-      suite.map { case (name, run) =>
-        val lb = loadAvg()
-        val times = (1 to iters).map(_ => timeOnce(name, run))
-        val good = times.filter(_._1 >= 0).sortBy(_._1)
-        val (w, c) = if (good.isEmpty) (-1.0, -1.0) else good(good.size / 2)
-        QRes(name, w, c, lb, loadAvg())
-      }
-    // contention self-adjudication (VERDICT r7 ask #3, guard fixed per r8
-    // "what's wrong" #1): a query whose median exceeds 2× its
-    // trailing-round median is presumed noise until proven otherwise —
-    // settle, rerun once, and record the better time. The old
-    // `load > 1.25 × nCpus` precondition could never fire on this box
-    // (load peaked at 6.3 while queries recorded 4–7× noise), so the
-    // settle+retake now runs on the median condition alone; it is cheap,
-    // and a real regression stays slow after the settle and keeps its
-    // slow number. The recorded per-query CPU time lets the reader
-    // separate "burned more cycles" from "waited on a busy box".
-    val trailing = trailingMedians()
-    val allRuns =
-      (benches ++ curationBenches ++ neuralBenches ++ selectionBenches ++
-        mediaBenches ++ temporalBenches ++ sketchBenches).toMap
-    def adjudicate(rs: Seq[QRes]): Seq[QRes] = rs.map { r =>
-      trailing.get(r.name) match {
-        case Some(m) if r.secs > 2.0 * m =>
-          Thread.sleep(10000) // settle
-          val (again, againCpu) = timeOnce(r.name, allRuns(r.name))
-          if (again >= 0 && again < r.secs)
-            r.copy(secs = again, cpuSecs = againCpu, rerun = Some(again))
-          else r.copy(rerun = Some(again))
-        case _ => r
-      }
-    }
-    val results = adjudicate(timeAll(benches))
-    val curation = adjudicate(timeAll(curationBenches))
-    val neural = adjudicate(timeAll(neuralBenches))
-    val selection = adjudicate(timeAll(selectionBenches))
-    val media = adjudicate(timeAll(mediaBenches))
-    val temporal = adjudicate(timeAll(temporalBenches))
-    val sketch = adjudicate(timeAll(sketchBenches))
+    val all: Seq[(Leg, Draws)] =
+      legs.map(leg => leg -> draws(leg.name, iters, () => mat(leg.body(ctx))))
 
-    // ---- 10× scale-proof (VERDICT r8 ask #2) ----------------------------
-    // Replicates the sf docs/embeddings 10× IN-ENGINE and times the
-    // headline curation/selection paths at 1× and 10× on identical code.
-    // Per-replica perturbations are bijective (character cipher per replica
-    // "domain"; circularly-shifted vectors), so the dedup structure of the
-    // original corpus is preserved inside each domain instead of turning
-    // every doc into 10 exact copies — identical copies would make
-    // LSH/SemDeDup outputs quadratic in the replication factor by
-    // construction, measuring the synthetic data rather than the plan.
-    // t1 runs the same replicate(1) pipeline so the ratio isolates
-    // scaling; a linear plan with fixed overhead lands well under 10×.
-    // IVF follows its documented scale path: nCells ∝ sqrt(N).
-    val scaleProofOn = sys.env.getOrElse("SPARK_GRAFT_SCALE_PROOF", "1") == "1"
-    val scale10x: Seq[(String, Double, Double)] = if (!scaleProofOn) Seq.empty else {
-      // Per-replica perturbation = a BIJECTIVE character cipher (alphabet
-      // rotation per domain). A bijection on characters is a bijection on
-      // the 5-char shingles minhash hashes, so every intra-domain Jaccard
-      // relationship of the original corpus is preserved EXACTLY, while
-      // cross-domain shingle sets are disjoint. The previous fixture
-      // (suffix every word with "r{rep}") flooded the char-shingle space
-      // with shared " r0 " patterns and manufactured 4.7M fake near-dup
-      // pairs out of 260 (probed r9) — measuring corpus pathology, not
-      // the plan. Replica 0 is the identity, so the t1 leg IS the raw
-      // corpus.
-      def repDocs(reps: Int): DataFrame = {
-        val lower = "abcdefghijklmnopqrstuvwxyz"
-        val upper = lower.toUpperCase
-        val digits = "0123456789"
-        def rot(s: String, r: Int) = s.drop(r % s.length) + s.take(r % s.length)
-        val from = lower + upper + digits
-        val ciphered = (1 until reps).foldLeft(
-          when(col("__rep") === 0, col("text"))) { (acc, r) =>
-          acc.when(col("__rep") === r,
-            translate(col("text"), from, rot(lower, r) + rot(upper, r) + rot(digits, r)))
-        }
-        docsB.withColumn("__rep", explode(sequence(lit(0), lit(reps - 1))))
-          .withColumn("doc_id",
-            col("doc_id").cast("long") * reps + col("__rep"))
-          .withColumn("text", ciphered.otherwise(col("text")))
-          .drop("__rep")
-      }
-      def repEmb(reps: Int): DataFrame =
-        embB.withColumn("__rep", explode(sequence(lit(0), lit(reps - 1))))
-          .withColumn("vec_id",
-            col("vec_id").cast("long") * reps + col("__rep"))
-          .withColumn("embedding",
-            when(col("__rep") === 0, col("embedding")).otherwise(concat(
-              slice(col("embedding"), col("__rep") + 1,
-                size(col("embedding")) - col("__rep")),
-              slice(col("embedding"), lit(1), col("__rep")))))
-          .drop("__rep")
-      // Materialize the replicated corpora to PARQUET and time the
-      // operators reading from disk — how a real corpus arrives. The
-      // earlier cached-DataFrame form held 11× the corpus text against
-      // the driver's storage pool; evictions re-ran the (expensive)
-      // word-remap HOF inside timed runs, polluting every ratio with
-      // recompute cost (r9: minhash_lsh read 17.5× that way).
-      val scaleDir = java.nio.file.Files.createTempDirectory("graft_scale").toString
-      repDocs(1).write.mode("overwrite").parquet(s"$scaleDir/docs1")
-      repDocs(10).write.mode("overwrite").parquet(s"$scaleDir/docs10")
+    val scaleProofOn = subset.isEmpty &&
+      sys.env.getOrElse("SPARK_GRAFT_SCALE_PROOF", "1") == "1"
+    val scale10x = if (scaleProofOn) scaleSuite(spark, ctx) else Seq.empty
+    val scaleLen = if (scaleProofOn) lengthSuite(spark) else Seq.empty
+
+    val loadEnd = loadAvg()
+    val timedDraws = all.map(_._2)
+    // ambient-load summary for the driver-facing line (r12 verdict ask
+    // #9): per-leg before/after loads live in bench_out.json's `load`
+    // map; the compact line carries start/end/max so a contaminated draw
+    // is visible inside the 2000-char stdout tail the driver keeps
+    val loadMax = (timedDraws.flatMap(r => Seq(r.loadBefore, r.loadAfter)) ++
+      Seq(loadStart, loadEnd)).max
+    def total(tiers: Tier*): Double =
+      all.collect { case (l, d) if tiers.contains(l.tier) && d.secs >= 0 => d.secs }
+        .sum
+    val totalCore = total(Tier.Core)
+    val totalFull = total(Tier.Core, Tier.Curation)
+    val totalNeural = total(Tier.Neural)
+    val totalSelection = total(Tier.Selection)
+    val totalMedia = total(Tier.Media)
+    val totalTemporal = total(Tier.Temporal)
+    val totalSketch = total(Tier.Sketch)
+    val totalCold = cold.map(coldSecs).filter(_ >= 0).sum
+
+    def obj(kv: Seq[(String, Any)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val coldJson = obj(cold.map(d => d.name -> coldSecs(d)))
+    val qs = obj(timedDraws.map(r => r.name -> r.secs))
+    val cpus_ = obj(timedDraws.map(r => r.name -> r.cpuSecs))
+    val loads = obj(timedDraws.map(r =>
+      r.name -> ("[" + r.loadBefore + "," + r.loadAfter + "]")))
+    val drawsJson = obj((timedDraws ++ cold).map(r => r.name -> r.json))
+    val scaleJson = obj(scale10x.map { case (n, t1, t10) =>
+      val ratio = if (t1 > 0 && t10 > 0) t10 / t1 else -1.0
+      n -> ("{\"t1\":" + t1 + ",\"t10\":" + t10 +
+        ",\"ratio\":" + f"$ratio%.2f" + "}")
+    })
+    val scaleLenJson = obj(scaleLen.map { case (n, t1, t10, t100) =>
+      val r10 = if (t1 > 0 && t10 > 0) t10 / t1 else -1.0
+      val r100 = if (t1 > 0 && t100 > 0) t100 / t1 else -1.0
+      n -> ("{\"t1\":" + t1 + ",\"t10\":" + t10 +
+        ",\"t100\":" + t100 + ",\"r10\":" + f"$r10%.2f" +
+        ",\"r100\":" + f"$r100%.2f" + "}")
+    })
+    val json =
+      s"""{"metric":"total","value":$totalCore,"unit":"sec","queries":$qs,"cpu":$cpus_,"iterations":$iters,"total_full":$totalFull,"total_neural":$totalNeural,"total_selection":$totalSelection,"total_media":$totalMedia,"total_temporal":$totalTemporal,"total_sketch":$totalSketch,"cold":$coldJson,"total_cold":$totalCold,"load":$loads,"load_start":$loadStart,"load_end":$loadEnd,"load_max":$loadMax,"draws":$drawsJson,"scale10x":$scaleJson,"scale_len":$scaleLenJson,"sf":"$sfDir"}"""
+    // bench_out.json carries the FULL artifact (every draw, per-query
+    // cpu/load, both scale sections) — the round's committed record and
+    // what COVERAGE.md quotes
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), json)
+    // The DRIVER-facing line must fit the driver's 2000-char stdout
+    // tail together with sbt's trailing "[success] ..." line — r01–r10
+    // all landed "parsed": null because the full-precision line plus
+    // the sentinel copy never fit the window. Print ONE compact line
+    // (3-dp query values, no per-query cpu/load maps) LAST.
+    def f3(d: Double): String =
+      if (d < 0) "-1"
+      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
+    // cached-tier legs keep their names and values; cold legs are ADDED
+    // entries (driver contract: additions only)
+    val qsC = obj(timedDraws.map(r => r.name -> f3(r.secs)) ++
+      cold.map(d => d.name -> f3(coldSecs(d))))
+    val compact =
+      s"""{"metric":"total","value":${f3(totalCore)},"unit":"sec","queries":$qsC,"iterations":$iters,"total_full":${f3(totalFull)},"total_neural":${f3(totalNeural)},"total_selection":${f3(totalSelection)},"total_media":${f3(totalMedia)},"total_temporal":${f3(totalTemporal)},"total_sketch":${f3(totalSketch)},"total_cold":${f3(totalCold)},"load_start":$loadStart,"load_end":$loadEnd,"load_max":$loadMax,"detail":"bench_out.json","sf":"$sfDir"}"""
+    spark.stop()
+    // The compact JSON is the absolute last stdout line, BARE (r12
+    // verdict ask #2): sbt no longer decorates it — build.sbt sets
+    // outputStrategy := StdoutOutput for forked runs — and sbt's GC
+    // monitor [warn] line is disabled in .jvmopts, so only sbt's own
+    // "[success]" line follows inside the driver's 2000-char tail.
+    println(compact)
+    System.out.flush()
+  }
+
+  // ---- 10× scale-proof (VERDICT r8 ask #2) ------------------------------
+  // Replicates the sf docs/embeddings 10× IN-ENGINE and times the
+  // headline curation/selection paths at 1× and 10× on identical code.
+  // Per-replica perturbations are bijective (a seeded character cipher
+  // per replica, BenchLegs.replica; circularly-shifted vectors), so the
+  // dedup structure of the original corpus is preserved inside each
+  // replica instead of turning every doc into 10 exact copies — identical
+  // copies would make LSH/SemDeDup outputs quadratic in the replication
+  // factor by construction, measuring the synthetic data rather than the
+  // plan. Replica 0 is the identity, so t1 IS the raw corpus and the
+  // ratio isolates scaling; a linear plan with fixed overhead lands well
+  // under 10×. IVF follows its documented scale path: nCells ∝ sqrt(N).
+  private def scaleSuite(spark: SparkSession,
+      ctx: Ctx): Seq[(String, Double, Double)] = {
+    def repEmb(reps: Int): DataFrame =
+      ctx.emb.withColumn("__rep", explode(sequence(lit(0), lit(reps - 1))))
+        .withColumn("vec_id",
+          col("vec_id").cast("long") * reps + col("__rep"))
+        .withColumn("embedding",
+          when(col("__rep") === 0, col("embedding")).otherwise(concat(
+            slice(col("embedding"), col("__rep") + 1,
+              size(col("embedding")) - col("__rep")),
+            slice(col("embedding"), lit(1), col("__rep")))))
+        .drop("__rep")
+    // Materialize the replicated corpora to PARQUET and time the
+    // operators reading from disk — how a real corpus arrives. The
+    // earlier cached-DataFrame form held 11× the corpus text against
+    // the driver's storage pool; evictions re-ran the (expensive)
+    // word-remap HOF inside timed runs, polluting every ratio with
+    // recompute cost (r9: minhash_lsh read 17.5× that way).
+    val scaleDir = java.nio.file.Files.createTempDirectory("graft_scale").toString
+    try {
+      BenchLegs.replica(ctx.docs, 0, 1).write.mode("overwrite")
+        .parquet(s"$scaleDir/docs1")
+      BenchLegs.replicas(ctx.docs, 10).write.mode("overwrite")
+        .parquet(s"$scaleDir/docs10")
       repEmb(1).write.mode("overwrite").parquet(s"$scaleDir/emb1")
       repEmb(10).write.mode("overwrite").parquet(s"$scaleDir/emb10")
       // release the timed tiers' cached corpora before the scale legs: a
-      // JVM still pinning docsB/embB (+ shuffle blocks) puts GC pressure
+      // JVM still pinning docs/emb (+ shuffle blocks) puts GC pressure
       // squarely on the 10x legs — one run recorded pelt at 13.8x where
       // a fresh-JVM probe measures 5.1x, pure heap-state noise
-      docsB.unpersist(blocking = true)
-      embB.unpersist(blocking = true)
+      ctx.docs.unpersist(blocking = true)
+      ctx.emb.unpersist(blocking = true)
       spark.sqlContext.clearCache()
       val docs1 = spark.read.parquet(s"$scaleDir/docs1")
       val docs10 = spark.read.parquet(s"$scaleDir/docs10")
@@ -497,113 +287,20 @@ object Bench {
       // count (broadcast-linear regardless).
       val centSem10 = Similarity.ivfCentroids(emb10, nCells = 160)
       val centProto10 = Similarity.ivfCentroids(emb10, nCells = 50)
-      val enCond = col("lang") === "en"
-      // temporal-join scale legs: split a synthetic panel into odd/even
-      // hours so both join sides scale with the series count
-      def asofOnPanel(nSeries: Int): DataFrame = {
-        val p = synthPanel(spark, nSeries, 1000)
-        val hr = (unix_micros(col("ts").cast("timestamp")) / 3600000000L) % 2
-        TemporalJoins.asofJoin(
-          p.filter(hr === 0).select("user_id", "ts", "value"),
-          p.filter(hr === 1).select(col("user_id"), col("ts"),
-            col("value").as("rv")),
-          Seq("user_id"), "ts", "ts", Seq("rv"))
+      def input(in: Input, factor: Int): DataFrame = in match {
+        case Input.Corpus => if (factor == 1) docs1 else docs10
+        case p: Input.Panel => synthPanel(spark, p.seriesAt(factor), p.len)
       }
-      def asofNativeOnPanel(nSeries: Int): DataFrame = {
-        val p = synthPanel(spark, nSeries, 1000)
-        val hr = (unix_micros(col("ts").cast("timestamp")) / 3600000000L) % 2
-        TemporalJoins.asofJoinNative(
-          p.filter(hr === 0).select("user_id", "ts", "value"),
-          p.filter(hr === 1).select(col("user_id"), col("ts"),
-            col("value").as("rv")),
-          Seq("user_id"), "ts", "ts", Seq("rv"))
-      }
-      def sessionizeOnPanel(nSeries: Int): DataFrame =
-        TemporalJoins.sessionize(synthPanel(spark, nSeries, 1000),
-            Seq("user_id"), "ts", gapUs = 2L * 3600 * 1000000)
-          .groupBy(col("user_id"), col("session_id"))
-          .agg(count(lit(1)).as("n_events"))
-      // every 24th row opens a 6h interval; both sides scale with rows
-      def rangeOnPanel(nSeries: Int): DataFrame = {
-        val p = synthPanel(spark, nSeries, 1000)
-        val ivs = p.filter(pmod(unix_micros(col("ts").cast("timestamp")) /
-            3600000000L, lit(24)) === 0)
-          .select(col("user_id"), col("ts").as("w_start"),
-            (col("ts") + expr("INTERVAL 6 HOURS")).as("w_end"))
-        TemporalJoins.rangeJoin(p.select("user_id", "ts", "value"), ivs,
-          Seq("user_id"), "ts", "w_start", "w_end",
-          bucketUs = 6L * 3600 * 1000000)
-      }
-      def rangeNativeOnPanel(nSeries: Int): DataFrame = {
-        val p = synthPanel(spark, nSeries, 1000)
-        val ivs = p.filter(pmod(unix_micros(col("ts").cast("timestamp")) /
-            3600000000L, lit(24)) === 0)
-          .select(col("user_id"), col("ts").as("w_start"),
-            (col("ts") + expr("INTERVAL 6 HOURS")).as("w_end"))
-        TemporalJoins.rangeJoinNative(p.select("user_id", "ts", "value"), ivs,
-          Seq("user_id"), "ts", "w_start", "w_end")
-      }
-      def groupDynOnPanel(nSeries: Int): DataFrame =
-        Resample.groupByDynamic(synthPanel(spark, nSeries, 1000),
-          every = "30 minutes", period = "2 hours")
-      def zorderOnPanel(nSeries: Int): DataFrame =
-        Layout.zorderBy(synthPanel(spark, nSeries, 1000).withColumn("hr",
-            expr("(unix_micros(cast(ts as timestamp)) div 3600000000) % 4096")),
-          Seq("user_id", "hr"), numFiles = 32, bits = 12)
-      val spSuite: Seq[(String, () => Unit, () => Unit)] = Seq(
-        // time-series tier: the grouped-panel contract says work scales
-        // with rows (pelt/mk/ets: 10× series) and with PAIRS for the
-        // pairwise ops (√10× series ≈ 10× pairs under id_1 < id_2)
-        ("pelt_panel",
-          () => mat(Changepoint.pelt(synthPanel(spark, 1000, 1000), "mean")),
-          () => mat(Changepoint.pelt(synthPanel(spark, 10000, 1000), "mean"))),
-        ("mann_kendall_panel",
-          () => mat(Changepoint.mannKendall(synthPanel(spark, 1000, 1000))),
-          () => mat(Changepoint.mannKendall(synthPanel(spark, 10000, 1000)))),
-        // per-series O(n²) kernel at fixed length → linear in series
-        ("matrix_profile",
-          () => mat(Advanced.matrixProfile(synthPanel(spark, 1000, 200), m = 8)),
-          () => mat(Advanced.matrixProfile(synthPanel(spark, 10000, 200), m = 8))),
-        ("ets_panel",
-          () => mat(ForecastBaselines.multiForecast(synthPanel(spark, 1000, 1000),
-            h = 12, Seq("ses" -> (ys => graft.kernels.Ets.ses(ys, 0.3, 12))))),
-          () => mat(ForecastBaselines.multiForecast(synthPanel(spark, 10000, 1000),
-            h = 12, Seq("ses" -> (ys => graft.kernels.Ets.ses(ys, 0.3, 12)))))),
-        ("pairwise_dtw_band",
-          () => mat(Distances.pairwise(synthPanel(spark, 500, 100), "dtw",
-            Map("window" -> 10.0))),
-          () => mat(Distances.pairwise(synthPanel(spark, 1581, 100), "dtw",
-            Map("window" -> 10.0)))),
-        ("minhash_lsh",
-          () => mat(Dedup.minhashLsh(docs1, threshold = 0.5)),
-          () => mat(Dedup.minhashLsh(docs10, threshold = 0.5))),
-        ("line_dedup",
-          () => mat(Dedup.lineDedup(SparkEntry.linedDocs(docs1))),
-          () => mat(Dedup.lineDedup(SparkEntry.linedDocs(docs10)))),
-        ("span_dedup",
-          () => mat(Dedup.spanDedup(docs1)),
-          () => mat(Dedup.spanDedup(docs10))),
-        ("kn_perplexity",
-          () => mat(TextOps.knPerplexity(docs1, buckets = 4096)),
-          () => mat(TextOps.knPerplexity(docs10, buckets = 4096))),
-        ("pack_execute",
-          () => mat(Packing.executePack(docs1, seqLen = 128, nShards = 8)),
-          () => mat(Packing.executePack(docs10, seqLen = 128, nShards = 8))),
-        ("curation_metrics",
-          () => mat(TextOps.curationMetrics(docs1)),
-          () => mat(TextOps.curationMetrics(docs10))),
-        ("dsir_weights",
-          () => mat(Selection.dsirWeights(docs1, enCond, buckets = 64)),
-          () => mat(Selection.dsirWeights(docs10, enCond, buckets = 64))),
-        ("classifier_score",
-          () => mat(Selection.textClassifierScore(docs1, clfModel)),
-          () => mat(Selection.textClassifierScore(docs10, clfModel))),
+      val registered = (BenchLegs.benchScaleLegs(ctx) ++ BenchLegs.scaleLegs)
+        .map(s => (s.name, () => mat(s.body(input(s.input, 1))),
+          () => mat(s.body(input(s.input, 10)))))
+      val suite: Seq[(String, () => Unit, () => Unit)] = registered ++ Seq(
         ("semdedup",
-          () => mat(Similarity.semDedup(emb1, cent1, threshold = 0.95)),
-          () => mat(Similarity.semDedup(emb10, centSem10, threshold = 0.95))),
+          () => mat(BenchLegs.semDedup(emb1, cent1)),
+          () => mat(BenchLegs.semDedup(emb10, centSem10))),
         ("prototype_prune",
-          () => mat(Similarity.prototypePrune(emb1, cent1, keepFrac = 0.7)),
-          () => mat(Similarity.prototypePrune(emb10, centProto10, keepFrac = 0.7))),
+          () => mat(BenchLegs.prototypePrune(emb1, cent1)),
+          () => mat(BenchLegs.prototypePrune(emb10, centProto10))),
         // HNSW: per-partition graph builds are the dominant cost and
         // amortize across fixed partitions — ~linear in corpus size
         ("knn_hnsw",
@@ -622,26 +319,6 @@ object Bench {
             corpusParts = 8, queryBatches = 2)),
           () => mat(Similarity.hnswTopKAll(emb10, emb10, k = 3,
             corpusParts = 8, queryBatches = 2))),
-        // temporal joins: one exchange on the by-key + window carry —
-        // rows AND keys scale 10×, so the plan's contract is ~linear
-        ("asof_join", () => mat(asofOnPanel(1000)),
-          () => mat(asofOnPanel(10000))),
-        // the whole-operator tier on the same panel: two per-side
-        // exchanges + one merge pass — same ~linear contract
-        ("asof_native", () => mat(asofNativeOnPanel(1000)),
-          () => mat(asofNativeOnPanel(10000))),
-        ("sessionize", () => mat(sessionizeOnPanel(1000)),
-          () => mat(sessionizeOnPanel(10000))),
-        ("range_join", () => mat(rangeOnPanel(1000)),
-          () => mat(rangeOnPanel(10000))),
-        ("range_native", () => mat(rangeNativeOnPanel(1000)),
-          () => mat(rangeNativeOnPanel(10000))),
-        ("group_dynamic", () => mat(groupDynOnPanel(1000)),
-          () => mat(groupDynOnPanel(10000))),
-        // range exchange + sort: n log n with sampled bounds — the one
-        // intentionally super-constant op; ratio documents the sort cost
-        ("zorder_layout", () => mat(zorderOnPanel(1000)),
-          () => mat(zorderOnPanel(10000))),
         // incremental-dedup contract: a CONSTANT ingest batch against a
         // 10× corpus signature store — the ratio measures corpus-growth
         // sensitivity of per-batch cost (claim: touched buckets only,
@@ -651,24 +328,7 @@ object Bench {
           () => mat(Dedup.minhashLshIncremental(ingestBatch, sigs1,
             threshold = 0.5)),
           () => mat(Dedup.minhashLshIncremental(ingestBatch, sigs10,
-            threshold = 0.5))),
-        // sketches: the token scan scales linearly but the shuffled
-        // state is FIXED (depth·width counters / 2^b registers per
-        // group) — the ratio should track the scan, never the shuffle
-        ("cms_sketch",
-          () => mat(Sketches.cmsSketch(docs1)),
-          () => mat(Sketches.cmsSketch(docs10))),
-        // sketch-only path: hllDistinctTokens also runs the exact
-        // count(DISTINCT) audit, whose shuffle grows with vocabulary —
-        // timing it would measure the audit, not the fixed registers
-        ("hll_distinct",
-          () => mat(Sketches.hllDistinctSketch(docs1)),
-          () => mat(Sketches.hllDistinctSketch(docs10))))
-      def best2(run: () => Unit): Double = {
-        val ts = Seq(timeOnce("scale", run)._1, timeOnce("scale", run)._1)
-          .filter(_ >= 0)
-        if (ts.isEmpty) -1.0 else ts.min
-      }
+            threshold = 0.5))))
       // Steady-state warmup for the constant-batch incremental leg: the
       // first invocation of minhashLshIncremental pays JIT + codegen of
       // the fused signature expressions — cost a real ingest pipeline
@@ -677,144 +337,37 @@ object Bench {
       // untimed so both legs measure per-batch steady state.
       try mat(Dedup.minhashLshIncremental(ingestBatch, sigs1, threshold = 0.5))
       catch { case _: Throwable => () }
-      // Same self-adjudication philosophy as the main suite's rerun
-      // guard: every leg is DESIGNED sub-linear (≤ ~6×), so a ratio past
-      // 7 is presumed co-residency noise until a settle+retake of BOTH
-      // legs reproduces it — a real super-linear plan stays super-linear
-      // after the settle and keeps its slow ratio (r9: a run co-resident
-      // with a verify job recorded group_dynamic at 22.9× vs its 5.8×
-      // steady state; the retake is cheap insurance against recording
-      // that as a scaling claim).
-      // Retake threshold 7.0 → 5.0 (r10): the r9 asof_native leg drew
-      // 6.80× — below the old threshold, so no retake fired — while a
-      // 5-rep alternating probe measured its median at 3.13× vs the
-      // since-removed composed form's 3.01× on identical panels; the
-      // native 10× leg is bimodal (1.6–2.2 s fast mode, ~5.3 s slow
-      // draws under heap pressure), so ratios past 5 warrant the
-      // settle+retake before being recorded as scaling claims.
-      val out = spSuite.map { case (name, r1, r10) =>
-        var t1 = best2(r1)
-        var t10 = best2(r10)
-        if (t1 > 0 && t10 > 0 && t10 / t1 > 5.0) {
-          Thread.sleep(5000)
-          val u1 = best2(r1)
-          val u10 = best2(r10)
-          if (u1 > 0 && u10 > 0 && u10 / u1 < t10 / t1) { t1 = u1; t10 = u10 }
-        }
-        (name, t1, t10)
-      }
-      // best-effort scratch cleanup
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(java.nio.file.Paths.get(scaleDir)).iterator().asScala
-          .toSeq.reverse.foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-      out
+      suite.map { case (name, r1, r10) => (name, best2(r1), best2(r10)) }
+    } finally BenchLegs.cleanupScratch(scaleDir)
+  }
+
+  // ── length-axis scale proof (r11, VERDICT r10 ask #4) ─────────────
+  // The 10× methodology above replicates series COUNT; these legs grow
+  // ONE series' LENGTH (1 series × L, 10L, 100L) — the axis the
+  // matrix-profile valve and the BOCPD prune exist for. Expected
+  // shapes: pelt (pruned) ~linear, ets O(n), mann-kendall O(n log n),
+  // bocpd-pruned O(n·K), matrix profile O(n²) WORK but distributed
+  // over diagonal blocks — its wall ratio measures work/parallelism,
+  // not a stall; completing at 100× at all is what the monolithic
+  // form cannot do.
+  private def lengthSuite(
+      spark: SparkSession): Seq[(String, Double, Double, Double)] = {
+    val lenSuite: Seq[(String, Int, Int => () => Unit)] = Seq(
+      ("pelt_len", 2000, len => () =>
+        mat(Changepoint.pelt(synthPanel(spark, 1, len), "mean"))),
+      ("ets_len", 10000, len => () =>
+        mat(ForecastBaselines.multiForecast(synthPanel(spark, 1, len),
+          h = 12, Seq("ses" -> (ys => graft.kernels.Ets.ses(ys, 0.3, 12)))))),
+      ("mann_kendall_len", 10000, len => () =>
+        mat(Changepoint.mannKendall(synthPanel(spark, 1, len)))),
+      ("bocpd_len", 2000, len => () =>
+        mat(Changepoint.bocpd(synthPanel(spark, 1, len),
+          pruneThreshold = 1e-8))),
+      ("matrix_profile_len", 1000, len => () =>
+        mat(Advanced.matrixProfileBlocked(synthPanel(spark, 1, len),
+          m = 16, numBlocks = 32))))
+    lenSuite.map { case (name, base, mk) =>
+      (name, best2(mk(base)), best2(mk(base * 10)), best2(mk(base * 100)))
     }
-
-    // ── length-axis scale proof (r11, VERDICT r10 ask #4) ─────────────
-    // The 10×/100× methodology above replicates series COUNT; these legs
-    // grow ONE series' LENGTH (1 series × L, 10L, 100L) — the axis the
-    // matrix-profile valve and the BOCPD prune exist for. Expected
-    // shapes: pelt (pruned) ~linear, ets O(n), mann-kendall O(n log n),
-    // bocpd-pruned O(n·K), matrix profile O(n²) WORK but distributed
-    // over diagonal blocks — its wall ratio measures work/parallelism,
-    // not a stall; completing at 100× at all is what the monolithic
-    // form cannot do.
-    val scaleLen: Seq[(String, Double, Double, Double)] =
-      if (!scaleProofOn) Seq.empty else {
-        def best2L(run: () => Unit): Double = {
-          val ts = Seq(timeOnce("scaleLen", run)._1, timeOnce("scaleLen", run)._1)
-            .filter(_ >= 0)
-          if (ts.isEmpty) -1.0 else ts.min
-        }
-        val lenSuite: Seq[(String, Int, Int => () => Unit)] = Seq(
-          ("pelt_len", 2000, len => () =>
-            mat(Changepoint.pelt(synthPanel(spark, 1, len), "mean"))),
-          ("ets_len", 10000, len => () =>
-            mat(ForecastBaselines.multiForecast(synthPanel(spark, 1, len),
-              h = 12, Seq("ses" -> (ys => graft.kernels.Ets.ses(ys, 0.3, 12)))))),
-          ("mann_kendall_len", 10000, len => () =>
-            mat(Changepoint.mannKendall(synthPanel(spark, 1, len)))),
-          ("bocpd_len", 2000, len => () =>
-            mat(Changepoint.bocpd(synthPanel(spark, 1, len),
-              pruneThreshold = 1e-8))),
-          ("matrix_profile_len", 1000, len => () =>
-            mat(Advanced.matrixProfileBlocked(synthPanel(spark, 1, len),
-              m = 16, numBlocks = 32))))
-        lenSuite.map { case (name, base, mk) =>
-          (name, best2L(mk(base)), best2L(mk(base * 10)),
-            best2L(mk(base * 100)))
-        }
-      }
-
-    val loadEnd = loadAvg()
-    val all = results ++ curation ++ neural ++ selection ++ media ++
-      temporal ++ sketch
-    // ambient-load summary for the driver-facing line (r12 verdict ask
-    // #9): per-leg before/after loads live in bench_out.json's `load`
-    // map; the compact line carries start/end/max so a contaminated draw
-    // is visible inside the 2000-char stdout tail the driver keeps
-    val loadMax = (all.flatMap(r => Seq(r.loadBefore, r.loadAfter)) ++
-      Seq(loadStart, loadEnd)).max
-    val coldJson = cold.map { case (n, s) => "\"" + n + "\":" + s }
-      .mkString("{", ",", "}")
-    val totalCold = cold.map(_._2).filter(_ >= 0).sum
-    val qs = all.map(r => "\"" + r.name + "\":" + r.secs).mkString("{", ",", "}")
-    val cpus_ = all.map(r => "\"" + r.name + "\":" + r.cpuSecs)
-      .mkString("{", ",", "}")
-    val loads = all.map(r =>
-      "\"" + r.name + "\":[" + r.loadBefore + "," + r.loadAfter + "]")
-      .mkString("{", ",", "}")
-    val reruns = all.flatMap(r => r.rerun.map(v => "\"" + r.name + "\":" + v))
-      .mkString("{", ",", "}")
-    val scaleJson = scale10x.map { case (n, t1, t10) =>
-      val ratio = if (t1 > 0 && t10 > 0) t10 / t1 else -1.0
-      "\"" + n + "\":{\"t1\":" + t1 + ",\"t10\":" + t10 +
-        ",\"ratio\":" + f"$ratio%.2f" + "}"
-    }.mkString("{", ",", "}")
-    val scaleLenJson = scaleLen.map { case (n, t1, t10, t100) =>
-      val r10 = if (t1 > 0 && t10 > 0) t10 / t1 else -1.0
-      val r100 = if (t1 > 0 && t100 > 0) t100 / t1 else -1.0
-      "\"" + n + "\":{\"t1\":" + t1 + ",\"t10\":" + t10 +
-        ",\"t100\":" + t100 + ",\"r10\":" + f"$r10%.2f" +
-        ",\"r100\":" + f"$r100%.2f" + "}"
-    }.mkString("{", ",", "}")
-    val total = results.map(_.secs).filter(_ >= 0).sum
-    val totalFull = total + curation.map(_.secs).filter(_ >= 0).sum
-    val totalNeural = neural.map(_.secs).filter(_ >= 0).sum
-    val totalSelection = selection.map(_.secs).filter(_ >= 0).sum
-    val totalMedia = media.map(_.secs).filter(_ >= 0).sum
-    val totalTemporal = temporal.map(_.secs).filter(_ >= 0).sum
-    val totalSketch = sketch.map(_.secs).filter(_ >= 0).sum
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cpu":$cpus_,"iterations":$iters,"total_full":$totalFull,"total_neural":$totalNeural,"total_selection":$totalSelection,"total_media":$totalMedia,"total_temporal":$totalTemporal,"total_sketch":$totalSketch,"cold":$coldJson,"total_cold":$totalCold,"load":$loads,"load_start":$loadStart,"load_end":$loadEnd,"load_max":$loadMax,"reruns":$reruns,"scale10x":$scaleJson,"scale_len":$scaleLenJson,"sf":"$sfDir"}"""
-    // bench_out.json carries the FULL artifact (per-query cpu/load,
-    // rerun adjudications, both scale sections) — the round's committed
-    // record and what COVERAGE.md quotes
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), json)
-    // The DRIVER-facing line must fit the driver's 2000-char stdout
-    // tail together with sbt's trailing "[success] ..." line — r01–r10
-    // all landed "parsed": null because the full-precision line plus
-    // the sentinel copy never fit the window. Print ONE compact line
-    // (3-dp query values, no per-query cpu/load maps) LAST.
-    def f3(d: Double): String =
-      if (d < 0) "-1"
-      else String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
-    // existing cached-tier legs keep their names and values; cold legs
-    // are ADDED entries (driver contract: additions only)
-    val qsC = (all.map(r => "\"" + r.name + "\":" + f3(r.secs)) ++
-      cold.map { case (n, s) => "\"" + n + "\":" + f3(s) })
-      .mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qsC,"iterations":$iters,"total_full":${f3(totalFull)},"total_neural":${f3(totalNeural)},"total_selection":${f3(totalSelection)},"total_media":${f3(totalMedia)},"total_temporal":${f3(totalTemporal)},"total_sketch":${f3(totalSketch)},"total_cold":${f3(totalCold)},"load_start":$loadStart,"load_end":$loadEnd,"load_max":$loadMax,"detail":"bench_out.json","sf":"$sfDir"}"""
-    spark.stop()
-    // The compact JSON is the absolute last stdout line, BARE (r12
-    // verdict ask #2): sbt no longer decorates it — build.sbt sets
-    // outputStrategy := StdoutOutput for forked runs — and sbt's GC
-    // monitor [warn] line is disabled in .jvmopts, so only sbt's own
-    // "[success]" line follows inside the driver's 2000-char tail.
-    println(compact)
-    System.out.flush()
   }
 }

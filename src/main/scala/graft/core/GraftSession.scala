@@ -12,8 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   *  - `spark.sql.session.timeZone=UTC`: the oracle-parity contract — all
   *    timestamp columns are NTZ and DuckDB reads the same files naive.
-  *  - `spark.sql.adaptive.coalescePartitions.minPartitionSize` (default
-  *    64k, env `SPARK_GRAFT_MIN_PARTITION_SIZE`): AQE's byte-based
+  *  - `spark.sql.adaptive.coalescePartitions.minPartitionSize=64k`
+  *    (a caller may override it on the builder afterwards): AQE's byte-based
   *    coalescing is blind to CPU density — a grouped-panel kernel stage
   *    (PELT/ETS/DTW arrays: KBs of bytes, seconds of CPU) coalesces to a
   *    handful of partitions under the default 1m floor and strands most
@@ -29,6 +29,5 @@ object GraftSession {
     * master, shuffle partitions, memory, and UI themselves. */
   def withEngineDefaults(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
 }

@@ -63,20 +63,18 @@ object IO {
     // under co-tenant load. The floor keeps normalization exactly where
     // it pays: CPU-dense work over >=100k-row single-row-group files
     // (every sf0.1 bench table clears it; every sf0.001 table is under
-    // it). Env-overridable, size-based — not tuned to any core count.
+    // it). Size-based ([[ScanNormMinBytes]]) — not tuned to any core count.
     val parallelism = spark.sparkContext.defaultParallelism
     // scanParts is row-group-accurate (see effectiveScanUnits): a big
     // single-row-group file reports inflated split counts
     val scanBytes = df.queryExecution.analyzed.stats.sizeInBytes
-    val minBytes = BigInt(sys.env.getOrElse(
-      "SPARK_GRAFT_SCAN_NORM_MIN_BYTES", "131072"))
     val spreadKey = Map(
       "lineitem" -> "l_orderkey", "orders" -> "o_orderkey",
       "customer" -> "c_custkey", "supplier" -> "s_suppkey",
       "part" -> "p_partkey", "events" -> "event_id",
       "documents" -> "doc_id").get(name)
     spreadKey match {
-      case Some(k) if scanParts * 4 <= parallelism && scanBytes >= minBytes =>
+      case Some(k) if scanParts * 4 <= parallelism && scanBytes >= ScanNormMinBytes =>
         typed.repartition(NormalizedScanPartitions, col(k))
       case _ => typed
     }
@@ -192,6 +190,11 @@ object IO {
     * the constant only ever applies to pathological tiny inputs (the
     * predicate above), never to production multi-row-group data. */
   private val NormalizedScanPartitions = 32
+
+  /** Input-size floor for scan normalization (128 KiB): below it a
+    * single-task scan decodes in milliseconds and the normalizing
+    * exchange costs more than it buys. */
+  private val ScanNormMinBytes = BigInt(128 * 1024)
 
   def events(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "events")
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")

@@ -311,7 +311,7 @@ object Dedup {
     * incremental pattern: [[minhashSignatures]] once per ingest batch
     * (stored next to the corpus) + [[minhashLshIncremental]] per batch
     * — measured at the 100× probe: 25.5× wall for full recompute vs
-    * 12.7× with persisted signatures (SCALE100, MinhashDeepProbe). A
+    * 12.7× with persisted signatures (SCALE100.json; COVERAGE.md). A
     * one-line warning fires when the input's estimated size crosses
     * [[IncrementalHintBytes]], so the pattern is discoverable exactly
     * when it starts to matter.
@@ -330,9 +330,7 @@ object Dedup {
     val k = bands * rowsPerBand
     // auto-hint: estimated plan size past the threshold → point at the
     // incremental pattern (plan-time stats only; never triggers a job).
-    // -Dgraft.mh.noprobe switches it off — the A/B knob the r12 drift
-    // adjudication probe (tools/MinhashAbProbe) flips between runs.
-    if (!sys.props.get("graft.mh.noprobe").contains("true")) try {
+    try {
       val est = org.apache.spark.sql.GraftPlanBridge.analyzed(df)
         .stats.sizeInBytes
       if (est > IncrementalHintBytes)
@@ -351,35 +349,11 @@ object Dedup {
     // storage, recomputed if evicted. Pipelines that run many dedup
     // passes in one session should persist signatures explicitly via
     // [[minhashSignatures]] instead (the incremental-state pattern).
-    // -Dgraft.mh.nocache drops the in-plan cache (A/B knob: the triple
-    // use then recomputes the signature pass per consumer)
-    val sigs0 = df
-      .select(col(idCol).as("__id"),
-        minhashSigFromText(col(textCol), shingleN, k).as("__sig"))
-    val sigs =
-      if (sys.props.get("graft.mh.nocache").contains("true")) sigs0
-      else sigs0.cache()
-    val banded0 = sigs.select(col("__id"), posexplode(
+    val sigs = minhashSignatures(df, textCol, idCol, shingleN, k).cache()
+    val banded = capBuckets(sigs.select(col("__id"), posexplode(
       array((0 until bands).map(b =>
         packedBandKey(col("__sig"), b, rowsPerBand)): _*))
-      .as(Seq("__band", "__bk")))
-    val banded = maxBucketSize match {
-      case None => banded0
-      case Some(cap) =>
-        // one row per oversized bucket → one executor-side log line each,
-        // so capped recall loss is visible, not silent
-        val logDrop = udf((band: Int, sz: Long) => {
-          System.err.println(
-            s"[graft.Dedup.minhashLsh] dropping band=$band bucket of $sz docs (cap=$cap)")
-          true
-        })
-        val oversized = banded0.groupBy(col("__band"), col("__bk"))
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") > cap)
-          .filter(logDrop(col("__band"), col("__bsz")))
-          .select(col("__band"), col("__bk"))
-        banded0.join(oversized, Seq("__band", "__bk"), "left_anti")
-    }
+      .as(Seq("__band", "__bk"))), maxBucketSize, "minhashLsh")
     val pairs = banded.as("a").join(banded.as("b"),
         col("a.__band") === col("b.__band") &&
         col("a.__bk") === col("b.__bk") &&
@@ -393,6 +367,27 @@ object Dedup {
           b => b)).cast("double") / lit(k.toDouble))
       .filter(col("jaccard_est") >= threshold)
     verified.select(col("id_a"), col("id_b"), col("jaccard_est"))
+  }
+
+  /** The LSH skew valve: drop every `(__band, __bk)` bucket of `banded`
+    * holding more than `cap` rows (None keeps all). One row per oversized
+    * bucket → one executor-side log line each, prefixed with `op`, so
+    * capped recall loss is visible, not silent. */
+  private def capBuckets(banded: DataFrame, cap: Option[Int],
+      op: String): DataFrame = cap match {
+    case None => banded
+    case Some(c) =>
+      val logDrop = udf((band: Int, sz: Long) => {
+        System.err.println(
+          s"[graft.Dedup.$op] dropping band=$band bucket of $sz docs (cap=$c)")
+        true
+      })
+      val oversized = banded.groupBy(col("__band"), col("__bk"))
+        .agg(count(lit(1)).as("__bsz"))
+        .filter(col("__bsz") > c)
+        .filter(logDrop(col("__band"), col("__bsz")))
+        .select(col("__band"), col("__bk"))
+      banded.join(oversized, Seq("__band", "__bk"), "left_anti")
   }
 
   /** MinHash signature table `(__id, __sig)` for [[minhashLshIncremental]]:
@@ -428,23 +423,9 @@ object Dedup {
         array((0 until bands).map(b =>
           packedBandKey(col("__sig"), b, rowsPerBand)): _*))
         .as(Seq("__band", "__bk")))
-    val bAll0 = bandify(sigsNew, isNew = true)
-      .unionByName(bandify(sigsOld, isNew = false))
-    val bAll = maxBucketSize match {
-      case None => bAll0
-      case Some(cap) =>
-        val logDrop = udf((band: Int, sz: Long) => {
-          System.err.println(s"[graft.Dedup.minhashLshIncremental] dropping " +
-            s"band=$band bucket of $sz docs (cap=$cap)")
-          true
-        })
-        val oversized = bAll0.groupBy(col("__band"), col("__bk"))
-          .agg(count(lit(1)).as("__bsz"))
-          .filter(col("__bsz") > cap)
-          .filter(logDrop(col("__band"), col("__bsz")))
-          .select(col("__band"), col("__bk"))
-        bAll0.join(oversized, Seq("__band", "__bk"), "left_anti")
-    }
+    val bAll = capBuckets(bandify(sigsNew, isNew = true)
+      .unionByName(bandify(sigsOld, isNew = false)), maxBucketSize,
+      "minhashLshIncremental")
     // a-side = new rows only; b-side = everything. New×new pairs order by
     // id (each counted once); new×old pairs normalize via least/greatest.
     val pairs = bAll.filter(col("__isnew")).as("a").join(bAll.as("b"),

@@ -31,12 +31,12 @@ object Similarity {
     * BYTES-PROPORTIONAL width (~256 KB of estimated input per task,
     * capped at the session parallelism), NOT IO.table's fixed 32: every
     * Spark task carries a fixed CPU cost (hash-aggregate page
-    * allocation, per-task codegen instances — measured 40–120 ms/task on
-    * this box, tools/SpreadProbe: an 8 k-row aggregate cost 0.8 cpu-s at
-    * 1 partition, 1.35 at 8, 5.8 at 32), so a width the data cannot
-    * amortize burns more CPU than the kernel it parallelizes. IO.table
-    * keeps its fixed width because its consumers include
-    * layout-SENSITIVE float folds; these exact ops do not, so the width
+    * allocation, per-task codegen instances — measured 40–120 ms/task,
+    * OPTIMIZATION_r13.md change #6, the spread: an 8 k-row aggregate
+    * cost 0.8 cpu-s at 1 partition, 1.35 at 8, 5.8 at 32), so a width
+    * the data cannot amortize burns more CPU than the kernel it
+    * parallelizes. IO.table keeps its fixed width because its consumers
+    * include layout-SENSITIVE float folds; these exact ops do not, so the width
     * is free to follow the data. NEVER apply this to a frame that feeds
     * a sampled fit. */
   private def spread(df: DataFrame, key: String): DataFrame = {

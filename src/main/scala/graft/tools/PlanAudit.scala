@@ -1,23 +1,24 @@
 package graft.tools
 
-import graft.core.{IO, PanelCols}
+import graft.BenchLegs
+import graft.BenchLegs.{PC, leg}
+import graft.core.IO
 import graft.ops._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Physical-plan audit: prints `explain(formatted)` extracts for the
   * engine's core plan shapes so shuffle-count / pushdown / broadcast
   * regressions are visible, and exits non-zero when a plan loses
   * whole-stage codegen entirely (the regression this audit exists to
-  * catch). Run: sbt "runMain graft.tools.PlanAudit". */
+  * catch). Where a plan is also a bench leg, the body comes from
+  * [[graft.BenchLegs]]. Run: sbt "runMain graft.tools.PlanAudit [sfDir]". */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = BenchLegs.session(4)
     spark.sparkContext.setLogLevel("ERROR")
-    implicit val pc: PanelCols = PanelCols("user_id", "ts", "value", Seq("event_id"))
+    val ctx = new BenchLegs.Ctx(spark, dir)
+    def docs = IO.documents(spark, dir)
 
     var failures = List.empty[String]
     def audit(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
@@ -48,10 +49,10 @@ object PlanAudit {
       Features.rollingFeatures(Features.lagFeatures(ev, Seq(1, 7)), Seq(7))
         .select("user_id", "ts", "value_lag_1", "value_rolling_mean_7"))
     audit("q1_agg (expect partial agg before exchange)",
-      graft.SparkEntry.queries("q1_agg")(spark, dir))
+      leg("q1_agg").body(ctx))
     audit("lag only 2 cols (expect 3-col ReadSchema)",
       ev.select(col("user_id"), col("ts"),
-        lag(col("value"), 1).over(pc.w).as("l1")))
+        lag(col("value"), 1).over(PC.w).as("l1")))
     audit("emb_knn (expect broadcast join)",
       graft.SparkEntry.queries("emb_knn_brute")(spark, dir))
     audit("pairwise dtw (expect 1 shuffle + broadcast self-join)",
@@ -73,34 +74,31 @@ object PlanAudit {
       Decomposition.mstlGrouped(ev, Seq(12, 24)))
     audit("mstl row-level oracle twin (per-pass window + phase-mean join — oracle-replayable, not the production path)",
       Decomposition.mstl(ev, Seq(12, 24)))
-    audit("dedup groups (expect edge-list joins only, corpus never shuffles)", {
-      val docs = IO.documents(spark, dir).select("doc_id", "text")
-      Dedup.duplicateGroups(Dedup.minhashLsh(docs, threshold = 0.5))
-    })
+    audit("dedup groups (expect edge-list joins only, corpus never shuffles)",
+      Dedup.duplicateGroups(
+        BenchLegs.minhashLsh.body(docs.select("doc_id", "text"))))
     audit("decontaminate (expect BENCH side broadcast, corpus never shuffles text)", {
-      val docs = IO.documents(spark, dir)
-      Decontam.ngramOverlap(docs, docs.filter(col("doc_id") % 20 === 0), n = 5)
+      val d = docs
+      Decontam.ngramOverlap(d, d.filter(col("doc_id") % 20 === 0), n = 5)
     })
     audit("pii scrub (expect scan-only: 0 exchanges, pure regexp project)",
-      TextOps.piiMetrics(IO.documents(spark, dir))
+      TextOps.piiMetrics(docs)
         .select("doc_id", "n_emails", "pii_flag"))
-    audit("semdedup (expect cell-keyed self-join, no all-pairs)", {
-      val emb = IO.embeddings(spark, dir).select("vec_id", "embedding")
-      Similarity.semDedup(emb, Similarity.ivfCentroids(emb), threshold = 0.95)
-    })
+    audit("semdedup (expect cell-keyed self-join, no all-pairs)",
+      leg("semdedup").body(ctx))
     audit("pca project (expect scan + broadcast map, ZERO exchanges)", {
       val emb = IO.embeddings(spark, dir)
       Embeddings.pcaProject(emb, Embeddings.pcaFit(emb, k = 4))
     })
     audit("unigram logprob (expect broadcast vocab join, combined agg)",
-      TextOps.unigramLogProb(IO.documents(spark, dir), vocabSize = 500))
+      leg("unigram_logprob").body(ctx))
     audit("dup ngram coverage (expect hashes shuffle, never text)",
-      Dedup.dupNgramCoverage(IO.documents(spark, dir).select("doc_id", "text")))
+      Dedup.dupNgramCoverage(docs.select("doc_id", "text")))
     audit("pack plan (expect ONE exchange on shard key)",
-      Packing.packPlan(IO.documents(spark, dir), seqLen = 128, nShards = 8))
+      leg("pack_plan").body(ctx))
     audit("pack execute (expect ONE exchange: (shard,seq) agg reuses the " +
       "shard window partitioning; slices, never per-token rows)",
-      Packing.executePack(IO.documents(spark, dir), seqLen = 128, nShards = 8))
+      BenchLegs.packExecute.body(docs))
     audit("mmr rerank (expect ONE grouped exchange; greedy inside the group)", {
       val emb = IO.embeddings(spark, dir)
       val topk = Similarity.bruteForceTopK(emb,
@@ -112,7 +110,7 @@ object PlanAudit {
         k = 5)
     })
     audit("temperature sample (expect broadcast plan join + group rank)",
-      Sampling.temperatureSample(IO.documents(spark, dir), "source",
+      Sampling.temperatureSample(docs, "source",
         "doc_id", budget = 300, alpha = 0.5))
     // round-8 neural tier: fit on driver, inference must stay a single
     // grouped exchange + broadcast-weights narrow map
@@ -136,25 +134,24 @@ object PlanAudit {
       Adapters.rolloutNaive(ev))
     // round-9 curation additions
     audit("line dedup (expect hash-keyed freq shuffle; boilerplate set filtered BEFORE join-back)",
-      Dedup.lineDedup(IO.documents(spark, dir)))
+      BenchLegs.lineDedup.body(docs))
     audit("kn perplexity (expect bounded model aggs + broadcast score join; histogram terciles, no corpus sort)",
-      TextOps.knPerplexity(IO.documents(spark, dir), buckets = 1024))
+      BenchLegs.knPerplexity.body(docs))
     audit("prototype prune (expect narrow broadcast-centroid map + <=bins-row histogram)", {
       val emb = IO.embeddings(spark, dir).select("vec_id", "embedding")
-      Similarity.prototypePrune(emb, Similarity.ivfCentroids(emb), keepFrac = 0.7)
+      BenchLegs.prototypePrune(emb, Similarity.ivfCentroids(emb))
     })
     audit("dsir weights (expect <=buckets-row model shuffle, broadcast llr join)",
-      Selection.dsirWeights(IO.documents(spark, dir), col("lang") === "en",
-        buckets = 64))
+      BenchLegs.dsirWeights.body(docs))
     audit("span dedup (expect hash-keyed window shuffle + doc-keyed flag join; text never in the freq shuffle)",
-      Dedup.spanDedup(IO.documents(spark, dir)))
+      BenchLegs.spanDedup.body(docs))
     audit("normalize text (expect scan-only: 0 exchanges, regex project)",
-      TextOps.normalizeText(IO.documents(spark, dir))
+      TextOps.normalizeText(docs)
         .select("doc_id", "norm_text"))
     // round-9 codec tier: real decode must stay a zero-exchange narrow map
     audit("media funnel (expect scan-only: 0 exchanges, decode UDF project)",
       Multimodal.mediaFunnel(
-        IO.documents(spark, dir).withColumn("payload", encode(col("text"), "UTF-8")),
+        docs.withColumn("payload", encode(col("text"), "UTF-8")),
         "payload").select("doc_id", "media_type", "keep"))
     // engine-wide invariant (r9): no WindowExec may run with an empty
     // partition spec — every single-partition window either got a real
@@ -166,36 +163,19 @@ object PlanAudit {
           Seq(Array.tabulate(72)(i => ((id * 7 + i) % 256).toByte)))
       }
       Multimodal.extractFrames(
-        IO.documents(spark, dir).limit(50)
+        docs.limit(50)
           .withColumn("video", mkVid(col("doc_id"))),
         "video", stride = 1)
     })
     // round-9 temporal & layout tier
-    audit("asof join (expect per-side hash exchanges + AsofJoin merge, ZERO join operators)", {
-      val l = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "event_id", "ts")
-      val r = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("value").as("rv"))
-      TemporalJoins.asofJoin(l, r, Seq("user_id"), "ts", "ts", Seq("rv"))
-    })
-    audit("range join (expect equi join on (key,bucket) — no BroadcastNestedLoopJoin)", {
-      val err = ev.filter(col("event_type") === "error")
-        .select(col("user_id"), col("event_id").as("error_id"),
-          col("ts").as("w_start"), (col("ts") + expr("INTERVAL 1 DAY")).as("w_end"))
-      val clk = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"), col("ts"))
-      TemporalJoins.rangeJoin(clk, err, Seq("user_id"), "ts",
-        "w_start", "w_end", bucketUs = 6L * 3600 * 1000000)
-    })
+    audit("asof join (expect per-side hash exchanges + AsofJoin merge, ZERO join operators)",
+      leg("asof_join").body(ctx))
+    audit("range join (expect equi join on (key,bucket) — no BroadcastNestedLoopJoin)",
+      leg("range_join").body(ctx))
     audit("sessionize summary (expect grouped window + reused partitioning for the agg)",
-      TemporalJoins.sessionize(ev, Seq("user_id"), "ts",
-          gapUs = 6L * 3600 * 1000000, tieBreak = Seq("event_id"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(count(lit(1)).as("n_events")))
+      leg("sessionize").body(ctx))
     audit("zorder rewrite (expect ONE range exchange + in-partition sort, codegen key)",
-      Layout.zorderBy(ev.withColumn("hr",
-          expr("(unix_micros(cast(ts as timestamp)) div 3600000000) % 4096")),
-        Seq("user_id", "hr"), numFiles = 4, bits = 12))
+      leg("zorder_layout").body(ctx))
     // round-9 segmentation ops: the lag/segment fold lives INSIDE the
     // decode UDF (frames of one file come from one row) — these plans
     // must stay zero-exchange narrow maps, never a per-file window
@@ -205,7 +185,7 @@ object PlanAudit {
           Array.tabulate(72)(i => ((id * 7 + f * 50 + i) % 256).toByte)))
       }
       Multimodal.sceneChanges(
-        IO.documents(spark, dir).filter(col("doc_id") < 50)
+        docs.filter(col("doc_id") < 50)
           .withColumn("video", mkVid(col("doc_id"))), "video", 30.0)
     })
     audit("audio segments (expect ZERO exchanges: fold inside the decode walk)", {
@@ -214,23 +194,23 @@ object PlanAudit {
           Array.tabulate(600)(i => if ((i / 256) % 2 == 0) 0 else 12000))
       }
       Multimodal.audioSegments(
-        IO.documents(spark, dir).filter(col("doc_id") < 50)
+        docs.filter(col("doc_id") < 50)
           .withColumn("audio", mkWav(col("doc_id"))), "audio", 0.05)
     })
     audit("pretokenize (expect scan-only: 0 exchanges, regex project)",
-      TextOps.preTokenize(IO.documents(spark, dir))
+      TextOps.preTokenize(docs)
         .select(col("doc_id"), size(col("pre_tokens")).as("n")))
     audit("html strip (expect scan-only: 0 exchanges, regex project)",
-      TextOps.htmlStrip(IO.documents(spark, dir)).select("doc_id", "text"))
+      TextOps.htmlStrip(docs).select("doc_id", "text"))
     // round-9 foundation-adapter + sketch tier
     audit("chronos embed (expect scale window + ONE hash agg, no sort, no UDF)",
       graft.ops.Foundation.chronosEmbed(ev, dim = 4))
     audit("moment embed (expect window + two chained hash aggs, dim doubles of state)",
       graft.ops.Foundation.momentEmbed(ev, dim = 4, patchLen = 8))
     audit("cms sketch (expect ONE agg exchange bounded at depth*width rows)",
-      Sketches.cmsSketch(IO.documents(spark, dir)))
+      BenchLegs.cmsSketch.body(docs))
     audit("hll distinct sketch (expect register agg exchanges bounded at groups*2^b rows)",
-      Sketches.hllDistinctSketch(IO.documents(spark, dir)))
+      BenchLegs.hllSketch.body(docs))
 
     // r11: the distributed long-series matrix profile — the block
     // explode must repartition on (id, block) so one series' diagonal
