@@ -5,6 +5,7 @@ import graft.core.IO
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark main — implements the BASELINE.md suite: the reference's
   * harness shapes (pairwise DTW, PELT, ETS panels — bench_kmedoids.py /
@@ -29,9 +30,10 @@ import org.apache.spark.sql.functions._
   *                            leg to $OPT_EXPLAIN_DIR/<leg>.txt
   *
   * Methodology: every timed query materializes through the `noop` sink —
-  * `count()` would let Catalyst prune exactly the columns under test. A
-  * warmup pass absorbs JVM/codegen first-run cost so numbers reflect
-  * steady-state throughput. Every draw is kept in `bench_out.json`.
+  * `count()` would let Catalyst prune exactly the columns under test.
+  * One untimed run of each leg, just before its draws, absorbs that
+  * leg's JVM/codegen first-run cost so numbers reflect steady-state
+  * throughput. Every draw is kept in `bench_out.json`.
   */
 object Bench {
 
@@ -128,9 +130,6 @@ object Bench {
 
     val ctx = new Ctx(spark, sfDir)
     ctx.prepare()
-    // warmup: absorb JIT/codegen first-run cost on a small slice
-    mat(Features.lagFeatures(ctx.events.limit(1000), Seq(1)))
-    mat(ForecastBaselines.ses(ctx.events.limit(2000), h = 2))
 
     explainDir.foreach { d =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
@@ -143,8 +142,12 @@ object Bench {
     }
 
     val loadStart = loadAvg()
-    val all: Seq[(Leg, Draws)] =
-      legs.map(leg => leg -> draws(leg.name, iters, () => mat(leg.body(ctx))))
+    val all: Seq[(Leg, Draws)] = legs.map { leg =>
+      // untimed warm-up of this leg's own codegen and JIT paths; a leg
+      // that fails here fails (and is reported) in its draws below
+      try mat(leg.body(ctx)) catch { case NonFatal(_) => () }
+      leg -> draws(leg.name, iters, () => mat(leg.body(ctx)))
+    }
 
     val scaleProofOn = subset.isEmpty &&
       sys.env.getOrElse("SPARK_GRAFT_SCALE_PROOF", "1") == "1"

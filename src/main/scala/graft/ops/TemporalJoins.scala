@@ -1,6 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
@@ -19,8 +21,6 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *    key is handled when the query runs: the query-stage rule
   *    [[graft.plans.SplitSkewedTemporalJoin]] splits a skewed left
   *    shuffle partition under Spark's `skewJoin` thresholds.
-  *    [[asofJoinSalted]] is the explicit, eager tool for a key hot on
-  *    both sides.
   *  - '''rangeJoin''': intervals explode into fixed-width time buckets and
   *    the join becomes an equi-join on (by, bucket) + exact residual
   *    filter — the classic bucketed range join. Each (left, right) pair
@@ -39,20 +39,28 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   */
 object TemporalJoins {
 
-  /** The `_right`-suffix collision rename all the two-sided joins
-    * share: right columns (except the `by` keys) colliding with a left
-    * name are renamed `c_right`. Returns the renamed frame and the
-    * old-name → emitted-name mapping. ONE definition so the bucketed
-    * and native forms cannot drift. */
+  /** The `_right`-suffix rule every two-sided join shares: a right
+    * column whose name collides with one of the `taken` output names
+    * (the left columns, plus the as-of `matchedTime`) is emitted as
+    * `c_right`. Collision follows the session's resolution rules: left
+    * `Val` vs right `val` IS ambiguous under the default
+    * case-insensitive resolution, so it must get the rename. ONE
+    * definition so the bucketed and native forms cannot drift. */
+  private def rightOutName(spark: org.apache.spark.sql.SparkSession,
+      taken: Seq[String]): String => String = {
+    val eq = nameEq(spark)
+    c => if (taken.exists(eq(_, c))) c + "_right" else c
+  }
+
+  /** [[rightOutName]] applied to a right frame for the bucketed joins:
+    * its colliding columns (except the `by` keys) are renamed. Returns
+    * the renamed frame and the old-name → emitted-name mapping. */
   private def renameCollisions(left: DataFrame, right: DataFrame,
       by: Seq[String]): (DataFrame, String => String) = {
-    // collision detection must follow the session's resolution rules:
-    // left `Val` vs right `val` IS ambiguous under the default
-    // case-insensitive resolution, so it must get the `_right` rename
     val eq = nameEq(left.sparkSession)
-    val renames = right.columns.filter(c =>
-      !by.exists(eq(_, c)) && left.columns.exists(eq(_, c)))
-      .map(c => c -> (c + "_right"))
+    val out = rightOutName(left.sparkSession, left.columns.toSeq)
+    val renames = right.columns.filterNot(c => by.exists(eq(_, c)))
+      .map(c => c -> out(c)).filter { case (from, to) => from != to }
     val rRenamed = renames.foldLeft(right) { case (d, (from, to)) =>
       d.withColumnRenamed(from, to)
     }
@@ -106,8 +114,8 @@ object TemporalJoins {
 
   // ── shared plumbing for the whole-operator tier (asofJoinNative /
   // rangeJoinNative): name resolution under the session's
-  // case-sensitivity, and merge-key derivation (tightest-common-type
-  // cast + float NaN/-0.0 normalization) ──────────────────────────────
+  // case-sensitivity, merge-key derivation (tightest-common-type cast +
+  // float NaN/-0.0 normalization) and the one side preparation ────────
 
   /** Name equality under the session's `spark.sql.caseSensitive` —
     * the comparison every collision/rename decision must use, because
@@ -123,10 +131,8 @@ object TemporalJoins {
     * says otherwise), returning the ACTUAL column name. */
   private def resolveName(spark: org.apache.spark.sql.SparkSession,
       df: DataFrame, name: String, side: String): String = {
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    df.columns.find(c =>
-      if (caseSensitive) c == name else c.equalsIgnoreCase(name))
+    val eq = nameEq(spark)
+    df.columns.find(eq(_, name))
       .getOrElse(throw new IllegalArgumentException(
         s"temporal native join: no column $name on the $side side"))
   }
@@ -175,6 +181,88 @@ object TemporalJoins {
         keyTypes(i) == DoubleType || keyTypes(i) == FloatType)
   }
 
+  /** Both children of a native temporal join node, as [[nativeSides]]
+    * prepares them: `lTime` is the left `__ltu` (epoch µs), `rTimes` the
+    * right time columns in the order given, `payload` the carried right
+    * attributes and `payloadOut` their output attributes under
+    * `outNames` (the [[rightOutName]] rule). */
+  private final case class NativeSides(lChild: LogicalPlan,
+      rChild: LogicalPlan, lKeys: Seq[Attribute], rKeys: Seq[Attribute],
+      lTime: Attribute, rTimes: Seq[Attribute], payload: Seq[Attribute],
+      payloadOut: Seq[Attribute], outNames: Seq[String])
+
+  /** The side preparation [[asofJoinNative]] and [[rangeJoinNative]]
+    * share. Resolves `by`, `leftTime` and `rightCols` under the
+    * session's case rules, rejects reserved names and duplicate payload
+    * columns, and derives the merge keys (tightest common type,
+    * NaN/-0.0-normalized floats). The left frame gains `__ltu` and any
+    * derived key `__gk<i>`; the right side is projected to its merge
+    * keys, the `rightTimes` (alias → expression over `right`) and the
+    * payload, under fresh expression ids. `taken` lists output names
+    * besides the left columns that a payload column must not reuse. */
+  private def nativeSides(op: String, left: DataFrame, right: DataFrame,
+      by: Seq[String], leftTime: String, rightTimes: Seq[(String, Column)],
+      rightCols: Seq[String], taken: Seq[String]): NativeSides = {
+    val spark = left.sparkSession
+    graft.plans.GraftPlanning.ensure(spark)
+
+    val byL = by.map(resolveName(spark, left, _, "left"))
+    val byR = by.map(resolveName(spark, right, _, "right"))
+    val lTimeN = resolveName(spark, left, leftTime, "left")
+    val payloadN = rightCols.map(resolveName(spark, right, _, "right"))
+
+    val keyNames = by.indices.map(i => s"__gk$i")
+    val reserved = ("__ltu" +: rightTimes.map(_._1)) ++ keyNames
+    val eq = nameEq(spark)
+    require(!(left.columns.toSeq ++ payloadN)
+      .exists(c => reserved.exists(eq(_, c))),
+      s"$op: column names ${reserved.mkString(", ")} are reserved")
+    // a duplicated payload column would otherwise surface later as an
+    // opaque ambiguous-reference AnalysisException from the final select
+    require(payloadN.distinct.size == payloadN.size,
+      s"$op: duplicate right columns: ${
+        payloadN.diff(payloadN.distinct).distinct.mkString(", ")}")
+    val outNames =
+      payloadN.map(rightOutName(spark, left.columns.toSeq ++ taken))
+
+    val keyTypes = commonKeyTypes(left, right, byL, byR, by)
+    val lDerived = leftKeyDerived(left, byL, keyTypes)
+
+    val lPrep = by.indices.foldLeft(
+      left.withColumn("__ltu", micros(left, lTimeN))) { (d, i) =>
+      if (lDerived(i))
+        d.withColumn(keyNames(i), mergeKeyCol(byL(i), keyTypes(i)))
+      else d
+    }
+    val rPrep = right.select(
+      (by.indices.map(i =>
+        mergeKeyCol(byR(i), keyTypes(i)).as(keyNames(i))) ++
+        rightTimes.map { case (alias, c) => c.as(alias) }) ++
+        payloadN.map(col): _*)
+    val lChild = GraftPlanBridge.analyzed(lPrep)
+    // fresh exprIds on the right side so a self-join never aliases the
+    // same attribute into both children of the node
+    val rChild0 = GraftPlanBridge.analyzed(rPrep)
+    val rChild = Project(rChild0.output.map(a => Alias(a, a.name)()), rChild0)
+
+    def attr(out: Seq[Attribute], name: String): Attribute =
+      out.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(s"$op: no column $name"))
+    val rOut = rChild.output
+    val payload = payloadN.map(attr(rOut, _))
+    NativeSides(lChild, rChild,
+      lKeys = by.indices.map(i =>
+        attr(lChild.output, if (lDerived(i)) keyNames(i) else byL(i))),
+      rKeys = keyNames.map(attr(rOut, _)),
+      lTime = attr(lChild.output, "__ltu"),
+      rTimes = rightTimes.map(t => attr(rOut, t._1)),
+      payload = payload,
+      payloadOut = payload.zip(outNames).map { case (a, o) =>
+        AttributeReference(o, a.dataType, nullable = true)()
+      },
+      outNames = outNames)
+  }
+
   /** The as-of join ([[asofJoin]]'s semantics) as a whole-operator
     * Catalyst node: a [[graft.plans.AsofJoin]] logical node planned by
     * [[graft.plans.GraftStrategy]] into the sort-merge
@@ -190,7 +278,7 @@ object TemporalJoins {
     * [[graft.plans.SplitSkewedTemporalJoin]] splits it and replicates the
     * matching right partition (row-identical to the unsplit merge). A
     * key hot on BOTH sides still sorts its whole right partition in each
-    * split; [[asofJoinSalted]] is the explicit tool for that shape.
+    * split.
     *
     * Registers the strategy/rules on the live session (idempotent), so
     * it works whether or not the session loaded
@@ -209,9 +297,6 @@ object TemporalJoins {
                      toleranceUs: Option[Long] = None,
                      matchedTime: String = "asof_ts",
                      allowExactMatches: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.GraftPlanBridge
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
     require(by.nonEmpty,
       "asofJoinNative: empty `by` would single-partition the merge; supply keys")
     require(Seq("backward", "forward", "nearest").contains(direction),
@@ -221,254 +306,26 @@ object TemporalJoins {
       require(t >= 0, "asofJoinNative: negative tolerance"))
 
     val spark = left.sparkSession
-    graft.plans.GraftPlanning.ensure(spark)
-
-    val byL = by.map(resolveName(spark, left, _, "left"))
-    val byR = by.map(resolveName(spark, right, _, "right"))
-    val lTimeN = resolveName(spark, left, leftTime, "left")
-    val rTimeN = resolveName(spark, right, rightTime, "right")
-    val rColsN = rightCols.map(resolveName(spark, right, _, "right"))
-
-    val keyNames = by.indices.map(i => s"__gk$i")
-    val reserved = "__ltu" +: "__rt" +: "__rtu" +: keyNames
-    require(!(left.columns ++ rColsN).exists(reserved.contains),
-      s"asofJoinNative: column names ${reserved.mkString(", ")} are reserved")
-    val eq = nameEq(spark)
-    // a matchedTime that resolves against an existing left column (or a
-    // duplicated rightCols entry) would otherwise surface later as an
-    // opaque ambiguous-reference AnalysisException from the final select
-    require(!left.columns.exists(eq(_, matchedTime)),
+    // a matchedTime that resolves against an existing left column would
+    // otherwise surface later as an opaque ambiguous-reference
+    // AnalysisException from the final select
+    require(!left.columns.exists(nameEq(spark)(_, matchedTime)),
       s"asofJoinNative: matchedTime '$matchedTime' collides with a left " +
         "column; pass a different matchedTime")
-    require(rColsN.distinct.size == rColsN.size,
-      s"asofJoinNative: duplicate rightCols entries: ${
-        rColsN.diff(rColsN.distinct).distinct.mkString(", ")}")
-
-    val outNames = rColsN.map(c =>
-      if (left.columns.exists(eq(_, c)) || eq(c, matchedTime)) c + "_right"
-      else c)
-
-    val keyTypes = commonKeyTypes(left, right, byL, byR, by)
-    val lDerived = leftKeyDerived(left, byL, keyTypes)
-
-    val lPrep = by.indices.foldLeft(
-      left.withColumn("__ltu", micros(left, lTimeN))) { (d, i) =>
-      if (lDerived(i))
-        d.withColumn(keyNames(i), mergeKeyCol(byL(i), keyTypes(i)))
-      else d
-    }
-    val rPrep = right.select(
-      (by.indices.map(i =>
-        mergeKeyCol(byR(i), keyTypes(i)).as(keyNames(i))) :+
-        col(rTimeN).as("__rt") :+
-        micros(right, rTimeN).as("__rtu")) ++
-        rColsN.distinct.map(col): _*)
-    val lChild = GraftPlanBridge.analyzed(lPrep)
-    // fresh exprIds on the right side so a self-join never aliases the
-    // same attribute into both children of the node
-    val rChild0 = GraftPlanBridge.analyzed(rPrep)
-    val rChild = Project(rChild0.output.map(a => Alias(a, a.name)()), rChild0)
-
-    def attr(out: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-             name: String) =
-      out.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"asofJoinNative: no column $name"))
-    val rOut = rChild.output
-    val carryExprs = attr(rOut, "__rt") +: rColsN.map(attr(rOut, _))
-    val carryAttrs =
-      AttributeReference(matchedTime, attr(rOut, "__rt").dataType,
-        nullable = true)() +:
-        rColsN.zip(outNames).map { case (c, o) =>
-          AttributeReference(o, attr(rOut, c).dataType, nullable = true)()
-        }
-
-    val lKeyAttrs = by.indices.map(i =>
-      attr(lChild.output, if (lDerived(i)) keyNames(i) else byL(i)))
+    val rTimeN = resolveName(spark, right, rightTime, "right")
+    val sides = nativeSides("asofJoinNative", left, right, by, leftTime,
+      Seq("__rt" -> col(rTimeN), "__rtu" -> micros(right, rTimeN)),
+      rightCols, taken = Seq(matchedTime))
+    val Seq(rt, rtu) = sides.rTimes
     val node = graft.plans.AsofJoin(
-      lChild, rChild,
-      lKeyAttrs, keyNames.map(attr(rOut, _)),
-      attr(lChild.output, "__ltu"), attr(rOut, "__rtu"),
-      carryExprs, carryAttrs, direction, toleranceUs, allowExactMatches)
+      sides.lChild, sides.rChild, sides.lKeys, sides.rKeys, sides.lTime,
+      rtu, rt +: sides.payload,
+      AttributeReference(matchedTime, rt.dataType, nullable = true)() +:
+        sides.payloadOut,
+      direction, toleranceUs, allowExactMatches)
     GraftPlanBridge.ofRows(spark, node)
       .select((left.columns.toSeq :+ matchedTime).map(col) ++
-        outNames.map(col): _*)
-  }
-
-  /** Skew-resistant [[asofJoinNative]] for zipfian `by` keys, where one
-    * key holds a large share of BOTH sides. The default path's
-    * query-stage split ([[graft.plans.SplitSkewedTemporalJoin]]) cuts the
-    * hot LEFT partition but replicates the whole right partition into
-    * every split, so a key hot on both sides still sorts its full right
-    * share in each task. This explicit tool slices the hot key's TIME
-    * range on both sides instead.
-    *
-    * Starts Spark jobs while the DataFrame is built: the stats pass
-    * below (one `collect` of the key total and one `count` that caches
-    * the hot-key bounds). They run under the job description
-    * `graft asofJoinSalted: hot-key stats`.
-    *
-    * Shape: one map-side-combined stats pass over the key projections of
-    * both sides finds keys whose combined row share exceeds
-    * `hotKeyShare` (capped at `maxHotKeys`, null keys included). Cold
-    * keys run the plain native merge unchanged. Each hot key's time
-    * range `[min, max]` (from the same stats pass) is cut into
-    * `saltBuckets` equal-width slices and the merge re-keyed on
-    * `(by, slice)` — the hot key becomes `saltBuckets` independent
-    * tasks. Correctness across slice boundaries is restored by
-    * replicating boundary rows, NOT whole sides:
-    *
-    *  - backward/nearest: the rows of the last TWO distinct timestamps
-    *    per (key, slice) are replicated into every LATER slice. The
-    *    global at-or-before match of any probe is the last right row of
-    *    some earlier slice (nothing sits between it and the probe), and
-    *    strict mode's fallback is either the same slice's second-last
-    *    distinct timestamp or the last of an earlier one — both in the
-    *    replicated set. ≤ 2·saltBuckets tiny rows per (key, slice).
-    *  - forward/nearest: symmetric — the first two distinct timestamps
-    *    per (key, slice) replicate into every EARLIER slice (a probe's
-    *    at-or-after match in a later slice is that slice's head; equal
-    *    timestamps can never split across slices, so strictness never
-    *    reaches deeper than the second distinct timestamp).
-    *
-    * Equal-width slicing (not sampled quantiles) keeps the pre-pass one
-    * aggregation: for event-like data time is near-uniform, and a
-    * time-skewed key degrades toward the unsalted single task — never
-    * below it. Tolerance/exact-match/direction semantics are inherited
-    * bit-for-bit from the per-slice native merges (the candidate set
-    * per probe is provably identical to the global one). Output rows
-    * equal [[asofJoinNative]]'s on every input; output ORDER and
-    * partitioning do not (hot ∪ cold union) — re-sort downstream if
-    * order matters. With duplicate right (key, ts) rows the carried
-    * value is engine-arbitrary in both forms, same as [[asofJoin]].
-    *
-    * Reference surface: polars `join_asof` has no skew problem
-    * single-node; this is the distributed-engine counterpart knob. */
-  def asofJoinSalted(left: DataFrame, right: DataFrame, by: Seq[String],
-                     leftTime: String, rightTime: String,
-                     rightCols: Seq[String],
-                     direction: String = "backward",
-                     toleranceUs: Option[Long] = None,
-                     matchedTime: String = "asof_ts",
-                     allowExactMatches: Boolean = true,
-                     saltBuckets: Int = 32,
-                     hotKeyShare: Double = 0.05,
-                     maxHotKeys: Int = 64): DataFrame = {
-    require(saltBuckets >= 2, "asofJoinSalted: saltBuckets must be >= 2")
-    require(hotKeyShare > 0 && hotKeyShare <= 1,
-      "asofJoinSalted: hotKeyShare must be in (0, 1]")
-    require(maxHotKeys >= 1, "asofJoinSalted: maxHotKeys must be >= 1")
-    require(by.nonEmpty, "asofJoinSalted: empty `by`; supply keys")
-    val spark = left.sparkSession
-    val byL = by.map(resolveName(spark, left, _, "left"))
-    val byR = by.map(resolveName(spark, right, _, "right"))
-    val lTimeN = resolveName(spark, left, leftTime, "left")
-    val rTimeN = resolveName(spark, right, rightTime, "right")
-    val keyTypes = commonKeyTypes(left, right, byL, byR, by)
-    val B = saltBuckets.toLong
-    val helperNames = Seq("__gslice", "__gstu", "__gsdr", "__gscnt",
-      "__gsmn", "__gsmx", "__gsw") ++ by.indices.map(i => s"__gsk$i")
-    require(!(left.columns ++ right.columns).exists(helperNames.contains),
-      s"asofJoinSalted: column names ${helperNames.mkString(", ")} are reserved")
-
-    // ── stats pass: per-key combined count + time bounds, ONE shuffle
-    // (map-side combined; the aggregate is tiny — one row per key)
-    val lk = left.select(byL.indices.map(i =>
-      mergeKeyCol(byL(i), keyTypes(i)).as(s"__gsk$i")) :+
-      micros(left, lTimeN).as("__gstu"): _*)
-    val rk = right.select(byR.indices.map(i =>
-      mergeKeyCol(byR(i), keyTypes(i)).as(s"__gsk$i")) :+
-      micros(right, rTimeN).as("__gstu"): _*)
-    val stats = lk.unionByName(rk)
-      .groupBy(by.indices.map(i => col(s"__gsk$i")): _*)
-      .agg(count(lit(1)).as("__gscnt"), min("__gstu").as("__gsmn"),
-        max("__gstu").as("__gsmx"))
-      .persist()
-    val sc = spark.sparkContext
-    val prevDesc = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription("graft asofJoinSalted: hot-key stats")
-    val (bounds, nHot) = try {
-      val total = stats.agg(sum("__gscnt")).collect()(0).getLong(0)
-      val b = stats
-        .filter(col("__gscnt") >= lit(hotKeyShare * total) &&
-          col("__gsmn").isNotNull)
-        .orderBy(col("__gscnt").desc)
-        .limit(maxHotKeys)
-        .withColumn("__gsw",
-          greatest(lit(1L),
-            ceil((col("__gsmx") - col("__gsmn") + 1L) / lit(B.toDouble))
-              .cast("long")))
-        .cache()
-      (b, b.count())
-    } finally sc.setJobDescription(prevDesc)
-    stats.unpersist()
-    if (nHot == 0) {
-      bounds.unpersist()
-      return asofJoinNative(left, right, by, leftTime, rightTime,
-        rightCols, direction, toleranceUs, matchedTime, allowExactMatches)
-    }
-
-    // hot/cold split by broadcast (inner / anti) against the ≤ maxHotKeys
-    // bounds rows — null-safe so a hot NULL key is split out too
-    def hotCond(df: DataFrame, names: Seq[String]): Column =
-      by.indices.map(i =>
-        mergeKeyCol(names(i), keyTypes(i)) <=> col(s"__gsk$i"))
-        .reduce(_ && _)
-    val bcast = broadcast(bounds)
-    val leftHot = left.join(bcast, hotCond(left, byL), "inner")
-    val leftCold = left.join(bcast, hotCond(left, byL), "left_anti")
-    val rightHot = right.join(bcast, hotCond(right, byR), "inner")
-    val rightCold = right.join(bcast, hotCond(right, byR), "left_anti")
-
-    val boundCols = Seq("__gscnt", "__gsmn", "__gsmx", "__gsw") ++
-      by.indices.map(i => s"__gsk$i")
-    def sliceOf(tu: Column): Column =
-      least(lit(B - 1L), greatest(lit(0L),
-        floor((tu - col("__gsmn")) / col("__gsw").cast("double"))
-          .cast("long")))
-    val leftHotS = leftHot
-      .withColumn("__gslice", sliceOf(micros(left, lTimeN)))
-      .drop(boundCols: _*)
-
-    // right hot side: own slice + boundary-carry replication
-    val rHotBase = rightHot
-      .withColumn("__gstu", micros(right, rTimeN))
-      .filter(col("__gstu").isNotNull) // null-time right rows never match
-      .withColumn("__gslice", sliceOf(col("__gstu")))
-    val rPart = (byR.map(col) :+ col("__gslice"))
-    var rHotRep = rHotBase
-    if (direction != "forward") {
-      val wDesc = Window.partitionBy(rPart: _*).orderBy(col("__gstu").desc)
-      val lastTwo = rHotBase
-        .withColumn("__gsdr", dense_rank().over(wDesc))
-        .filter(col("__gsdr") <= 2).drop("__gsdr")
-        // sequence(a,b) with a>b counts DOWN in Spark — guard empty
-        .withColumn("__gslice",
-          explode(when(col("__gslice") < lit(B - 1L),
-            sequence(col("__gslice") + 1L, lit(B - 1L)))
-            .otherwise(array().cast("array<long>"))))
-      rHotRep = rHotRep.unionByName(lastTwo)
-    }
-    if (direction != "backward") {
-      val wAsc = Window.partitionBy(rPart: _*).orderBy(col("__gstu").asc)
-      val firstTwo = rHotBase
-        .withColumn("__gsdr", dense_rank().over(wAsc))
-        .filter(col("__gsdr") <= 2).drop("__gsdr")
-        .withColumn("__gslice",
-          explode(when(col("__gslice") > lit(0L),
-            sequence(lit(0L), col("__gslice") - 1L))
-            .otherwise(array().cast("array<long>"))))
-      rHotRep = rHotRep.unionByName(firstTwo)
-    }
-    val rightHotS = rHotRep.drop("__gstu").drop(boundCols: _*)
-
-    val cold = asofJoinNative(leftCold, rightCold, by, leftTime,
-      rightTime, rightCols, direction, toleranceUs, matchedTime,
-      allowExactMatches)
-    val hot = asofJoinNative(leftHotS, rightHotS, by :+ "__gslice",
-      leftTime, rightTime, rightCols, direction, toleranceUs,
-      matchedTime, allowExactMatches)
-      .drop("__gslice")
-    cold.unionByName(hot.select(cold.columns.map(col): _*))
+        sides.outNames.map(col): _*)
   }
 
   /** Feature-store point-in-time join: as-of join a spine (entity, time)
@@ -557,72 +414,26 @@ object TemporalJoins {
   def rangeJoinNative(left: DataFrame, right: DataFrame, by: Seq[String],
                       leftTime: String, startCol: String, endCol: String,
                       inclusiveEnd: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.GraftPlanBridge
-    import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
     require(by.nonEmpty,
       "rangeJoinNative: empty `by` would single-partition the merge; supply keys")
 
     val spark = left.sparkSession
-    graft.plans.GraftPlanning.ensure(spark)
-
-    val byL = by.map(resolveName(spark, left, _, "left"))
-    val byR = by.map(resolveName(spark, right, _, "right"))
-    val lTimeN = resolveName(spark, left, leftTime, "left")
-    val sColN = resolveName(spark, right, startCol, "right")
-    val eColN = resolveName(spark, right, endCol, "right")
+    val eq = nameEq(spark)
     // payload = every right column except the by keys (emitted once,
     // from the left side) — the composed rangeJoin's output contract
-    val payloadN = right.columns.toSeq.filterNot(byR.contains)
+    val payloadN = right.columns.toSeq.filterNot(c => by.exists(eq(_, c)))
     require(payloadN.nonEmpty, "rangeJoinNative: no right columns to carry")
-
-    val keyNames = by.indices.map(i => s"__gk$i")
-    val reserved = "__ltu" +: "__rsu" +: "__reu" +: keyNames
-    require(!(left.columns.toSeq ++ payloadN).exists(reserved.contains),
-      s"rangeJoinNative: column names ${reserved.mkString(", ")} are reserved")
-
-    val outNames = payloadN.map(c =>
-      if (left.columns.contains(c)) c + "_right" else c)
-
-    val keyTypes = commonKeyTypes(left, right, byL, byR, by)
-    val lDerived = leftKeyDerived(left, byL, keyTypes)
-
-    val lPrep = by.indices.foldLeft(
-      left.withColumn("__ltu", micros(left, lTimeN))) { (d, i) =>
-      if (lDerived(i))
-        d.withColumn(keyNames(i), mergeKeyCol(byL(i), keyTypes(i)))
-      else d
-    }
-    val rPrep = right.select(
-      (by.indices.map(i =>
-        mergeKeyCol(byR(i), keyTypes(i)).as(keyNames(i))) :+
-        micros(right, sColN).as("__rsu") :+
-        micros(right, eColN).as("__reu")) ++
-        payloadN.map(col): _*)
-    val lChild = GraftPlanBridge.analyzed(lPrep)
-    val rChild0 = GraftPlanBridge.analyzed(rPrep)
-    val rChild = Project(rChild0.output.map(a => Alias(a, a.name)()), rChild0)
-
-    def attr(out: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-             name: String) =
-      out.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(s"rangeJoinNative: no column $name"))
-    val rOut = rChild.output
-    val payloadExprs = payloadN.map(attr(rOut, _))
-    val payloadAttrs = payloadN.zip(outNames).map { case (c, o) =>
-      AttributeReference(o, attr(rOut, c).dataType, nullable = true)()
-    }
-    val lKeyAttrs = by.indices.map(i =>
-      attr(lChild.output, if (lDerived(i)) keyNames(i) else byL(i)))
-
+    def bound(c: String): Column =
+      micros(right, resolveName(spark, right, c, "right"))
+    val sides = nativeSides("rangeJoinNative", left, right, by, leftTime,
+      Seq("__rsu" -> bound(startCol), "__reu" -> bound(endCol)), payloadN,
+      taken = Nil)
+    val Seq(rsu, reu) = sides.rTimes
     val node = graft.plans.IntervalJoin(
-      lChild, rChild,
-      lKeyAttrs, keyNames.map(attr(rOut, _)),
-      attr(lChild.output, "__ltu"),
-      attr(rOut, "__rsu"), attr(rOut, "__reu"),
-      payloadExprs, payloadAttrs, inclusiveEnd)
+      sides.lChild, sides.rChild, sides.lKeys, sides.rKeys, sides.lTime,
+      rsu, reu, sides.payload, sides.payloadOut, inclusiveEnd)
     GraftPlanBridge.ofRows(spark, node)
-      .select(left.columns.toSeq.map(col) ++ outNames.map(col): _*)
+      .select(left.columns.toSeq.map(col) ++ sides.outNames.map(col): _*)
   }
 
   /** Interval-overlap join: pairs whose half-open intervals

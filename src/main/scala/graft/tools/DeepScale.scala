@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 /** Deep scale probe: times [[graft.BenchLegs.scaleLegs]] — the headline
   * curation operators and the temporal panel legs — at 1× vs N×
   * (default 100×) the sf corpus, the two-decade extension of Bench's 10×
-  * scale proof, plus three zipfian-skew as-of legs. Usage:
+  * scale proof, plus two zipfian-skew as-of legs. Usage:
   *
   * {{{ runMain graft.tools.DeepScale [sfDir] [factor] [leg,leg,...] }}}
   *
@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
   * character permutation per replica — collision-free at any factor, so
   * no replica aliases another into manufactured exact duplicates. */
 object DeepScale {
-
-  /** The replica cipher ([[graft.BenchLegs.perm]]). */
-  private[tools] def perm(chars: String, rep: Int): String =
-    BenchLegs.perm(chars, rep)
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -110,16 +106,14 @@ object DeepScale {
     // key, the rest across the normal key range — the as-of exchange's
     // hot-partition envelope MEASURED, not assumed, next to the uniform
     // asof_native leg (same total rows, same operator, only the key
-    // distribution differs). Three paths:
-    //  - asof_native_skew: the default path; SplitSkewedTemporalJoin
-    //    splits the hot left partition at query-stage time when it
-    //    clears Spark's spark.sql.adaptive.skewJoin.* thresholds (pass
-    //    lower ones as -D system properties to make a small factor
-    //    qualify);
+    // distribution differs). Two runs of the one as-of operator:
+    //  - asof_native_skew: SplitSkewedTemporalJoin splits the hot left
+    //    partition at query-stage time when it clears Spark's
+    //    spark.sql.adaptive.skewJoin.* thresholds (pass lower ones as -D
+    //    system properties to make a small factor qualify);
     //  - asof_skew_unsalted: the same call with
     //    spark.sql.adaptive.skewJoin.enabled=false, the raw single-task
-    //    envelope;
-    //  - asof_salted: the explicit asofJoinSalted time-slice path.
+    //    envelope.
     def zipfPanel(nSeries: Int, len: Int): DataFrame =
       spark.range(nSeries.toLong * len).select(
         when(pmod(xxhash64(col("id"), lit(7L)), lit(2)) === 0, lit(0L))
@@ -128,7 +122,7 @@ object DeepScale {
           lit(1704067200000000L)).cast("timestamp_ntz").as("ts"),
         (sin(col("id") % len / lit(6.0)) * 10.0 +
           pmod(xxhash64(col("id")), lit(1000)) / lit(1000.0)).as("value"))
-    val skewLegs = Seq("asof_native_skew", "asof_skew_unsalted", "asof_salted")
+    val skewLegs = Seq("asof_native_skew", "asof_skew_unsalted")
     if (skewLegs.exists(want)) {
       zipfPanel(1000, 1000).write.mode("overwrite").parquet(s"$dir/zipf1")
       zipfPanel(1000 * factor, 1000).write.mode("overwrite")
@@ -138,12 +132,8 @@ object DeepScale {
     lazy val zipfN = spark.read.parquet(s"$dir/zipfN")
     def skewLeg(name: String): Leg = {
       def run(p: DataFrame): DataFrame = { val (l, r) = asofSides(p)
-        if (name == "asof_salted")
-          TemporalJoins.asofJoinSalted(l, r, Seq("user_id"), "ts", "ts",
-            Seq("rv"))
-        else
-          TemporalJoins.asofJoinNative(l, r, Seq("user_id"), "ts", "ts",
-            Seq("rv")) }
+        TemporalJoins.asofJoinNative(l, r, Seq("user_id"), "ts", "ts",
+          Seq("rv")) }
       // the skew rule reads the conf while the query runs, so it stays
       // set for the whole leg
       val key = "spark.sql.adaptive.skewJoin.enabled"

@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a DataFrame starts no Spark job the caller did not ask for:
-  * the as-of joins (whose skew handling now waits for shuffle
-  * statistics at run time) and a re-read of an unchanged table through
-  * [[IO.table]] (whose schema and row-group count are memoized). Also
-  * pins the memo's invalidation and the row-group-aware scan width. */
+  * every public [[TemporalJoins]] op (the as-of joins' skew handling
+  * waits for shuffle statistics at run time) and a re-read of an
+  * unchanged table through [[IO.table]] (whose schema and row-group
+  * count are memoized). Also pins the memo's invalidation and the
+  * row-group-aware scan width. */
 class JobFreeBuildSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -52,6 +53,33 @@ class JobFreeBuildSpec extends AnyFunSuite {
       TemporalJoins.asofJoin(l, r, Seq("k"), "t", "t", Seq("rv"))
       TemporalJoins.asofJoinNative(l, r, Seq("k"), "t", "t", Seq("rv"),
         direction = "nearest")
+    }
+    assert(jobs === 0)
+  }
+
+  test("building every other public TemporalJoins op starts no job") {
+    val ev = spark.range(0L, 400000L).select(
+      (col("id") % 1000).as("k"),
+      timestamp_micros(col("id") * 1000000L).cast("timestamp_ntz").as("t"),
+      (col("id") * 0.5).as("v"))
+    val l = ev.filter(col("id") % 2 === 0).select("k", "t")
+    val r = ev.filter(col("id") % 2 === 1).select(col("k"), col("t"),
+      col("v").as("rv"))
+    val r2 = r.select(col("k"), col("t"), (col("rv") * 2.0).as("rv2"))
+    val iv = ev.filter(col("id") % 3 === 0).select(col("k"),
+      col("t").as("s"),
+      (col("t") + expr("INTERVAL 90 SECONDS")).as("e"), col("v").as("iv"))
+    val lIv = iv.select(col("k"), col("s").as("ls"), col("e").as("le"))
+    val hour = 3600L * 1000000L
+    val (_, jobs) = jobsDuring {
+      TemporalJoins.rangeJoin(l, iv, Seq("k"), "t", "s", "e", bucketUs = hour)
+      TemporalJoins.rangeJoinNative(l, iv, Seq("k"), "t", "s", "e")
+      TemporalJoins.overlapJoin(lIv, iv, Seq("k"), "ls", "le", "s", "e",
+        bucketUs = hour)
+      TemporalJoins.overlapJoinNative(lIv, iv, Seq("k"), "ls", "le", "s", "e")
+      TemporalJoins.sessionize(l, Seq("k"), "t", gapUs = 60L * 1000000L)
+      TemporalJoins.pointInTimeJoin(l, Seq("k"), "t",
+        Seq((r, "t", Seq("rv"), None), (r2, "t", Seq("rv2"), Some(hour))))
     }
     assert(jobs === 0)
   }

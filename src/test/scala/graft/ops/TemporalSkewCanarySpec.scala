@@ -15,8 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partition against its replicated right partition (lowered Spark
   * skewJoin thresholds make the KB-scale fixture qualify). A per-key
   * ORDERED scan is sequential per key in ANY engine (kdb's aj, polars'
-  * join_asof single-thread the key too); for a key hot on both sides
-  * the explicit valve is `asofJoinSalted`'s time slicing. */
+  * join_asof single-thread the key too). */
 class TemporalSkewCanarySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

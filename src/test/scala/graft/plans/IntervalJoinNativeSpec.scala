@@ -168,4 +168,48 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
     assert(!ij.left.output.exists(_.name == "wide_l"), s"wide_l not pruned:\n$opt")
     assert(!ij.payloadAttrs.exists(_.name == "wide_r"), "wide_r not pruned")
   }
+
+  test("case-differing right column still gets the _right rename") {
+    import spark.implicits._
+    val l = (1 to 10).map(i => (1L,
+      new Timestamp(1704067200000L + i * 1000L), i * 1.0))
+      .toDF("k", "t", "Val")
+    val r = Seq((1L, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"),
+      2.0)).toDF("k", "s", "e", "val")
+    // resolution is case-insensitive by default, so left Val vs right
+    // val IS ambiguous: both forms must emit val_right
+    val bucketed = TemporalJoins.rangeJoin(l, r, Seq("k"), "t", "s", "e",
+      bucketUs = 3600L * 1000000L)
+    val native = TemporalJoins.rangeJoinNative(l, r, Seq("k"), "t", "s", "e")
+    assert(native.columns.toSeq === Seq("k", "t", "Val", "s", "e", "val_right"))
+    assert(native.columns.toSeq === bucketed.columns.toSeq)
+    assert(canon(native) === canon(bucketed))
+    assert(native.select(col("Val"), col("val_right")).count() === 10)
+  }
+
+  test("mixed-width keys coerce to the common type (int left, long right)") {
+    import spark.implicits._
+    val l = Seq((5, ts("2024-01-01 10:00:00"), "a"),
+      (7, ts("2024-01-01 10:00:00"), "b")).toDF("k", "t", "lv")
+    val r = Seq(
+      (5L, ts("2024-01-01 09:00:00"), ts("2024-01-01 11:00:00"), 1.0),
+      (7L, ts("2024-01-01 09:30:00"), ts("2024-01-01 10:30:00"), 2.0))
+      .toDF("k", "w_start", "w_end", "rv")
+    val native = TemporalJoins.rangeJoinNative(l, r, Seq("k"), "t",
+      "w_start", "w_end").collect().map(x =>
+        x.getAs[String]("lv") -> x.getAs[Double]("rv")).toMap
+    assert(native === Map("a" -> 1.0, "b" -> 2.0),
+      "int-vs-long keys must hash/compare on the coerced common type")
+  }
+
+  test("reserved names are matched under the session's case rules") {
+    import spark.implicits._
+    val l = Seq((1L, ts("2024-01-01 00:30:00"), "p")).toDF("k", "t", "__LTU")
+    val r = Seq((1L, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"),
+      1L)).toDF("k", "w_start", "w_end", "iid")
+    val e = intercept[IllegalArgumentException] {
+      TemporalJoins.rangeJoinNative(l, r, Seq("k"), "t", "w_start", "w_end")
+    }
+    assert(e.getMessage.contains("reserved"), e.getMessage)
+  }
 }

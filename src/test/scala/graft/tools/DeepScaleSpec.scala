@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.BenchLegs
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The deep-scale fixture's correctness rests on its cipher family:
@@ -14,21 +15,21 @@ class DeepScaleSpec extends AnyFunSuite {
 
   test("perm is a bijection of its alphabet at every replica") {
     (0 until 200).foreach { r =>
-      val p = DeepScale.perm(Lower, r)
+      val p = BenchLegs.perm(Lower, r)
       assert(p.length == Lower.length && p.toSet == Lower.toSet,
         s"rep $r not a permutation: $p")
-      assert(DeepScale.perm(Digits, r).toSet == Digits.toSet)
+      assert(BenchLegs.perm(Digits, r).toSet == Digits.toSet)
     }
   }
 
   test("perm is identity at replica 0 and reproducible") {
-    assert(DeepScale.perm(Lower, 0) == Lower)
-    assert(DeepScale.perm(Lower, 7) == DeepScale.perm(Lower, 7))
+    assert(BenchLegs.perm(Lower, 0) == Lower)
+    assert(BenchLegs.perm(Lower, 7) == BenchLegs.perm(Lower, 7))
   }
 
   test("permutations are pairwise distinct far past the rotation cycle") {
     val ps = (0 until 200).map(r =>
-      DeepScale.perm(Lower, r) + DeepScale.perm(Digits, r))
+      BenchLegs.perm(Lower, r) + BenchLegs.perm(Digits, r))
     assert(ps.distinct.length == ps.length,
       "replica ciphers collide — fixture would manufacture exact dups")
   }
