@@ -27,13 +27,18 @@ import scala.util.control.NonFatal
   *   SPARK_GRAFT_BENCH_ITERS  draws per leg           (default 3, median reported)
   *   SPARK_GRAFT_SCALE_PROOF  0 skips the scale tiers (default 1)
   *   OPT_EXPLAIN_DIR          if set, write `explain(formatted)` of each
-  *                            leg to $OPT_EXPLAIN_DIR/<leg>.txt
+  *                            leg to $OPT_EXPLAIN_DIR/<leg>.txt, with the
+  *                            ids that shift with JVM history normalized
+  *                            ([[normalizePlanIds]]), so the dumps of two
+  *                            runs can be diffed
   *
   * Methodology: every timed query materializes through the `noop` sink —
   * `count()` would let Catalyst prune exactly the columns under test.
   * One untimed run of each leg, just before its draws, absorbs that
   * leg's JVM/codegen first-run cost so numbers reflect steady-state
-  * throughput. Every draw is kept in `bench_out.json`.
+  * throughput. Every draw is kept in `bench_out.json`, with the number of
+  * classes Spark's code generator compiled during it (`compiles`): 0 on a
+  * warm draw whose generated classes all stayed in the codegen cache.
   */
 object Bench {
 
@@ -47,9 +52,24 @@ object Bench {
       try src.mkString.trim.split("\\s+")(0).toDouble finally src.close()
     } catch { case _: Throwable => -1.0 }
 
-  /** One wall + CPU draw of `run`; (−1, −1) when it throws. */
-  private def timeOnce(name: String, run: () => Unit): (Double, Double) = {
+  /** Classes compiled by Spark's code generator so far in this JVM. */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Plan text with the ids that depend on what ran earlier in the JVM
+    * replaced by `n`: expression ids (`#12`), `plan_id=12`, RDD ids
+    * (`MapPartitionsRDD[299]`) and lambda variable ids (`lambda x_10`). */
+  private[graft] def normalizePlanIds(plan: String): String =
+    plan.replaceAll("#\\d+", "#n")
+      .replaceAll("plan_id=\\d+", "plan_id=n")
+      .replaceAll("(RDD)\\[\\d+\\]", "$1[n]")
+      .replaceAll("(lambda \\w+?_)\\d+", "$1n")
+
+  /** One wall + CPU draw of `run` and the classes compiled during it;
+    * wall and CPU are −1 when it throws. */
+  private def timeOnce(name: String, run: () => Unit): (Double, Double, Long) = {
     val c0 = BenchLegs.procCpuSecs()
+    val k0 = codegenCompiles()
     val t0 = System.nanoTime()
     val ok = try { run(); true } catch { case e: Throwable =>
       System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
@@ -59,12 +79,14 @@ object Bench {
       val c1 = BenchLegs.procCpuSecs()
       if (c0 >= 0 && c1 >= 0) c1 - c0 else -1.0
     }
-    if (ok) (wall, cpu) else (-1.0, -1.0)
+    val compiles = codegenCompiles() - k0
+    if (ok) (wall, cpu, compiles) else (-1.0, -1.0, compiles)
   }
 
   /** Every draw of one leg, in order; a failed draw is −1. */
   private final case class Draws(name: String, wall: Seq[Double],
-      cpu: Seq[Double], loadBefore: Double, loadAfter: Double) {
+      cpu: Seq[Double], compiles: Seq[Long], loadBefore: Double,
+      loadAfter: Double) {
     private val good = wall.indices.filter(wall(_) >= 0).sortBy(wall)
     /** Wall and CPU of the median draw (odd count → true median). */
     val (secs, cpuSecs) =
@@ -74,6 +96,7 @@ object Bench {
       val w = good.map(wall)
       "{\"wall\":" + wall.mkString("[", ",", "]") +
         ",\"cpu\":" + cpu.mkString("[", ",", "]") +
+        ",\"compiles\":" + compiles.mkString("[", ",", "]") +
         ",\"median\":" + secs +
         ",\"min\":" + (if (w.isEmpty) -1.0 else w.min) +
         ",\"max\":" + (if (w.isEmpty) -1.0 else w.max) + "}"
@@ -83,7 +106,7 @@ object Bench {
   private def draws(name: String, n: Int, run: () => Unit): Draws = {
     val lb = loadAvg()
     val ds = (1 to n).map(_ => timeOnce(name, run))
-    Draws(name, ds.map(_._1), ds.map(_._2), lb, loadAvg())
+    Draws(name, ds.map(_._1), ds.map(_._2), ds.map(_._3), lb, loadAvg())
   }
 
   /** The faster of two draws of a scale leg. */
@@ -97,15 +120,20 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // Median of N draws per query: a single draw can't distinguish a
-    // 1.5× run-to-run swing (shuffle-file reuse, GC, codegen cache) from
-    // a real regression. Odd N → true median element.
+    // 1.5× run-to-run swing from a real regression. Odd N → true median
+    // element. One measured cause of the swing is a draw that compiles
+    // generated classes again (its `compiles` in bench_out.json): at
+    // sf0.01, `hll_distinct` drew 0.16 s with 8 compiles against 0.09 s
+    // with none, while 42 of the 47 timed legs compiled nothing after
+    // their warm-up.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
     val explainDir = sys.env.get("OPT_EXPLAIN_DIR")
     val subset: Option[Seq[Leg]] = args.headOption.map(BenchLegs.select)
     val legs = subset.getOrElse(BenchLegs.timed)
-    // engine defaults (UTC, AQE coalesce floor) come from ONE shared
-    // source — graft.core.GraftSession — so the bench measures exactly
-    // the configuration Verify and library users run (r12 verdict #7)
+    // engine defaults (UTC, AQE coalesce floor, codegen cache size) come
+    // from ONE shared source — graft.core.GraftSession — so the bench
+    // measures exactly the configuration Verify and library users run
+    // (r12 verdict #7)
     val spark = BenchLegs.session(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -134,8 +162,8 @@ object Bench {
     explainDir.foreach { d =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d))
       legs.foreach { leg =>
-        val txt = leg.body(ctx).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = normalizePlanIds(leg.body(ctx).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(d, s"${leg.name}.txt"), txt)
       }

@@ -134,15 +134,20 @@ object Features {
       center: Boolean = false, minSamples: Int = -1)(implicit pc: PanelCols): DataFrame = {
     aggs.foreach(a => require(supportedRollingAggs(a), s"Unsupported aggregation '$a'"))
     require(windows.forall(_ > 0), "All window sizes must be positive integers")
+    require(!df.columns.exists(_.equalsIgnoreCase(RollingCount)),
+      s"rollingFeatures: column name $RollingCount is reserved")
     val w0 = pc.w
     windows.foldLeft(df) { (d, n) =>
       val frame =
         if (center) w0.rowsBetween(-((n - 1) / 2), n / 2)
         else w0.rowsBetween(-(n - 1), 0)
       val mp = if (minSamples > 0) minSamples else n
-      val cnt = count(pc.targetCol).over(frame)
-      def gate(e: Column): Column = when(cnt >= mp, e)
-      aggs.foldLeft(d) { (d2, agg) =>
+      // the window's count is one column that every aggregate's
+      // min-samples gate reads: Catalyst does not merge identical window
+      // expressions, so a count inside each gate is computed once per agg
+      val counted = d.withColumn(RollingCount, count(pc.targetCol).over(frame))
+      def gate(e: Column): Column = when(col(RollingCount) >= mp, e)
+      aggs.foldLeft(counted) { (d2, agg) =>
         val e = agg match {
           case "mean" => avg(pc.targetCol).over(frame)
           case "std" => stddev_samp(pc.targetCol).over(frame)
@@ -153,9 +158,12 @@ object Features {
           case "median" => percentile(pc.targetCol, lit(0.5)).over(frame)
         }
         d2.withColumn(s"${pc.target}_rolling_${agg}_$n", gate(e))
-      }
+      }.drop(RollingCount)
     }
   }
+
+  /** Temporary column of [[rollingFeatures]]: one window's row count. */
+  private val RollingCount = "__rolling_count"
 
   /** Monday-first weekday 1..7 matching Polars `dt.weekday()` (Spark's
     * `dayofweek` is Sunday-first — SURVEY §7.5 risk #5). */

@@ -72,4 +72,28 @@ class BenchLegsSpec extends AnyFunSuite {
     assert(rows.map(_.getString(2)).count(_ == "web") == 3)
     assert(rows.map(_.getString(1)).distinct.length == 6)
   }
+
+  test("explain dumps normalize the ids that shift with JVM history") {
+    assert(Bench.normalizePlanIds(
+      "Exchange hashpartitioning(k#12L, 4), [plan_id=345]\n" +
+        "Arguments: [v#7], MapPartitionsRDD[299] at localCheckpoint\n" +
+        "transform(xs#3, lambdafunction((lambda x_10#41 + 1), lambda x_10#41, false))") ==
+      "Exchange hashpartitioning(k#nL, 4), [plan_id=n]\n" +
+        "Arguments: [v#n], MapPartitionsRDD[n] at localCheckpoint\n" +
+        "transform(xs#n, lambdafunction((lambda x_n#n + 1), lambda x_n#n, false))")
+    // the same query built twice, with another plan built in between
+    val spark = TestSpark.spark
+    def explained(): String = {
+      val rdd = spark.sparkContext.parallelize(Seq((1L, Seq(1, 2)), (2L, Seq(3))))
+      spark.createDataFrame(rdd).toDF("k", "xs")
+        .select(col("k"), transform(col("xs"), x => x + 1).as("ys"))
+        .groupBy("k").agg(count(lit(1)).as("n"))
+        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    }
+    val a = explained()
+    spark.range(3).selectExpr("id + 1").collect()
+    val b = explained()
+    assert(a != b)
+    assert(Bench.normalizePlanIds(a) == Bench.normalizePlanIds(b))
+  }
 }

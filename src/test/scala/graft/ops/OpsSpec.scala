@@ -58,6 +58,47 @@ class OpsSpec extends AnyFunSuite {
     assert(err < 1e-9)
   }
 
+  /** `rollingFeatures` as it was written before its count became one
+    * column: a `count(...).over(frame)` inside each aggregate's gate. */
+  private def rollingPerAggCount(df: org.apache.spark.sql.DataFrame,
+      windows: Seq[Int], aggs: Seq[String], center: Boolean, minSamples: Int) =
+    windows.foldLeft(df) { (d, n) =>
+      val frame =
+        if (center) pc.w.rowsBetween(-((n - 1) / 2), n / 2)
+        else pc.w.rowsBetween(-(n - 1), 0)
+      val mp = if (minSamples > 0) minSamples else n
+      val cnt = count(pc.targetCol).over(frame)
+      aggs.foldLeft(d) { (d2, agg) =>
+        val e = agg match {
+          case "mean" => avg(pc.targetCol).over(frame)
+          case "std" => stddev_samp(pc.targetCol).over(frame)
+          case "min" => min(pc.targetCol).over(frame)
+          case "max" => max(pc.targetCol).over(frame)
+          case "sum" => sum(pc.targetCol).over(frame)
+        }
+        d2.withColumn(s"${pc.target}_rolling_${agg}_$n", when(cnt >= mp, e))
+      }
+    }
+
+  test("rollingFeatures counts each window once and keeps its values") {
+    val aggs = Seq("mean", "std", "min", "max", "sum")
+    for ((windows, center, minSamples) <- Seq(
+        (Seq(7), false, -1), (Seq(3, 8), false, -1), (Seq(3, 8), true, -1),
+        (Seq(5), false, 2), (Seq(4, 6), true, 3))) {
+      val got = Features.rollingFeatures(twoSeries, windows, aggs, center, minSamples)
+      val counts = "\\bcount\\(".r
+        .findAllIn(got.queryExecution.optimizedPlan.toString).size
+      assert(counts == windows.size, s"$windows: $counts counts in the plan")
+      val want = rollingPerAggCount(twoSeries, windows, aggs, center, minSamples)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0,
+        s"$windows center=$center minSamples=$minSamples")
+    }
+    assert(intercept[IllegalArgumentException](Features.rollingFeatures(
+      twoSeries.withColumn("__rolling_count", lit(1)), Seq(3)))
+      .getMessage.contains("reserved"))
+  }
+
   test("df.pts namespace chains and matches the operator objects") {
     import graft.syntax._
     val viaNs = twoSeries.pts.lagFeatures(Seq(1)).pts.rollingFeatures(Seq(3), Seq("mean"))
