@@ -710,9 +710,8 @@ object SparkEntry {
 
     "ts_cluster_eval_e2e" -> ((s, dir) => {
       // single pairwise pass reused for BOTH the PAM fit and the metrics
-      // (was: kmedoids + evaluate, each recomputing the SBD matrix AND
-      // running the broadcast-decision distinct pre-pass — 4 panel scans
-      // where one suffices; VERDICT r7 ask #8)
+      // (was: kmedoids + evaluate, each recomputing the SBD matrix;
+      // VERDICT r7 ask #8)
       val ev = IO.events(s, dir)
       val (_, m) = Clustering.collectMatrix(Distances.pairwise(ev, "sbd")(PC), "sbd")
       val (labels, _) = graft.kernels.Cluster.pam(m, k = 3)

@@ -1,8 +1,13 @@
 package graft
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Prints one
+  * `[census] <name> build_s=… write_s=… build_jobs=… write_jobs=…` line
+  * per query (build: the DataFrame's construction, before any action). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -28,12 +33,28 @@ object Verify {
       System.err.println(s"[verify] oracle pin computation failed " +
         s"(falling back to full NM-replay oracles): ${e.getMessage}")
     }
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    sc.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
+    /** `f`'s value, seconds and Spark jobs started. */
+    def census[T](f: => T): (T, Double, Int) = {
+      GraftListenerBridge.waitUntilEmpty(sc)
+      val (j0, t0) = (jobs.get, System.nanoTime)
+      val out = try f finally GraftListenerBridge.waitUntilEmpty(sc)
+      (out, (System.nanoTime - t0) / 1e9, jobs.get - j0)
+    }
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val (df, buildS, buildJobs) = census(fn(spark, sfDir))
+        val (_, writeS, writeJobs) = census(
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        println(f"[census] $name build_s=$buildS%.3f write_s=$writeS%.3f " +
+          s"build_jobs=$buildJobs write_jobs=$writeJobs")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

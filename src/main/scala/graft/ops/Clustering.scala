@@ -27,46 +27,71 @@ object Clustering {
     (ids, m)
   }
 
+  /** The n×n matrix of [[Distances.pairwise]], collected to the driver
+    * under the job description `graft Clustering.<op>: distance matrix`;
+    * the thread's previous description is restored. */
+  private def distanceMatrix(op: String, df: DataFrame, metric: String,
+      params: Map[String, Double])(implicit pc: PanelCols): (Array[String], Array[Array[Double]]) = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description") // set by setJobDescription
+    sc.setJobDescription(s"graft Clustering.$op: distance matrix")
+    try collectMatrix(Distances.pairwise(df, metric, params), metric)
+    finally sc.setJobDescription(prev)
+  }
+
+  /** [[distanceMatrix]] plus each id's label in `labelsDf` (−1 when
+    * absent), also collected to the driver. */
+  private def labeledMatrix(op: String, df: DataFrame, labelsDf: DataFrame, metric: String,
+      params: Map[String, Double])(implicit pc: PanelCols) = {
+    val (ids, m) = distanceMatrix(op, df, metric, params)
+    val lmap = labelsDf.select(pc.idCol.cast("string"), col("cluster"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    (ids, m, ids.map(lmap.getOrElse(_, -1)))
+  }
+
+  /** `byId` (keyed by the string id `__id_str`) joined back to `df`'s
+    * typed series ids: `[id, <byId's other columns>]`. */
+  private def joinIds(df: DataFrame, byId: DataFrame)(implicit pc: PanelCols): DataFrame =
+    byId.join(df.select(pc.idCol).distinct()
+        .withColumn("__id_str", pc.idCol.cast("string")), Seq("__id_str"))
+      .select(pc.idCol +: byId.columns.filter(_ != "__id_str").toSeq.map(col): _*)
+
   private def labelFrame(df: DataFrame, ids: Array[String], labels: Array[Int])(
       implicit pc: PanelCols): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    ids.zip(labels).toSeq.toDF("__id_str", "cluster")
-      .join(df.select(pc.idCol).distinct()
-        .withColumn("__id_str", pc.idCol.cast("string")), Seq("__id_str"))
-      .select(pc.idCol, col("cluster"))
+    joinIds(df, ids.zip(labels).toSeq.toDF("__id_str", "cluster"))
   }
 
-  /** K-medoids (PAM) labels `[id, cluster]` over any pairwise metric. */
+  /** `[id, cluster]` from `fit` over the distance matrix. */
+  private def matrixLabels(op: String, df: DataFrame, metric: String,
+      params: Map[String, Double])(fit: Array[Array[Double]] => Array[Int])(
+      implicit pc: PanelCols): DataFrame = {
+    val (ids, m) = distanceMatrix(op, df, metric, params)
+    labelFrame(df, ids, fit(m))
+  }
+
+  /** K-medoids (PAM) labels `[id, cluster]` over any pairwise metric.
+    * Eager: collects the n×n distance matrix to the driver (Spark jobs). */
   def kmedoids(df: DataFrame, k: Int, metric: String = "dtw",
       params: Map[String, Double] = Map.empty, seed: Long = 42L,
-      init: Option[Array[Int]] = None, nSeriesHint: Option[Long] = None)(
-      implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    val (labels, _) = Cluster.pam(m, k, seed, init = init)
-    labelFrame(df, ids, labels)
-  }
+      init: Option[Array[Int]] = None)(implicit pc: PanelCols): DataFrame =
+    matrixLabels("kmedoids", df, metric, params)(Cluster.pam(_, k, seed, init = init)._1)
 
-  /** DBSCAN labels (−1 = noise). */
+  /** DBSCAN labels (−1 = noise). Eager: collects the n×n distance matrix
+    * to the driver (Spark jobs). */
   def dbscanCluster(df: DataFrame, eps: Double, minPts: Int,
-      metric: String = "dtw", params: Map[String, Double] = Map.empty,
-      nSeriesHint: Option[Long] = None)(
-      implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    labelFrame(df, ids, Cluster.dbscan(m, eps, minPts))
-  }
+      metric: String = "dtw", params: Map[String, Double] = Map.empty)(
+      implicit pc: PanelCols): DataFrame =
+    matrixLabels("dbscanCluster", df, metric, params)(Cluster.dbscan(_, eps, minPts))
 
-  /** Agglomerative labels cut at k. */
+  /** Agglomerative labels cut at k. Eager: collects the n×n distance
+    * matrix to the driver (Spark jobs). */
   def agglomerativeCluster(df: DataFrame, k: Int, linkage: String = "average",
-      metric: String = "dtw", params: Map[String, Double] = Map.empty,
-      nSeriesHint: Option[Long] = None)(
-      implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    labelFrame(df, ids, Cluster.agglomerative(m, k, linkage))
-  }
+      metric: String = "dtw", params: Map[String, Double] = Map.empty)(
+      implicit pc: PanelCols): DataFrame =
+    matrixLabels("agglomerativeCluster", df, metric, params)(
+      Cluster.agglomerative(_, k, linkage))
 
   /** Distributed k-Shape (reference clustering/kshape.py:9-160): z-norm,
     * SBD assignment and alignment run on executors; only the k per-cluster
@@ -437,16 +462,12 @@ object Clustering {
     (out, minLen, lastAssign)
   }
 
-  /** Clustering quality summary `[method, k, silhouette, davies_bouldin]`
-    * for a fitted labeling (reference clustering/evaluation.py). */
+  /** Clustering quality summary `[silhouette, davies_bouldin]` for a
+    * fitted labeling (reference clustering/evaluation.py). Eager: collects
+    * the n×n distance matrix and `labelsDf` to the driver (Spark jobs). */
   def evaluate(df: DataFrame, labelsDf: DataFrame, metric: String = "dtw",
-      params: Map[String, Double] = Map.empty,
-      nSeriesHint: Option[Long] = None)(implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    val lmap = labelsDf.select(pc.idCol.cast("string"), col("cluster"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val labels = ids.map(lmap.getOrElse(_, -1))
+      params: Map[String, Double] = Map.empty)(implicit pc: PanelCols): DataFrame = {
+    val (_, m, labels) = labeledMatrix("evaluate", df, labelsDf, metric, params)
     val spark = df.sparkSession
     import spark.implicits._
     Seq((Cluster.silhouette(m, labels), Cluster.daviesBouldin(m, labels)))
@@ -454,26 +475,22 @@ object Clustering {
   }
 
   /** HDBSCAN labels (−1 = noise) over any pairwise metric (reference
-    * clustering/density.py:31-84). */
+    * clustering/density.py:31-84). Eager: collects the n×n distance
+    * matrix to the driver (Spark jobs). */
   def hdbscanCluster(df: DataFrame, minClusterSize: Int = 5,
       minSamples: Option[Int] = None, metric: String = "dtw",
-      params: Map[String, Double] = Map.empty,
-      nSeriesHint: Option[Long] = None)(implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    labelFrame(df, ids, Cluster.hdbscan(m, minClusterSize, minSamples))
-  }
+      params: Map[String, Double] = Map.empty)(implicit pc: PanelCols): DataFrame =
+    matrixLabels("hdbscanCluster", df, metric, params)(
+      Cluster.hdbscan(_, minClusterSize, minSamples))
 
-  /** CLARANS labels (reference clustering/scalable.py:153-233). */
+  /** CLARANS labels (reference clustering/scalable.py:153-233). Eager:
+    * collects the n×n distance matrix to the driver (Spark jobs). */
   def claransCluster(df: DataFrame, k: Int, numLocal: Int = 2,
       maxNeighbor: Int = 10, metric: String = "dtw",
-      params: Map[String, Double] = Map.empty, seed: Long = 42L,
-      nSeriesHint: Option[Long] = None)(
-      implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    labelFrame(df, ids, Cluster.clarans(m, k, numLocal, maxNeighbor, seed))
-  }
+      params: Map[String, Double] = Map.empty, seed: Long = 42L)(
+      implicit pc: PanelCols): DataFrame =
+    matrixLabels("claransCluster", df, metric, params)(
+      Cluster.clarans(_, k, numLocal, maxNeighbor, seed))
 
   /** U-shapelet clustering (reference clustering/shapelets.py:21-236):
     * seeded random shapelet candidates from a bounded series sample,
@@ -585,35 +602,24 @@ object Clustering {
   }
 
   /** Per-sample silhouette `[id, cluster, silhouette]` (reference
-    * clustering/evaluation.py:108-178). */
+    * clustering/evaluation.py:108-178). Eager: collects
+    * the n×n distance matrix and `labelsDf` to the driver (Spark jobs). */
   def silhouetteSamples(df: DataFrame, labelsDf: DataFrame, metric: String = "dtw",
-      params: Map[String, Double] = Map.empty,
-      nSeriesHint: Option[Long] = None)(implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    val lmap = labelsDf.select(pc.idCol.cast("string"), col("cluster"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val labels = ids.map(lmap.getOrElse(_, -1))
+      params: Map[String, Double] = Map.empty)(implicit pc: PanelCols): DataFrame = {
+    val (ids, m, labels) = labeledMatrix("silhouetteSamples", df, labelsDf, metric, params)
     val sil = Cluster.silhouetteSamples(m, labels)
     val spark = df.sparkSession
     import spark.implicits._
-    ids.indices.map(i => (ids(i), labels(i), sil(i))).toSeq
-      .toDF("__id_str", "cluster", "silhouette")
-      .join(df.select(pc.idCol).distinct()
-        .withColumn("__id_str", pc.idCol.cast("string")), Seq("__id_str"))
-      .select(pc.idCol, col("cluster"), col("silhouette"))
+    joinIds(df, ids.indices.map(i => (ids(i), labels(i), sil(i)))
+      .toDF("__id_str", "cluster", "silhouette"))
   }
 
   /** Medoid-based Calinski-Harabasz index as a 1-row frame
-    * (reference clustering/evaluation.py:251-326). */
+    * (reference clustering/evaluation.py:251-326). Eager: collects
+    * the n×n distance matrix and `labelsDf` to the driver (Spark jobs). */
   def calinskiHarabasz(df: DataFrame, labelsDf: DataFrame, metric: String = "dtw",
-      params: Map[String, Double] = Map.empty,
-      nSeriesHint: Option[Long] = None)(implicit pc: PanelCols): DataFrame = {
-    val (ids, m) = collectMatrix(
-      Distances.pairwise(df, metric, params, nSeriesHint = nSeriesHint), metric)
-    val lmap = labelsDf.select(pc.idCol.cast("string"), col("cluster"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val labels = ids.map(lmap.getOrElse(_, -1))
+      params: Map[String, Double] = Map.empty)(implicit pc: PanelCols): DataFrame = {
+    val (_, m, labels) = labeledMatrix("calinskiHarabasz", df, labelsDf, metric, params)
     val spark = df.sparkSession
     import spark.implicits._
     Seq(Cluster.calinskiHarabasz(m, labels)).toDF("calinski_harabasz")

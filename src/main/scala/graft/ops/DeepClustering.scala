@@ -28,8 +28,8 @@ object DeepClustering {
   def collectSeries(df: DataFrame, cap: Int = 2048)(
       implicit pc: PanelCols): Seq[(String, Array[Double])] = {
     // unconditional hash-ordered top-K: one TakeOrdered job (no count
-    // pre-pass — the Distances.pairwise nSeriesHint lesson); identical
-    // membership to an explicit n ≤ cap branch
+    // pre-pass to choose a plan); identical membership to an explicit
+    // n ≤ cap branch
     Panel.grouped(df)
       .select(pc.idCol.cast("string").as("__id"), col("ys"))
       .orderBy(xxhash64(col("__id")), col("__id")).limit(cap)

@@ -9,15 +9,20 @@ import org.apache.spark.sql.functions._
 /** Pairwise elastic-distance harness (reference src/utils.rs:168-234
   * `compute_pairwise` + the per-kernel entry points).
   *
-  * Spark shape: grouped form (one shuffle) → self-join with `id_1 < id_2`
-  * (symmetric dedup, half the work — utils.rs:222-229) → pure-Scala DP
-  * kernel as a deterministic UDF. The reference's Rayon pair-parallelism
-  * becomes task parallelism over join partitions.
+  * Spark shape: grouped form (one shuffle) → broadcast nested-loop join
+  * with `id_1 < id_2` (symmetric dedup, half the work — utils.rs:222-229)
+  * → pure-Scala DP kernel as a deterministic UDF. The reference's Rayon
+  * pair-parallelism becomes task parallelism over the streamed side.
   *
-  * Scale path (SURVEY §7.5 risk #7): `maxLen` truncation + an optional
-  * cheap lower-bound pre-filter hook (`prune`) compose before the O(nm)
-  * kernel runs; `topK` caps the O(n²) output per left series. When the
-  * series count is small enough the grouped side is broadcast.
+  * The grouped panel is always broadcast. It grows with n (n series of m
+  * points cost n·m·8 bytes: 10⁴ × 480 points ≈ 38 MB), while the
+  * all-pairs kernel work grows with n² (≥ 5·10⁷ DP calls at 10⁴ series),
+  * and the distance-matrix ops of [[Clustering]] collect the full n×n
+  * matrix to the driver. Building a result starts no Spark job.
+  *
+  * Scale path (SURVEY §7.5 risk #7): `maxDist` (with its LB_Keogh
+  * pre-filter for banded DTW) drops far pairs, and `topK` caps the
+  * O(n²) output per left series.
   */
 object Distances {
 
@@ -42,39 +47,50 @@ object Distances {
     "frechet" -> ((a, b, _) => Elastic.frechet(a, b)),
     "edr" -> ((a, b, p) => Elastic.edr(a, b, p.getOrElse("epsilon", 0.1))))
 
-  /** Series count above which the grouped panel is no longer broadcast in
-    * [[pairwise]] (10⁴ series × multi-KB arrays ≈ the 8 GB broadcast
-    * ceiling; beyond it the self-join falls back to a shuffle join). */
-  val BroadcastSeriesLimit = 10000
+  /** Univariate distance UDF. Array[Double] (not Seq[Double]) parameters:
+    * one primitive toDoubleArray copy per input instead of boxing every
+    * element — the same ~70%-of-wall-time lesson as the cosine UDF
+    * (Similarity). */
+  private def distUdf(metric: String, params: Map[String, Double]) = {
+    val kernel = univariate.getOrElse(metric, throw new IllegalArgumentException(
+      s"Unknown metric '$metric'. Choose from ${univariate.keys.toSeq.sorted.mkString(", ")}"))
+    udf((a: Array[Double], b: Array[Double]) => kernel(a, b, params))
+  }
+
+  /** The one pair join, left aliased `a` and right `b`: the right
+    * (grouped, small) side is broadcast, and the streamed side is
+    * repartitioned round-robin (guide §1.2 step 1 + §2.5). Without the
+    * repartition, AQE's partition coalescing folds the few-hundred-KB
+    * grouped panel to ONE partition, and the O(n·m)-per-pair DP kernel
+    * runs on one core (measured r12: pairwise_dtw_band_500x100 wall
+    * 2.42 s, cpu 5.24 s on 32 cores). A repartition is exempt from AQE
+    * coalescing and costs one tiny exchange of grouped rows. */
+  private def pairJoin(left: DataFrame, right: DataFrame, on: Column): DataFrame =
+    left.repartition(left.sparkSession.sparkContext.defaultParallelism).as("a")
+      .join(broadcast(right).as("b"), on)
+
+  /** Each `id_1`'s `topK` nearest partners (ties by `id_2`); all pairs
+    * when `topK` is 0. */
+  private def nearest(pairs: DataFrame, metric: String, topK: Int): DataFrame =
+    if (topK > 0)
+      pairs.withColumn("__rk", row_number().over(
+          Window.partitionBy(col("id_1")).orderBy(col(metric).asc, col("id_2"))))
+        .filter(col("__rk") <= topK).drop("__rk")
+    else pairs
 
   /** Pairwise distances within one panel: `[id_1, id_2, <metric>]`,
     * upper triangle only.
     *
     * Scale valves:
-    *  - `broadcastRight = None` (default) counts the series and broadcasts
-    *    only below [[BroadcastSeriesLimit]]; `Some(b)` forces the choice.
-    *  - `nSeriesHint` (VERDICT r7 ask #8): a caller that already knows the
-    *    series count (e.g. from a grouped-panel cache) passes it to skip
-    *    the `distinct().count()` pre-pass entirely — one fewer job per
-    *    pairwise call, which on a 100 TB panel is a full scan saved.
     *  - `maxDist` drops pairs whose distance exceeds the cutoff — and for
     *    banded DTW first rejects on the O(n) LB_Keogh envelope bound, so
     *    most far pairs never run the O(n·w) DP at all.
     *  - `topK` keeps only each left series' k nearest partners. */
   def pairwise(df: DataFrame, metric: String,
       params: Map[String, Double] = Map.empty,
-      broadcastRight: Option[Boolean] = None,
       maxDist: Option[Double] = None,
-      topK: Int = 0,
-      nSeriesHint: Option[Long] = None)(implicit pc: PanelCols): DataFrame = {
-    val kernel = univariate.getOrElse(metric,
-      throw new IllegalArgumentException(
-        s"Unknown metric '$metric'. Choose from ${univariate.keys.toSeq.sorted.mkString(", ")}"))
-    // Array[Double] (not Seq[Double]) parameters: one primitive
-    // toDoubleArray copy per input instead of boxing every element — the
-    // same ~70%-of-wall-time lesson as the cosine UDF (Similarity)
-    val dist = udf((a: Array[Double], b: Array[Double]) =>
-      kernel(a, b, params))
+      topK: Int = 0)(implicit pc: PanelCols): DataFrame = {
+    val dist = distUdf(metric, params)
     val g0 = Panel.grouped(df).select(pc.idCol, col("ys"))
     // LB_Keogh prefilter is sound for the Sakoe-Chiba DTW kernel (L1 cost)
     val lbWindow = if (metric == "dtw") params.get("window").map(_.toInt) else None
@@ -84,27 +100,7 @@ object Distances {
       val envUdf = udf((ys: Array[Double]) => Elastic.envelope(ys, w))
       g0.withColumn("__env", envUdf(col("ys")))
     } else g0
-    val doBroadcast = broadcastRight
-      .orElse(nSeriesHint.map(_ <= BroadcastSeriesLimit))
-      .getOrElse {
-        df.select(pc.idCol).distinct().limit(BroadcastSeriesLimit + 1).count() <=
-          BroadcastSeriesLimit
-      }
-    // Broadcast-join parallelism (guide §1.2 step 1 + §2.5): the grouped
-    // panel is a few hundred KB after the groupBy, so AQE's partition
-    // coalescing folds the join's streamed side to ONE partition — and
-    // the O(n·m)-per-pair DP kernel then runs on one core (measured r12:
-    // pairwise_dtw_band_500x100 wall 2.42 s, cpu 5.24 s on 32 cores).
-    // An explicit round-robin repartition of the streamed side is exempt
-    // from AQE coalescing and costs one tiny exchange of ≤
-    // BroadcastSeriesLimit grouped rows; pair work then spreads across
-    // every core. The non-broadcast path (> 10⁴ series) carries enough
-    // bytes that AQE keeps its parallelism — left unchanged.
-    val left =
-      if (doBroadcast) g.repartition(df.sparkSession.sparkContext.defaultParallelism)
-      else g
-    val right = if (doBroadcast) broadcast(g) else g
-    val joined = left.as("a").join(right.as("b"), col(s"a.${pc.id}") < col(s"b.${pc.id}"))
+    val joined = pairJoin(g, g, col(s"a.${pc.id}") < col(s"b.${pc.id}"))
     val pruned = if (useLb) {
       val lbUdf = udf((a: Array[Double], env: Array[Double]) =>
         Elastic.lbKeogh(a, env))
@@ -114,11 +110,7 @@ object Distances {
       .select(col(s"a.${pc.id}").as("id_1"), col(s"b.${pc.id}").as("id_2"),
         dist(col("a.ys"), col("b.ys")).as(metric))
     val cut = maxDist.map(t => withD.filter(col(metric) <= t)).getOrElse(withD)
-    if (topK > 0)
-      cut.withColumn("__rk", row_number().over(
-          Window.partitionBy(col("id_1")).orderBy(col(metric).asc, col("id_2"))))
-        .filter(col("__rk") <= topK).drop("__rk")
-    else cut
+    nearest(cut, metric, topK)
   }
 
   /** Multivariate pairwise distances (`dtw_multi` manhattan/euclidean,
@@ -144,11 +136,7 @@ object Distances {
     val g = df.groupBy(pc.idCol)
       .agg(sort_array(collect_list(struct(fields: _*))).as("__pts"))
       .select(pc.idCol, col("__pts.__v").as("vs"))
-    // same streamed-side repartition as [[pairwise]]: without it AQE
-    // coalesces the small grouped panel to one partition and the
-    // multivariate DP kernel runs serially
-    g.repartition(df.sparkSession.sparkContext.defaultParallelism).as("a")
-      .join(broadcast(g).as("b"), col(s"a.${pc.id}") < col(s"b.${pc.id}"))
+    pairJoin(g, g, col(s"a.${pc.id}") < col(s"b.${pc.id}"))
       .select(col(s"a.${pc.id}").as("id_1"), col(s"b.${pc.id}").as("id_2"),
         dist(col("a.vs"), col("b.vs")).as(metric))
   }
@@ -159,21 +147,11 @@ object Distances {
   def pairwiseCross(left: DataFrame, right: DataFrame, metric: String,
       params: Map[String, Double] = Map.empty, topK: Int = 0)(
       implicit pc: PanelCols): DataFrame = {
-    val kernel = univariate(metric)
-    val dist = udf((a: Array[Double], b: Array[Double]) =>
-      kernel(a, b, params))
-    val gl = Panel.grouped(left)
-      .select(pc.idCol.as("id_1"), col("ys").as("__ys1"))
-      // streamed-side repartition, as in [[pairwise]]: keeps the per-pair
-      // kernel parallel when the grouped left panel is AQE-coalesced small
-      .repartition(left.sparkSession.sparkContext.defaultParallelism)
+    val dist = distUdf(metric, params)
+    val gl = Panel.grouped(left).select(pc.idCol.as("id_1"), col("ys").as("__ys1"))
     val gr = Panel.grouped(right).select(pc.idCol.as("id_2"), col("ys").as("__ys2"))
-    val all = gl.join(broadcast(gr), col("id_1") =!= col("id_2"))
-      .select(col("id_1"), col("id_2"), dist(col("__ys1"), col("__ys2")).as(metric))
-    if (topK > 0)
-      all.withColumn("__rk", row_number().over(
-          Window.partitionBy(col("id_1")).orderBy(col(metric).asc, col("id_2"))))
-        .filter(col("__rk") <= topK).drop("__rk")
-    else all
+    nearest(pairJoin(gl, gr, col("id_1") =!= col("id_2"))
+      .select(col("id_1"), col("id_2"), dist(col("__ys1"), col("__ys2")).as(metric)),
+      metric, topK)
   }
 }

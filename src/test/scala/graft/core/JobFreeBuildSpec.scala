@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
-import graft.ops.TemporalJoins
+import graft.ops.{Distances, TemporalJoins}
 import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a DataFrame starts no Spark job the caller did not ask for:
   * every public [[TemporalJoins]] op (the as-of joins' skew handling
-  * waits for shuffle statistics at run time) and a re-read of an
+  * waits for shuffle statistics at run time), the [[Distances]] pair
+  * joins (always broadcast, no series count) and a re-read of an
   * unchanged table through [[IO.table]] (whose schema and row-group
   * count are memoized). Also pins the memo's invalidation and the
   * row-group-aware scan width. */
@@ -80,6 +81,22 @@ class JobFreeBuildSpec extends AnyFunSuite {
       TemporalJoins.sessionize(l, Seq("k"), "t", gapUs = 60L * 1000000L)
       TemporalJoins.pointInTimeJoin(l, Seq("k"), "t",
         Seq((r, "t", Seq("rv"), None), (r2, "t", Seq("rv2"), Some(hour))))
+    }
+    assert(jobs === 0)
+  }
+
+  test("building pairwise, pairwiseMulti and pairwiseCross starts no job") {
+    implicit val pc: PanelCols = PanelCols()
+    val panel = spark.range(0L, 40L * 25).select(
+      (col("id") / 25).cast("long").as("unique_id"),
+      timestamp_micros((col("id") % 25) * 3600000000L).as("ds"),
+      sin(col("id") / 5.0).as("y"), cos(col("id") / 7.0).as("y2"))
+    val (_, jobs) = jobsDuring {
+      Distances.pairwise(panel, "dtw")
+      Distances.pairwise(panel, "dtw", Map("window" -> 3.0),
+        maxDist = Some(2.0), topK = 3)
+      Distances.pairwiseMulti(panel, Seq("y", "y2"), "dtw_multi")
+      Distances.pairwiseCross(panel, panel.filter(col("unique_id") < 5), "dtw", topK = 2)
     }
     assert(jobs === 0)
   }
