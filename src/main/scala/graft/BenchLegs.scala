@@ -433,7 +433,8 @@ object BenchLegs {
       TemporalJoins.rangeJoin(clk, err, Seq("user_id"), "ts",
         "w_start", "w_end", bucketUs = 6L * 3600 * 1000000)
     }),
-    // the same range shape on the whole-operator tier (no explosion)
+    // the same range join through its whole-operator name; range_join
+    // delegates to it, so the two legs run one plan
     Leg("range_native", Tier.Temporal, c => {
       val (clk, err) = clickErrorWindows(c.eventsSf)
       TemporalJoins.rangeJoinNative(clk, err, Seq("user_id"), "ts",

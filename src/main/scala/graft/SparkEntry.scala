@@ -713,7 +713,7 @@ object SparkEntry {
       // (was: kmedoids + evaluate, each recomputing the SBD matrix;
       // VERDICT r7 ask #8)
       val ev = IO.events(s, dir)
-      val (_, m) = Clustering.collectMatrix(Distances.pairwise(ev, "sbd")(PC), "sbd")
+      val (_, m) = Clustering.distanceMatrix("kmedoids", ev, "sbd")(PC)
       val (labels, _) = graft.kernels.Cluster.pam(m, k = 3)
       import s.implicits._
       Seq((graft.kernels.Cluster.silhouette(m, labels),
@@ -1914,7 +1914,7 @@ object SparkEntry {
 
     "ts_clara" -> ((s, dir) => {
       val ev = IO.events(s, dir)
-      val (ids, m) = Clustering.collectMatrix(Distances.pairwise(ev, "sbd")(PC), "sbd")
+      val (ids, m) = Clustering.distanceMatrix("clara", ev, "sbd")(PC)
       val (labels, _) = graft.kernels.Cluster.clara(m, k = 3, sampleSize = 40)
       import s.implicits._
       ids.zip(labels).toSeq.toDF("unique_id", "cluster")
@@ -2125,10 +2125,10 @@ object SparkEntry {
           |  'user_id', 'ts', 'w_start', 'w_end')""".stripMargin)
     }),
 
-    // the same range-join semantics on the whole-operator tier
-    // (IntervalJoinExec sort-merge sweep — no interval explosion, no
-    // bucketUs; plans/IntervalJoinPlan.scala), same oracle as the
-    // bucketed form
+    // the same range join through its whole-operator name
+    // (IntervalJoinExec sweep; plans/IntervalJoinPlan.scala);
+    // ts_range_join delegates to it, so the two run one plan — same
+    // oracle
     "ts_range_join_native" -> ((s, dir) => {
       val e = IO.events(s, dir)
       val err = e.filter(col("event_type") === "error")
@@ -2142,8 +2142,8 @@ object SparkEntry {
         .select("user_id", "click_id", "error_id")
     }),
 
-    // clicks inside the 1-day window after each error, per user —
-    // bucketUs = 6h so each window explodes into ≤ 5 buckets
+    // clicks inside the 1-day window after each error, per user — one
+    // IntervalJoinExec sweep (bucketUs is accepted and ignored)
     "ts_range_join" -> ((s, dir) => {
       val e = IO.events(s, dir)
       val err = e.filter(col("event_type") === "error")
@@ -2179,8 +2179,8 @@ object SparkEntry {
     }),
 
     // interval×interval: overlapping 1-day activity windows of errors vs
-    // purchases per user (both sides explode into 6h buckets; the
-    // max-start-bucket residual keeps each pair exactly once)
+    // purchases per user — two IntervalJoinExec sweeps (left start in
+    // right ∪ right start strictly in left, each pair exactly once)
     "ts_overlap_join" -> ((s, dir) => {
       val e = IO.events(s, dir)
       def win(t: String, idAs: String) = e.filter(col("event_type") === t)
@@ -2195,9 +2195,9 @@ object SparkEntry {
         .select("user_id", "error_id", "purchase_id")
     }),
 
-    // the same overlap semantics on the whole-operator tier: two
-    // IntervalJoinExec sweeps (left-start-in-right ∪ right-start-
-    // strictly-in-left) — no side explodes; same oracle
+    // the same overlap join through its whole-operator name;
+    // ts_overlap_join delegates to it, so the two run one plan — same
+    // oracle
     "ts_overlap_join_native" -> ((s, dir) => {
       val e = IO.events(s, dir)
       def win(t: String, idAs: String) = e.filter(col("event_type") === t)
@@ -2341,7 +2341,7 @@ object SparkEntry {
       // winner picked on the ROUNDED score with grid-order tie-break, so
       // the selection itself replays deterministically in DuckDB
       val ev = IO.events(s, dir).filter(expr(ElasticOracle.SeriesFilter))
-      val (_, m) = Clustering.collectMatrix(Distances.pairwise(ev, "sbd")(PC), "sbd")
+      val (_, m) = Clustering.distanceMatrix("autoCluster", ev, "sbd")(PC)
       val results = for {
         k <- Seq(2, 3, 4)
         (method, labels) <- Seq(
@@ -2395,7 +2395,7 @@ object SparkEntry {
 
     "ts_spectral_refit_audit" -> ((s, dir) => {
       val ev = IO.events(s, dir)
-      val (ids, m) = Clustering.collectMatrix(Distances.pairwise(ev, "sbd")(PC), "sbd")
+      val (ids, m) = Clustering.distanceMatrix("spectral", ev, "sbd")(PC)
       val emb = graft.kernels.Cluster.spectralEmbedding(m, 3)
       val cen = graft.kernels.Cluster.lloydFit(emb, 3, 42L)._2
       val (pids, pemb, pcen) = OraclePins.spectral.getOrElse((ids, emb, cen))
@@ -2500,7 +2500,7 @@ object SparkEntry {
 
     "ts_spectral" -> ((s, dir) => {
       val ev = IO.events(s, dir)
-      val (ids, m) = Clustering.collectMatrix(Distances.pairwise(ev, "sbd")(PC), "sbd")
+      val (ids, m) = Clustering.distanceMatrix("spectral", ev, "sbd")(PC)
       val labels = graft.kernels.Cluster.spectral(m, k = 3)
       import s.implicits._
       ids.zip(labels).toSeq.toDF("unique_id", "cluster")

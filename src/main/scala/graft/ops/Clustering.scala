@@ -30,8 +30,8 @@ object Clustering {
   /** The n×n matrix of [[Distances.pairwise]], collected to the driver
     * under the job description `graft Clustering.<op>: distance matrix`;
     * the thread's previous description is restored. */
-  private def distanceMatrix(op: String, df: DataFrame, metric: String,
-      params: Map[String, Double])(implicit pc: PanelCols): (Array[String], Array[Array[Double]]) = {
+  private[graft] def distanceMatrix(op: String, df: DataFrame, metric: String,
+      params: Map[String, Double] = Map.empty)(implicit pc: PanelCols): (Array[String], Array[Array[Double]]) = {
     val sc = df.sparkSession.sparkContext
     val prev = sc.getLocalProperty("spark.job.description") // set by setJobDescription
     sc.setJobDescription(s"graft Clustering.$op: distance matrix")

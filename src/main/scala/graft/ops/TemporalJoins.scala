@@ -21,14 +21,11 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   *    key is handled when the query runs: the query-stage rule
   *    [[graft.plans.SplitSkewedTemporalJoin]] splits a skewed left
   *    shuffle partition under Spark's `skewJoin` thresholds.
-  *  - '''rangeJoin''': intervals explode into fixed-width time buckets and
-  *    the join becomes an equi-join on (by, bucket) + exact residual
-  *    filter — the classic bucketed range join. Each (left, right) pair
-  *    meets in exactly one bucket (the left row's), so no post-dedup. An
-  *    `assert_true` valve (inside the explode's dependency chain, so
-  *    column pruning can't drop it) fails loudly if an interval spans
-  *    more than `maxBucketsPerInterval` buckets instead of silently
-  *    exploding.
+  *  - '''rangeJoin''' / '''overlapJoin''': one operator,
+  *    [[rangeJoinNative]]'s `IntervalJoinExec` sweep (overlap is two
+  *    sweeps), with no interval exploded. A right side under Spark's
+  *    `autoBroadcastJoinThreshold` is broadcast and the left side is not
+  *    shuffled; a larger one is hash-partitioned with the left on `by`.
   *  - '''sessionize''': lag + running-sum over one window (one exchange);
   *    the Structured Streaming twin uses Spark's native
   *    `session_window` + watermark (see StreamingOps).
@@ -44,17 +41,17 @@ object TemporalJoins {
     * (the left columns, plus the as-of `matchedTime`) is emitted as
     * `c_right`. Collision follows the session's resolution rules: left
     * `Val` vs right `val` IS ambiguous under the default
-    * case-insensitive resolution, so it must get the rename. ONE
-    * definition so the bucketed and native forms cannot drift. */
+    * case-insensitive resolution, so it must get the rename. */
   private def rightOutName(spark: org.apache.spark.sql.SparkSession,
       taken: Seq[String]): String => String = {
     val eq = nameEq(spark)
     c => if (taken.exists(eq(_, c))) c + "_right" else c
   }
 
-  /** [[rightOutName]] applied to a right frame for the bucketed joins:
-    * its colliding columns (except the `by` keys) are renamed. Returns
-    * the renamed frame and the old-name → emitted-name mapping. */
+  /** [[rightOutName]] applied to a right frame ahead of
+    * [[overlapJoinNative]]'s two sweeps: its colliding columns (except
+    * the `by` keys) are renamed. Returns the renamed frame and the
+    * old-name → emitted-name mapping. */
   private def renameCollisions(left: DataFrame, right: DataFrame,
       by: Seq[String]): (DataFrame, String => String) = {
     val eq = nameEq(left.sparkSession)
@@ -350,67 +347,24 @@ object TemporalJoins {
     * equal `by` keys. Returns left columns + right columns (right names
     * colliding with left ones suffixed `_right`; `by` keys emitted once).
     *
-    * Bucketed: `bucketUs` is the time-bucket width — size it near the
-    * typical interval length so each interval explodes into a handful of
-    * buckets. Intervals spanning more than `maxBucketsPerInterval`
-    * buckets raise an error (fail-loud valve) rather than exploding.
+    * One operator: this is [[rangeJoinNative]] under its older
+    * signature. `bucketUs` and `maxBucketsPerInterval` are accepted and
+    * ignored — the sweep has no buckets, so no interval width is too
+    * wide. `by` must be non-empty: an empty `by` fails with an
+    * `IllegalArgumentException` rather than running a keyless join.
     */
   def rangeJoin(left: DataFrame, right: DataFrame, by: Seq[String],
                 leftTime: String, startCol: String, endCol: String,
                 bucketUs: Long, inclusiveEnd: Boolean = false,
-                maxBucketsPerInterval: Int = 4096): DataFrame = {
-    require(bucketUs > 0, "rangeJoin: bucketUs must be positive")
-    // floor-div through double: exact for |µs| < 2^53 (≈ year 2255)
-    def bucketOf(c: Column): Column =
-      floor(c / lit(bucketUs.toDouble)).cast("long")
+                maxBucketsPerInterval: Int = 4096): DataFrame =
+    rangeJoinNative(left, right, by, leftTime, startCol, endCol, inclusiveEnd)
 
-    val (rRenamed, rName) = renameCollisions(left, right, by)
-
-    val sTu = micros(rRenamed, rName(startCol))
-    val eTu = micros(rRenamed, rName(endCol))
-    val rBuck = rRenamed
-      .withColumn("__stu", sTu).withColumn("__etu", eTu)
-      // null-bound intervals are ignored, matching asofJoin's null-time
-      // contract — without this filter the assert_true valve fires on a
-      // null __nb and one dirty row aborts the whole job
-      .filter(col("__stu").isNotNull && col("__etu").isNotNull)
-      .withColumn("__sb", bucketOf(col("__stu")))
-      .withColumn("__eb", bucketOf(col("__etu")))
-      .withColumn("__nb", col("__eb") - col("__sb") + lit(1L))
-      // assert_true rides inside __b's dependency chain so column pruning
-      // can't eliminate the fail-loud valve (a free-standing guard column
-      // would be pruned as dead code)
-      .withColumn("__ebChecked",
-        when(assert_true(col("__nb") <= maxBucketsPerInterval,
-          concat(lit("rangeJoin: interval spans "), col("__nb"),
-            lit(s" buckets > maxBucketsPerInterval=$maxBucketsPerInterval; " +
-              "widen bucketUs or split the interval"))).isNull, col("__eb")))
-      .withColumn("__b", explode(sequence(col("__sb"), col("__ebChecked"))))
-    val lBuck = left
-      .withColumn("__ltu", micros(left, leftTime))
-      .withColumn("__b", bucketOf(col("__ltu")))
-
-    val endCond =
-      if (inclusiveEnd) col("__ltu") <= col("__etu")
-      else col("__ltu") < col("__etu")
-    val joined = lBuck.join(rBuck,
-      by :+ "__b", "inner")
-      .filter(col("__ltu") >= col("__stu") && endCond)
-    val rightOut = rRenamed.columns.toSeq.filterNot(by.contains)
-    joined.select((left.columns.toSeq ++ rightOut).map(col): _*)
-  }
-
-  /** [[rangeJoin]] on the whole-operator Catalyst tier: a
-    * [[graft.plans.IntervalJoin]] node planned into the sort-merge
-    * sweep [[graft.plans.IntervalJoinExec]]. Same output schema and
-    * semantics as the bucketed form (spec-pinned equality), but NO
-    * interval explosion: both sides shuffle once at their natural row
-    * counts (left sorted by (keys, time), right by (keys, start)) and
-    * a per-partition sweep keeps the currently-overlapping intervals —
-    * state bounded by true concurrent overlap, not interval length.
-    * Consequently there is no `bucketUs` to tune and no
-    * `maxBucketsPerInterval` valve to hit: a 30-day interval costs the
-    * same one shuffled row as a 30-second one. */
+  /** [[rangeJoin]]'s semantics as a whole-operator Catalyst node, a
+    * [[graft.plans.IntervalJoin]] planned into the sweep
+    * [[graft.plans.IntervalJoinExec]] (broadcast or shuffled, see
+    * there); [[rangeJoin]] delegates to it, so the two run one plan. No
+    * interval is exploded, so a 30-day interval costs what a 30-second
+    * one does. Building it starts no Spark job. */
   def rangeJoinNative(left: DataFrame, right: DataFrame, by: Seq[String],
                       leftTime: String, startCol: String, endCol: String,
                       inclusiveEnd: Boolean = false): DataFrame = {
@@ -420,7 +374,7 @@ object TemporalJoins {
     val spark = left.sparkSession
     val eq = nameEq(spark)
     // payload = every right column except the by keys (emitted once,
-    // from the left side) — the composed rangeJoin's output contract
+    // from the left side)
     val payloadN = right.columns.toSeq.filterNot(c => by.exists(eq(_, c)))
     require(payloadN.nonEmpty, "rangeJoinNative: no right columns to carry")
     def bound(c: String): Column =
@@ -438,48 +392,19 @@ object TemporalJoins {
 
   /** Interval-overlap join: pairs whose half-open intervals
     * `[leftStart, leftEnd)` and `[rightStart, rightEnd)` overlap under
-    * equal `by` keys (`lS < rE && rS < lE`). Same bucketed design as
-    * [[rangeJoin]], but BOTH sides explode into covered buckets — a pair
-    * then meets once per shared bucket, so the join keeps only the first
-    * shared one (`bucket == max(startBucket_l, startBucket_r)`), the
-    * standard dedup-free overlap-join residual. Right columns colliding
-    * with left names are suffixed `_right`; `by` keys emitted once. */
+    * equal `by` keys (`lS < rE && rS < lE`). Right columns colliding
+    * with left names are suffixed `_right`; `by` keys emitted once.
+    *
+    * One operator: this is [[overlapJoinNative]] under its older
+    * signature; `bucketUs` and `maxBucketsPerInterval` are accepted and
+    * ignored. `by` must be non-empty (`IllegalArgumentException`). */
   def overlapJoin(left: DataFrame, right: DataFrame, by: Seq[String],
                   leftStart: String, leftEnd: String,
                   rightStart: String, rightEnd: String,
                   bucketUs: Long,
-                  maxBucketsPerInterval: Int = 4096): DataFrame = {
-    require(bucketUs > 0, "overlapJoin: bucketUs must be positive")
-    def bucketOf(c: Column): Column =
-      floor(c / lit(bucketUs.toDouble)).cast("long")
-    def explodeBuckets(df: DataFrame, sTu: Column, eTu: Column,
-                       pfx: String): DataFrame =
-      df.withColumn(s"${pfx}stu", sTu).withColumn(s"${pfx}etu", eTu)
-        // null-bound intervals ignored (asofJoin's null-time contract);
-        // a null would otherwise abort the job via the assert_true valve
-        .filter(col(s"${pfx}stu").isNotNull && col(s"${pfx}etu").isNotNull)
-        .withColumn(s"${pfx}sb", bucketOf(col(s"${pfx}stu")))
-        .withColumn(s"${pfx}eb", bucketOf(col(s"${pfx}etu")))
-        .withColumn(s"${pfx}nb", col(s"${pfx}eb") - col(s"${pfx}sb") + lit(1L))
-        .withColumn(s"${pfx}ebChecked",
-          when(assert_true(col(s"${pfx}nb") <= maxBucketsPerInterval,
-            concat(lit("overlapJoin: interval spans "), col(s"${pfx}nb"),
-              lit(s" buckets > maxBucketsPerInterval=$maxBucketsPerInterval")))
-            .isNull, col(s"${pfx}eb")))
-        .withColumn("__b", explode(sequence(col(s"${pfx}sb"), col(s"${pfx}ebChecked"))))
-
-    val (rRenamed, rName) = renameCollisions(left, right, by)
-
-    val lExp = explodeBuckets(left,
-      micros(left, leftStart), micros(left, leftEnd), "__l")
-    val rExp = explodeBuckets(rRenamed,
-      micros(rRenamed, rName(rightStart)), micros(rRenamed, rName(rightEnd)), "__r")
-    val joined = lExp.join(rExp, by :+ "__b", "inner")
-      .filter(col("__lstu") < col("__retu") && col("__rstu") < col("__letu") &&
-        col("__b") === greatest(col("__lsb"), col("__rsb")))
-    val rightOut = rRenamed.columns.toSeq.filterNot(by.contains)
-    joined.select((left.columns.toSeq ++ rightOut).map(col): _*)
-  }
+                  maxBucketsPerInterval: Int = 4096): DataFrame =
+    overlapJoinNative(left, right, by, leftStart, leftEnd,
+      rightStart, rightEnd)
 
   /** [[overlapJoin]] on the whole-operator tier, by COMPOSITION over
     * [[rangeJoinNative]] (no third physical operator needed): two
@@ -487,11 +412,9 @@ object TemporalJoins {
     * (`ls ∈ [rs, re)`, leg 1) or the right one starts STRICTLY inside
     * the left one (`rs ∈ (ls, le)`, leg 2) — a disjoint, exactly-once
     * decomposition, so the union needs no dedup. Each leg is one
-    * IntervalJoinExec sweep; a final residual filter
-    * (`ls < re && rs < le`, the composed form's own condition) pins
-    * exactness on degenerate empty intervals. Both sides shuffle at
-    * natural row counts — the composed form explodes BOTH sides into
-    * buckets. Output schema identical to [[overlapJoin]]. */
+    * IntervalJoinExec sweep, broadcast or shuffled by its right side's
+    * size; a final residual filter (`ls < re && rs < le`) pins exactness
+    * on degenerate empty intervals. */
   def overlapJoinNative(left: DataFrame, right: DataFrame, by: Seq[String],
                         leftStart: String, leftEnd: String,
                         rightStart: String, rightEnd: String): DataFrame = {
@@ -515,7 +438,7 @@ object TemporalJoins {
     val leg1 = rangeJoinNative(left, rRenamed, by, lsN, rsOut, reOut)
       .select(outCols.map(col): _*)
     // leg 2's strictness and the final residual compare MICROS (what the
-    // sweep and the composed form compare) — raw column comparison would
+    // sweep compares) — raw column comparison would
     // break mixed numeric-vs-timestamp bounds across sides
     val leg2raw = rangeJoinNative(rRenamed, left, by, rsOut, lsN, leN)
     val leg2 = leg2raw

@@ -10,8 +10,10 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter,
   LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
   Distribution, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.optimizer.JoinSelectionHelper
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Whole-operator Catalyst tier: the engine's one as-of join.
   *
@@ -72,18 +74,22 @@ case class AsofJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoin]] to [[AsofJoinExec]]. Injected via
-  * [[GraftExtensions]] (loaded for every session through its
-  * ServiceLoader entry) or the live-session path
+/** Plans [[AsofJoin]] to [[AsofJoinExec]] and [[IntervalJoin]] to
+  * [[IntervalJoinExec]], broadcasting the interval side when it passes
+  * the size test of Spark's `JoinSelection` (`canBroadcastBySize`:
+  * estimated size at most `spark.sql.autoBroadcastJoinThreshold`).
+  * Injected via [[GraftExtensions]] (loaded for every session through
+  * its ServiceLoader entry) or the live-session path
   * [[GraftPlanning.ensure]]. */
-object GraftStrategy extends SparkStrategy {
+object GraftStrategy extends SparkStrategy with JoinSelectionHelper {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoin(l, r, lk, rk, lt, rt, carry, cAttrs, dir, tol, exact) =>
       AsofJoinExec(lk, rk, lt, rt, carry, cAttrs, dir, tol, exact,
         planLater(l), planLater(r)) :: Nil
     case IntervalJoin(l, r, lk, rk, lt, rs, re, pay, pAttrs, incl) =>
       IntervalJoinExec(lk, rk, lt, rs, re, pay, pAttrs, incl,
-        planLater(l), planLater(r)) :: Nil
+        planLater(l), planLater(r),
+        broadcastRight = canBroadcastBySize(r, SQLConf.get)) :: Nil
     case _ => Nil
   }
 }

@@ -3,42 +3,43 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  AttributeSet, Expression, JoinedRow, RowOrdering, SortOrder,
-  UnsafeProjection}
+  AttributeSet, BindReferences, Expression, JoinedRow, RowOrdering,
+  SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
-  Distribution, Partitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution,
+  BroadcastMode, ClusteredDistribution, Distribution, Partitioning,
+  UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
-/** Whole-operator tier, second node: a native interval (range) join.
+/** Whole-operator tier, second node: the engine's one interval (range)
+  * join. [[graft.ops.TemporalJoins.rangeJoin]] and `rangeJoinNative`
+  * build it, and `overlapJoin`/`overlapJoinNative` compose two of them.
   *
-  * The composed [[graft.ops.TemporalJoins.rangeJoin]] is the classic
-  * bucketed form: every right interval EXPLODES into its covered time
-  * buckets and the join becomes an equi-join on (keys, bucket). That
-  * duplication factor — buckets per interval — is the form's scale
-  * ceiling: a 30-day interval at 6-hour buckets shuffles 120 copies,
-  * and the fail-loud valve (`maxBucketsPerInterval`) exists precisely
-  * because the factor is unbounded. This operator removes the
-  * explosion: both sides shuffle ONCE at their natural row counts
-  * (left sorted by (keys, time), right by (keys, start)), and a
-  * per-partition sweep maintains the set of intervals currently
-  * overlapping the probe time — state bounded by the true concurrent
-  * overlap, not by interval length. No bucket width to tune, no valve
-  * needed.
+  * No interval is exploded: a sweep keeps the intervals overlapping the
+  * probe time, so a 30-day interval costs what a 30-second one does.
   *
-  * Semantics (identical to the composed form, spec-pinned): inner join
-  * of left rows at `leftTimeUs` against right intervals
-  * `[startUs, endUs)` (or `[..]` with `inclusiveEnd`) under equal
-  * keys; SQL equi-join null semantics (null in any key or time never
-  * matches — unlike [[AsofJoin]]'s window-style null grouping, because
-  * the composed twin here is a real join, not a window).
+  * Two distributions, chosen by [[GraftStrategy]] with the size test of
+  * Spark's own `JoinSelection`:
+  *  - '''broadcast''' when the right side's estimated size is at most
+  *    `spark.sql.autoBroadcastJoinThreshold`: the right rows are
+  *    collected, sorted by (keys, start) once and broadcast; the left
+  *    side keeps its partitioning and gets only a local (keys, time)
+  *    sort, with no exchange;
+  *  - '''shuffled''' otherwise: both sides hash-partitioned on the keys
+  *    and sorted within partitions. A skewed left partition can then be
+  *    split against its replicated right partition by
+  *    [[SplitSkewedTemporalJoin]].
   *
-  * [[PushFilterThroughAsofJoin]], [[PruneAsofJoinColumns]] and
-  * [[SplitSkewedTemporalJoin]] cover this node too: every output row
-  * carries its left row's columns unchanged, so deterministic left-only
-  * predicates commute, a parent Project prunes both children below
-  * their exchanges, and a skewed left partition can be split against
-  * its replicated right partition.
+  * Semantics: inner join of left rows at `leftTimeUs` against right
+  * intervals `[startUs, endUs)` (or `[..]` with `inclusiveEnd`) under
+  * equal keys; SQL equi-join null semantics (null in any key, time or
+  * bound never matches — unlike [[AsofJoin]]'s window-style null
+  * grouping).
+  *
+  * [[PushFilterThroughAsofJoin]] and [[PruneAsofJoinColumns]] cover this
+  * node too: every output row carries its left row's columns unchanged,
+  * so deterministic left-only predicates commute and a parent Project
+  * prunes both children below their exchanges.
   */
 case class IntervalJoin(
     left: LogicalPlan,
@@ -61,11 +62,30 @@ case class IntervalJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Sort-merge interval join: per co-partitioned zip, sweep the left
-  * probes in (keys, time) order against right intervals in
-  * (keys, start) order, maintaining the active set (started, not yet
-  * ended). Right rows are consumed exactly once; each emitted pair is
-  * produced exactly once; cost O(|L| + |R| + output). */
+/** Broadcast of the right side of a broadcast [[IntervalJoinExec]]: the
+  * collected rows sorted once, on the driver, in the order the sweep
+  * reads them (`order`, bound to the child's output) — as Spark's
+  * `HashedRelationBroadcastMode` builds its table once rather than in
+  * every task. */
+case class SortedRowsBroadcastMode(order: Seq[SortOrder])
+  extends BroadcastMode {
+
+  override def transform(rows: Array[InternalRow]): Array[InternalRow] =
+    rows.sorted(RowOrdering.create(order, Nil))
+
+  override def transform(rows: Iterator[InternalRow],
+      sizeHint: Option[Long]): Array[InternalRow] = transform(rows.toArray)
+
+  override def canonicalized: BroadcastMode =
+    copy(order = order.map(_.canonicalized.asInstanceOf[SortOrder]))
+}
+
+/** Interval join by sweep: left probes in (keys, time) order against
+  * right intervals in (keys, start) order, keeping the active set
+  * (started, not yet ended). Each right row is read at most once per
+  * left partition (a broadcast side jumps over the keys the partition
+  * lacks); each emitted pair is produced exactly once.
+  * `broadcastRight` picks the distribution (see [[IntervalJoin]]). */
 case class IntervalJoinExec(
     leftKeys: Seq[Expression],
     rightKeys: Seq[Expression],
@@ -77,27 +97,35 @@ case class IntervalJoinExec(
     inclusiveEnd: Boolean,
     left: SparkPlan,
     right: SparkPlan,
+    broadcastRight: Boolean = false,
     isSkewJoin: Boolean = false)
   extends BinaryExecNode {
 
   override def output: Seq[Attribute] = left.output ++ payloadAttrs
   override def producedAttributes: AttributeSet = AttributeSet(payloadAttrs)
 
+  private def leftOrder: Seq[SortOrder] =
+    leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTimeUs, Ascending)
+  private def rightOrder: Seq[SortOrder] =
+    rightKeys.map(SortOrder(_, Ascending)) :+ SortOrder(rightStartUs, Ascending)
+
   // skew-split children (SplitSkewedTemporalJoin) are co-partitioned but
   // no longer hash-clustered
   override def requiredChildDistribution: Seq[Distribution] =
     if (isSkewJoin) UnspecifiedDistribution :: UnspecifiedDistribution :: Nil
+    else if (broadcastRight) UnspecifiedDistribution :: BroadcastDistribution(
+      SortedRowsBroadcastMode(
+        BindReferences.bindReferences(rightOrder, right.output))) :: Nil
     else ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    leftKeys.map(SortOrder(_, Ascending)) :+ SortOrder(leftTimeUs, Ascending),
-    rightKeys.map(SortOrder(_, Ascending)) :+
-      SortOrder(rightStartUs, Ascending))
+  // a broadcast right side is sorted by its broadcast mode
+  override def requiredChildOrdering: Seq[Seq[SortOrder]] =
+    Seq(leftOrder, if (broadcastRight) Nil else rightOrder)
 
   // inner 1:N with left rows emitted in order — left clustering and
   // ordering survive for downstream reuse
   override def outputPartitioning: Partitioning = left.outputPartitioning
-  override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
+  override def outputOrdering: Seq[SortOrder] = leftOrder
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): IntervalJoinExec =
@@ -116,7 +144,9 @@ case class IntervalJoinExec(
     val outAttrs = output
     val inclEnd = inclusiveEnd
 
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
+    // one partition: left rows sorted by (keys, time), right by (keys, start)
+    val sweep: (Iterator[InternalRow], Iterator[InternalRow]) => Iterator[InternalRow] =
+      (lIter, rIter) => {
       val lKeyProj = UnsafeProjection.create(lKeysB, lOut)
       val rKeyProj = UnsafeProjection.create(rKeysB, rOut)
       val lTimeProj = UnsafeProjection.create(Seq(lTimeB), lOut)
@@ -126,6 +156,11 @@ case class IntervalJoinExec(
       val keyOrd = RowOrdering.createNaturalAscendingOrdering(keyTypes)
       val joined = new JoinedRow
       val rBuf = rIter.buffered
+      // a broadcast side holds every key: jump over those before the probe's
+      def seek(lk: InternalRow): Unit = rBuf match {
+        case c: SortedRowsCursor => c.skipWhile(r => keyOrd.compare(rKeyProj(r), lk) < 0)
+        case _ =>
+      }
 
       // intervals of ONE key currently overlapping the sweep position:
       // (endUs, payload copy); invalidated when the left key moves on
@@ -144,6 +179,7 @@ case class IntervalJoinExec(
           if (activeKey == null || keyOrd.compare(activeKey, lk) != 0) {
             active.clear()
             activeKey = lk.copy()
+            seek(lk)
           }
           // admit right intervals whose start is at-or-before the probe
           var advancing = true
@@ -182,6 +218,30 @@ case class IntervalJoinExec(
           active.iterator.map { case (_, p) => resultProj(joined(lrow, p)) }
         }
       }
+    }
+
+    if (broadcastRight) {
+      val rows = right.executeBroadcast[Array[InternalRow]]()
+      left.execute().mapPartitions(l => sweep(l, new SortedRowsCursor(rows.value)))
+    } else left.execute().zipPartitions(right.execute())(sweep)
+  }
+}
+
+/** A broadcast right side read forward like an iterator, which can also
+  * jump: its rows are sorted, so a predicate that holds on a prefix of
+  * the remaining rows is skipped by binary search. */
+final class SortedRowsCursor(rows: Array[InternalRow])
+  extends BufferedIterator[InternalRow] {
+  private var pos = 0
+  override def hasNext: Boolean = pos < rows.length
+  override def head: InternalRow = rows(pos)
+  override def next(): InternalRow = { pos += 1; rows(pos - 1) }
+
+  def skipWhile(prefix: InternalRow => Boolean): Unit = {
+    var hi = rows.length
+    while (pos < hi) {
+      val mid = (pos + hi) >>> 1
+      if (prefix(rows(mid))) pos = mid + 1 else hi = mid
     }
   }
 }

@@ -60,7 +60,8 @@ object SplitSkewedTemporalJoin extends Rule[SparkPlan] {
         splitChildren("AsofJoinExec", j.left, j.right, decisions)
           .map { case (l, r) => j.copy(left = l, right = r, isSkewJoin = true) }
           .getOrElse(j)
-      case j: IntervalJoinExec if !j.isSkewJoin =>
+      // a broadcast interval join has no shuffle partition to split
+      case j: IntervalJoinExec if !j.isSkewJoin && !j.broadcastRight =>
         splitChildren("IntervalJoinExec", j.left, j.right, decisions)
           .map { case (l, r) => j.copy(left = l, right = r, isSkewJoin = true) }
           .getOrElse(j)

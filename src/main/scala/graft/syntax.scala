@@ -140,12 +140,14 @@ object syntax {
         allowExactMatches: Boolean = true): DataFrame =
       TemporalJoins.asofJoinNative(df, right, Seq(pc.id), pc.time, pc.time,
         rightCols, direction, toleranceUs, allowExactMatches = allowExactMatches)
+    /** [[rangeJoinNative]] under its older signature; `bucketUs` is
+      * accepted and ignored. */
     def rangeJoin(right: DataFrame, startCol: String, endCol: String,
         bucketUs: Long): DataFrame =
       TemporalJoins.rangeJoin(df, right, Seq(pc.id), pc.time,
         startCol, endCol, bucketUs)
-    /** [[rangeJoin]] on the whole-operator tier (IntervalJoinExec
-      * sweep — no bucketUs, no interval explosion). */
+    /** The range join on the whole-operator tier: the IntervalJoinExec
+      * sweep, with a broadcast right side when it is small. */
     def rangeJoinNative(right: DataFrame, startCol: String, endCol: String,
         inclusiveEnd: Boolean = false): DataFrame =
       TemporalJoins.rangeJoinNative(df, right, Seq(pc.id), pc.time,

@@ -170,7 +170,7 @@ object PlanAudit {
     // round-9 temporal & layout tier
     audit("asof join (expect per-side hash exchanges + AsofJoin merge, ZERO join operators)",
       leg("asof_join").body(ctx))
-    audit("range join (expect equi join on (key,bucket) — no BroadcastNestedLoopJoin)",
+    audit("range join (expect IntervalJoin sweep, broadcast or per-side hash exchanges — no BroadcastNestedLoopJoin)",
       leg("range_join").body(ctx))
     audit("sessionize summary (expect grouped window + reused partitioning for the agg)",
       leg("sessionize").body(ctx))

@@ -16,11 +16,14 @@ object SkewSplitTesting extends AdaptiveSparkPlanHelper {
 
   /** Spark's skew-join thresholds lowered so a KB-scale hot partition
     * qualifies: any partition above 1 byte and 1.5× the median is
-    * skewed, and the split target is the mean non-skewed partition. */
+    * skewed, and the split target is the mean non-skewed partition.
+    * Broadcasting is off, so a KB-scale interval side stays shuffled
+    * and its join has a partition to split. */
   val LowThresholds: Map[String, String] = Map(
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1",
     "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.5",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1")
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
 
   val SkewOff: Map[String, String] =
     Map("spark.sql.adaptive.skewJoin.enabled" -> "false")

@@ -38,7 +38,7 @@ class CodegenCacheSpec extends AnyFunSuite {
   }
 
   /** The bodies of perfbench's seven `panel_features` legs and five of its
-    * `temporal_skew` legs, run on the panel: ~140 distinct generated
+    * `temporal_skew` legs, run on the panel: ~125 distinct generated
     * classes, so at 100 entries every segment overflows. */
   private def legs(panel: DataFrame, cov: DataFrame): Seq[DataFrame] = {
     val windows = cov.select(col("series_id"), col("ts").as("w_start"),

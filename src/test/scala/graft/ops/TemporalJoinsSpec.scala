@@ -17,7 +17,7 @@ import java.sql.Timestamp
   * new session strictly-greater-than the gap.
   *
   * Plan shapes pinned: asofJoin = ONE exchange (no join operator at
-  * all), rangeJoin = equi hash/sort-merge join (never a
+  * all), rangeJoin = the IntervalJoinExec sweep (never a
   * BroadcastNestedLoopJoin / CartesianProduct).
   */
 class TemporalJoinsSpec extends AnyFunSuite {
@@ -211,6 +211,10 @@ class TemporalJoinsSpec extends AnyFunSuite {
     assert(inc.select("ev_id", "win_id").collect()
       .map(x => (x.getLong(0), x.getLong(1))).toSet ==
       Set((100L, 10L), (101L, 10L), (101L, 11L), (102L, 10L)))
+    // no keys: a keyless interval join is refused, not run
+    intercept[IllegalArgumentException] {
+      TemporalJoins.rangeJoin(l, r, Nil, "t", "w_start", "w_end", hour)
+    }
   }
 
   test("rangeJoin: no pair duplicated across buckets") {
@@ -233,21 +237,38 @@ class TemporalJoinsSpec extends AnyFunSuite {
     val out = TemporalJoins.rangeJoin(l, r, Seq("k"), "t", "w_start", "w_end", hour)
     out.write.format("noop").mode("overwrite").save()
     val plan = out.queryExecution.executedPlan.toString
+    assert(graft.SkewSplitTesting.collect(out.queryExecution.executedPlan) {
+      case j: graft.plans.IntervalJoinExec => j }.size == 1,
+      s"rangeJoin must run the sweep:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"rangeJoin must stay an equi join:\n$plan")
   }
 
-  test("rangeJoin: interval wider than maxBucketsPerInterval fails loudly") {
+  test("rangeJoin: a 30-day interval is joined whatever bucketUs and maxBucketsPerInterval say") {
     import spark.implicits._
-    val r = Seq((1L, 10L, ts("2024-01-01 00:00:00"), ts("2024-03-01 00:00:00")))
+    // 720 one-hour buckets against a cap of 100: the join has no buckets,
+    // so both parameters are ignored
+    val r = Seq((1L, 10L, ts("2024-01-01 00:00:00"), ts("2024-01-31 00:00:00")),
+      (2L, 11L, ts("2024-01-01 00:00:00"), ts("2024-01-31 00:00:00")))
       .toDF("k", "win_id", "w_start", "w_end")
-    val l = Seq((1L, 100L, ts("2024-01-05 00:00:00"))).toDF("k", "ev_id", "t")
-    val ex = intercept[Exception] {
-      TemporalJoins.rangeJoin(l, r, Seq("k"), "t", "w_start", "w_end",
-        bucketUs = 3600L * 1000000, maxBucketsPerInterval = 100).count()
-    }
-    assert(ex.getMessage.contains("maxBucketsPerInterval") ||
-      Option(ex.getCause).exists(_.getMessage.contains("maxBucketsPerInterval")))
+    val l = Seq(
+      (1L, 100L, ts("2024-01-01 00:00:00")), // == start: in
+      (1L, 101L, ts("2024-01-17 05:30:00")), // deep inside: in
+      (1L, 102L, ts("2024-01-31 00:00:00")), // == end: out
+      (2L, 103L, ts("2023-12-31 23:59:59")), // before: out
+      (3L, 104L, ts("2024-01-10 00:00:00"))  // no interval of its key: out
+    ).toDF("k", "ev_id", "t")
+    val got = TemporalJoins.rangeJoin(l, r, Seq("k"), "t", "w_start", "w_end",
+        bucketUs = 3600L * 1000000, maxBucketsPerInterval = 100)
+      .select("ev_id", "win_id").collect().map(x => (x.getLong(0), x.getLong(1)))
+    // brute force over the same rows
+    val brute = for {
+      a <- l.collect().toSeq; b <- r.collect().toSeq
+      if a.getLong(0) == b.getLong(0) && !a.getTimestamp(2).before(b.getTimestamp(2)) &&
+        a.getTimestamp(2).before(b.getTimestamp(3))
+    } yield (a.getLong(1), b.getLong(1))
+    assert(got.toSeq.sorted === brute.sorted)
+    assert(brute.sorted === Seq((100L, 10L), (101L, 10L)))
   }
 
   test("overlapJoin: half-open overlap, shared-bucket dedup, key separation") {
@@ -271,6 +292,11 @@ class TemporalJoinsSpec extends AnyFunSuite {
     assert(pairs.length == pairs.distinct.length, s"duplicated pairs: ${pairs.toSeq}")
     assert(pairs.toSet == Set((10L, 20L), (11L, 20L), (10L, 22L), (11L, 22L)),
       s"got ${pairs.toSet}")
+    // no keys: a keyless overlap join is refused, not run
+    intercept[IllegalArgumentException] {
+      TemporalJoins.overlapJoin(l, r, Nil,
+        "l_start", "l_end", "r_start", "r_end", bucketUs = hour)
+    }
   }
 
   test("sessionize: new session strictly beyond gap; tie-break total order") {

@@ -1,17 +1,23 @@
 package graft.plans
 
+import graft.SkewSplitTesting.withConfs
 import graft.TestSpark
 import graft.ops.TemporalJoins
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
-/** The second whole-operator node: [[IntervalJoinExec]] must equal the
-  * bucketed rangeJoin on randomized data (boundaries, nulls, multiple
-  * overlaps), handle intervals far beyond the bucketed form's
-  * explosion valve, keep the no-explosion plan shape (no Generate/
-  * explode anywhere), and share the pushdown/prune rules. */
+/** The one interval-join operator: [[IntervalJoinExec]] must equal a
+  * brute-force inequality join on randomized data (boundaries, nulls,
+  * multiple overlaps) in both of its distributions (broadcast right
+  * side, or both sides hash-partitioned), handle intervals of any
+  * width, keep the no-explosion plan shape (no Generate/explode
+  * anywhere), and share the pushdown/prune rules. */
 class IntervalJoinNativeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -19,6 +25,62 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
+
+  /** The brute-force reference join, canonicalized as [[canon]]: every
+    * (left row, right row without its key) pair with equal non-null
+    * keys (column 0 on both sides) that `pred` admits. */
+  private def brute(l: DataFrame, r: DataFrame)(
+      pred: (Row, Row) => Boolean): Seq[String] = {
+    val rs = r.collect().toSeq
+    l.collect().toSeq.flatMap(a => rs.collect {
+      case b if !a.isNullAt(0) && a.get(0) == b.get(0) && pred(a, b) =>
+        Row.fromSeq(a.toSeq ++ b.toSeq.tail).toString
+    }).sorted
+  }
+
+  /** Left time (column 1) inside the right `[start, end)` (columns 1, 2),
+    * or `[start, end]` with `incl`; a null never matches. */
+  private def inRange(incl: Boolean)(a: Row, b: Row): Boolean = {
+    val (t, s, e) = (a.getTimestamp(1), b.getTimestamp(1), b.getTimestamp(2))
+    t != null && s != null && e != null && !t.before(s) &&
+      (if (incl) !t.after(e) else t.before(e))
+  }
+
+  /** Half-open intervals (columns 1, 2 on each side) that overlap. */
+  private def overlaps(a: Row, b: Row): Boolean =
+    a.getTimestamp(1).before(b.getTimestamp(2)) &&
+      b.getTimestamp(1).before(a.getTimestamp(2))
+
+  private val NoBroadcast = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  private def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] =
+    graft.SkewSplitTesting.collect(p) { case e: ShuffleExchangeLike => e }
+
+  /** Builds and checks `df` in both distributions: as planned (the
+    * KB-scale fixtures pass Spark's broadcast size test, so the right
+    * side is broadcast and nothing is shuffled at the join), and with
+    * broadcasting off (both sides hash-partitioned). */
+  private def inBothModes(build: => DataFrame)(check: DataFrame => Unit): Unit =
+    for (broadcast <- Seq(true, false))
+      withConfs(spark, if (broadcast) Map.empty else NoBroadcast) {
+        val df = build
+        check(df)
+        val joins = graft.SkewSplitTesting.collect(df.queryExecution.executedPlan) {
+          case j: IntervalJoinExec => j
+        }
+        assert(joins.nonEmpty)
+        joins.foreach { j =>
+          assert(j.broadcastRight === broadcast, j)
+          if (broadcast) {
+            assert(shuffles(j.left).isEmpty && shuffles(j.right).isEmpty, j)
+            assert(graft.SkewSplitTesting.collect(j.right) {
+              case b: BroadcastExchangeLike => b }.size === 1, j)
+          } else for (side <- Seq(j.left, j.right)) {
+            val Seq(e) = shuffles(side)
+            assert(e.outputPartitioning.isInstanceOf[HashPartitioning], e)
+          }
+        }
+      }
 
   private lazy val (probes, intervals): (DataFrame, DataFrame) = {
     import spark.implicits._
@@ -40,7 +102,7 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
       val s: Timestamp =
         if (i % 29 == 0) null else new Timestamp(s0)
       // null ENDS too: the exec's null-end discard branch must agree
-      // with the composed form's __etu filter
+      // with the reference join's null rule
       val e: Timestamp =
         if (i % 37 == 0) null else new Timestamp(s0 + len)
       (k, s, e, i.toLong)
@@ -48,23 +110,38 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
     (l.cache(), r.cache())
   }
 
+  /** Left and right intervals for the overlap join: a few zero-length
+    * (degenerate) ones, and exact equal-start pairs across the sides
+    * (the exactly-once decomposition's boundary case). */
+  private lazy val (overlapL, overlapR): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val rng = new scala.util.Random(11)
+    val base = ts("2024-01-01 00:00:00").getTime
+    def mk(n: Int, seedOff: Int) = (1 to n).map { i =>
+      val k = (rng.nextInt(4) + 1).toLong
+      val s0 = base + rng.nextInt(100000) * 1000L
+      val len = if (i % 21 == 0) 0L else (rng.nextInt(30000) + 1) * 1000L
+      (k, new Timestamp(s0), new Timestamp(s0 + len), (i + seedOff).toLong)
+    }
+    val l = mk(120, 0).toDF("k", "ls", "le", "lid")
+    val r = mk(120, 1000).toDF("k", "rs", "re", "rid")
+    (l.unionByName(r.select(col("k"), col("rs").as("ls"),
+      col("re").as("le"), (col("rid") + 5000L).as("lid"))), r)
+  }
+
   for (incl <- Seq(false, true))
-    test(s"native == bucketed rangeJoin on randomized data, inclusiveEnd=$incl") {
-      val bucketed = TemporalJoins.rangeJoin(probes, intervals, Seq("k"),
-        "t", "w_start", "w_end", bucketUs = 3600L * 1000000L,
-        inclusiveEnd = incl)
-      val native = TemporalJoins.rangeJoinNative(probes, intervals, Seq("k"),
-        "t", "w_start", "w_end", inclusiveEnd = incl)
-      assert(native.columns.toSeq === bucketed.columns.toSeq)
-      assert(canon(native) === canon(bucketed))
+    test(s"rangeJoinNative == brute force in both modes, inclusiveEnd=$incl") {
+      inBothModes(TemporalJoins.rangeJoinNative(probes, intervals, Seq("k"),
+          "t", "w_start", "w_end", inclusiveEnd = incl)) { native =>
+        assert(native.columns.toSeq ===
+          Seq("k", "t", "pid", "w_start", "w_end", "iid"))
+        assert(canon(native) === brute(probes, intervals)(inRange(incl)))
+      }
     }
 
   test("intervals beyond the bucketed form's valve are fine natively") {
     import spark.implicits._
-    // a 2-year interval: at 6h buckets that is ~2920 buckets per row —
-    // the bucketed form at default maxBucketsPerInterval=4096 barely
-    // admits it (and duplicates each interval 2920x in the shuffle);
-    // the native sweep shuffles each interval exactly once
+    // a 2-year interval is read once, however wide it is
     val l = Seq((1L, ts("2024-06-01 12:00:00"), "in"),
       (1L, ts("2027-01-01 00:00:00"), "out")).toDF("k", "t", "lv")
     val r = Seq((1L, ts("2024-01-01 00:00:00"),
@@ -84,9 +161,13 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
       new Timestamp(1704067200000L + i * 2000L),
       new Timestamp(1704067200000L + i * 2000L + 30000L), i.toLong))
       .toDF("k", "w_start", "w_end", "iid")
-    val df = TemporalJoins.rangeJoinNative(l, r, Seq("k"), "t",
-      "w_start", "w_end")
-    df.collect()
+    // the shuffled mode, where each side has its own exchange and sort
+    val df = withConfs(spark, NoBroadcast) {
+      val d = TemporalJoins.rangeJoinNative(l, r, Seq("k"), "t",
+        "w_start", "w_end")
+      d.collect()
+      d
+    }
     val s = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(s.contains("IntervalJoin"), s)
@@ -122,29 +203,12 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
     assert(got === Seq(1L, 2L, 3L))
   }
 
-  test("overlapJoinNative == composed overlapJoin on randomized intervals") {
-    import spark.implicits._
-    val rng = new scala.util.Random(11)
-    val base = ts("2024-01-01 00:00:00").getTime
-    def mk(n: Int, seedOff: Int) = (1 to n).map { i =>
-      val k = (rng.nextInt(4) + 1).toLong
-      val s0 = base + rng.nextInt(100000) * 1000L
-      // a few zero-length (degenerate) and many equal-start intervals
-      val len = if (i % 21 == 0) 0L else (rng.nextInt(30000) + 1) * 1000L
-      (k, new Timestamp(s0), new Timestamp(s0 + len), (i + seedOff).toLong)
+  test("overlapJoinNative == brute force in both modes") {
+    inBothModes(TemporalJoins.overlapJoinNative(overlapL, overlapR, Seq("k"),
+        "ls", "le", "rs", "re")) { native =>
+      assert(native.columns.toSeq === Seq("k", "ls", "le", "lid", "rs", "re", "rid"))
+      assert(canon(native) === brute(overlapL, overlapR)(overlaps))
     }
-    val l = mk(120, 0).toDF("k", "ls", "le", "lid")
-    val r = mk(120, 1000).toDF("k", "rs", "re", "rid")
-    // force some exact equal-start pairs across sides (the
-    // exactly-once decomposition's boundary case)
-    val l2 = l.unionByName(r.select(col("k"), col("rs").as("ls"),
-      col("re").as("le"), (col("rid") + 5000L).as("lid")))
-    val composed = TemporalJoins.overlapJoin(l2, r, Seq("k"),
-      "ls", "le", "rs", "re", bucketUs = 3600L * 1000000L)
-    val native = TemporalJoins.overlapJoinNative(l2, r, Seq("k"),
-      "ls", "le", "rs", "re")
-    assert(native.columns.toSeq === composed.columns.toSeq)
-    assert(canon(native) === canon(composed))
   }
 
   test("shared rules fire: left filter pushed below, unused payload pruned") {
@@ -177,13 +241,10 @@ class IntervalJoinNativeSpec extends AnyFunSuite {
     val r = Seq((1L, ts("2024-01-01 00:00:00"), ts("2024-01-01 01:00:00"),
       2.0)).toDF("k", "s", "e", "val")
     // resolution is case-insensitive by default, so left Val vs right
-    // val IS ambiguous: both forms must emit val_right
-    val bucketed = TemporalJoins.rangeJoin(l, r, Seq("k"), "t", "s", "e",
-      bucketUs = 3600L * 1000000L)
+    // val IS ambiguous: the join must emit val_right
     val native = TemporalJoins.rangeJoinNative(l, r, Seq("k"), "t", "s", "e")
     assert(native.columns.toSeq === Seq("k", "t", "Val", "s", "e", "val_right"))
-    assert(native.columns.toSeq === bucketed.columns.toSeq)
-    assert(canon(native) === canon(bucketed))
+    assert(canon(native) === brute(l, r)(inRange(incl = false)))
     assert(native.select(col("Val"), col("val_right")).count() === 10)
   }
 
