@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 
 /** The one registry of bench legs. [[Bench]] times [[timed]] (all of it,
   * or a named subset) and runs [[scaleLegs]] at 1× and 10×;
-  * `tools.DeepScale` runs the same [[scaleLegs]] at 1× and N×;
-  * `tools.PlanAudit` audits the plans of the same bodies. A leg body is
-  * written here once, so a rename or a changed parameter reaches every
-  * harness at once.
+  * `tools.DeepScale` runs the same [[scaleLegs]] at 1× and N×; the
+  * test `PlanShapeSpec` asserts the plans of the same bodies. A leg body
+  * is written here once, so a rename or a changed parameter reaches
+  * every harness at once.
   *
   * Every timed body is lazy: it builds a DataFrame, and the harness
   * materializes it through the `noop` sink ([[mat]]) — `count()` would
@@ -472,7 +472,4 @@ object BenchLegs {
       s"unknown bench leg(s): ${unknown.toSeq.sorted.mkString(", ")}")
     timed.filter(l => wanted.contains(l.name))
   }
-
-  /** The timed leg called `name`; an unknown name fails, naming it. */
-  def leg(name: String): Leg = select(name).head
 }

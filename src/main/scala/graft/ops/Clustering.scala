@@ -49,18 +49,20 @@ object Clustering {
     (ids, m, ids.map(lmap.getOrElse(_, -1)))
   }
 
-  /** `byId` (keyed by the string id `__id_str`) joined back to `df`'s
-    * typed series ids: `[id, <byId's other columns>]`. */
-  private def joinIds(df: DataFrame, byId: DataFrame)(implicit pc: PanelCols): DataFrame =
-    byId.join(df.select(pc.idCol).distinct()
-        .withColumn("__id_str", pc.idCol.cast("string")), Seq("__id_str"))
-      .select(pc.idCol +: byId.columns.filter(_ != "__id_str").toSeq.map(col): _*)
+  /** `byId`, a driver-local frame keyed by the string id `__id_str`, as
+    * `[id, <byId's other columns>]`: the string id (as [[collectMatrix]]
+    * read it) is cast back to the type of `df`'s id column, so the result
+    * is still a local frame and never rescans the panel. The row order of
+    * `byId` is kept. */
+  private def typedIds(df: DataFrame, byId: DataFrame)(implicit pc: PanelCols): DataFrame =
+    byId.select(col("__id_str").cast(df.select(pc.idCol).schema.head.dataType).as(pc.id) +:
+      byId.columns.filter(_ != "__id_str").toSeq.map(col): _*)
 
   private def labelFrame(df: DataFrame, ids: Array[String], labels: Array[Int])(
       implicit pc: PanelCols): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    joinIds(df, ids.zip(labels).toSeq.toDF("__id_str", "cluster"))
+    typedIds(df, ids.zip(labels).toSeq.toDF("__id_str", "cluster"))
   }
 
   /** `[id, cluster]` from `fit` over the distance matrix. */
@@ -610,7 +612,7 @@ object Clustering {
     val sil = Cluster.silhouetteSamples(m, labels)
     val spark = df.sparkSession
     import spark.implicits._
-    joinIds(df, ids.indices.map(i => (ids(i), labels(i), sil(i)))
+    typedIds(df, ids.indices.map(i => (ids(i), labels(i), sil(i)))
       .toDF("__id_str", "cluster", "silhouette"))
   }
 

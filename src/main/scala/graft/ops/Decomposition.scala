@@ -251,9 +251,9 @@ object Decomposition {
   /** Grouped-array MSTL — the PRODUCTION path (VERDICT r6 ask #7): ONE
     * collect_list shuffle and a per-series kernel, where the row-level
     * window formulation [[mstl]] costs (iterations · periods) window +
-    * phase-mean-join passes (19 exchanges / 33 broadcasts at 2 periods ×
-    * 2 iterations in PlanAudit — structurally inherent to making it
-    * SQL-oracle-replayable). [[mstl]] stays as the oracle twin;
+    * phase-mean-join passes (16 shuffles / 15 broadcasts in the initial
+    * plan at 2 periods × 2 iterations on sf0.001 — structurally inherent
+    * to making it SQL-oracle-replayable). [[mstl]] stays as the oracle twin;
     * MstlGroupedSpec asserts the two paths agree to 1e-9. Output
     * `[id, ts, trend, seasonal_{p}…, resid]`. */
   def mstlGrouped(df: DataFrame, periods: Seq[Int], iterations: Int = 2)(

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +20,22 @@ object TestSpark {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** `f`'s result and the number of Spark jobs started while it runs. */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    GraftListenerBridge.waitUntilEmpty(sc)
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      val out = f
+      GraftListenerBridge.waitUntilEmpty(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
   }
 }
 

@@ -1,12 +1,10 @@
 package graft.core
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.TestSpark
+import graft.TestSpark.jobsDuring
 import graft.ops.{Distances, TemporalJoins}
-import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,22 +17,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * row-group-aware scan width. */
 class JobFreeBuildSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    GraftListenerBridge.waitUntilEmpty(sc)
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = f
-      GraftListenerBridge.waitUntilEmpty(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft_io_spec").toString

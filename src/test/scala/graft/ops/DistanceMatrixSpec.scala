@@ -11,6 +11,7 @@ import org.apache.spark.GraftListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The one pair join of [[Distances]] and the distance-matrix clustering
@@ -82,10 +83,36 @@ class DistanceMatrixSpec extends AnyFunSuite {
     top.foreach(r => assert(group(r.getLong(0)) === group(r.getLong(1)), r))
   }
 
+  /** [[panel]] with its series ids as `Long` (0 until nSeries) or as the
+    * `Date` 2024-01-01 plus the id in days, and each typed id's index
+    * (dates as `LocalDate`). */
+  private def typedPanel(idType: DataType): (DataFrame, Map[Any, Long]) = idType match {
+    case LongType => (panel, (0L until nSeries).map(i => (i: Any) -> i).toMap)
+    case DateType =>
+      val day0 = java.time.LocalDate.of(2024, 1, 1)
+      (panel.withColumn("unique_id",
+          date_add(lit(day0.toString).cast("date"), col("unique_id").cast("int"))),
+        (0L until nSeries).map(i => (day0.plusDays(i): Any) -> i).toMap)
+  }
+
   test("kmedoids, agglomerativeCluster and dbscanCluster recover the three groups") {
-    recovers(labels(Clustering.kmedoids(panel, k = 3)))
-    recovers(labels(Clustering.agglomerativeCluster(panel, k = 3)))
-    recovers(labels(Clustering.dbscanCluster(panel, eps = 50.0, minPts = 2)))
+    for (idType <- Seq(LongType, DateType)) {
+      val (df, index) = typedPanel(idType)
+      Seq(Clustering.kmedoids(df, k = 3), Clustering.agglomerativeCluster(df, k = 3),
+          Clustering.dbscanCluster(df, eps = 50.0, minPts = 2)).foreach { out =>
+        assert(out.schema("unique_id").dataType === idType)
+        // the labels are a driver-local frame: reading them starts no job
+        val (rows, jobs) = TestSpark.jobsDuring(out.collect())
+        assert(jobs === 0, s"$idType: reading the labels started $jobs jobs")
+        recovers(rows.map { r =>
+          val id = r.get(0) match {
+            case d: java.sql.Date => d.toLocalDate
+            case v => v
+          }
+          index(id) -> r.getInt(1)
+        }.toMap)
+      }
+    }
   }
 
   test("evaluate, silhouetteSamples and calinskiHarabasz equal the Cluster kernels") {
