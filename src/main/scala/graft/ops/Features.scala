@@ -27,13 +27,21 @@ object Features {
     }
   }
 
-  private val supportedRollingAggs =
-    Set("mean", "std", "min", "max", "sum", "median", "var")
+  /** The rolling window aggregates by name, applied to the target. */
+  private val rollingAggs: Map[String, Column => Column] = Map(
+    "mean" -> (c => avg(c)),
+    "std" -> (c => stddev_samp(c)),
+    "var" -> (c => var_samp(c)),
+    "min" -> (c => min(c)),
+    "max" -> (c => max(c)),
+    "sum" -> (c => sum(c)),
+    "median" -> (c => percentile(c, lit(0.5))),
+    "count" -> (c => count(c)))
 
-  /** `{y}_rolling_{agg}_{w}` with `min_samples` null-gating and optional
-    * centred window (odd window sizes). Reference features/rolling.py:12-72.
-    * All aggs — including median (exact percentile) — run as window
-    * aggregates inside whole-stage codegen; no per-group collection. */
+  /** What [[rollingFeatures]] computes: every rolling aggregate but the
+    * count, which its min-samples gate reads. */
+  private val supportedRollingAggs = rollingAggs.keySet - "count"
+
   /** Exponentially weighted moving mean/variance — polars
     * `ewm_mean`/`ewm_var`. `adjust = true` (polars default) computes the
     * weighted-moment form `Σ(1−α)^(t−i)·y_i / Σ(1−α)^(t−i)` via a Horner
@@ -99,37 +107,21 @@ object Features {
       aggs: Seq[String] = Seq("mean", "min", "max", "count"))(
       implicit pc: PanelCols): DataFrame = {
     require(windowUs > 0, "rollingByTime: windowUs must be positive")
-    aggs.foreach(a => require(supportedRollingAggs(a) || a == "count",
+    aggs.foreach(a => require(rollingAggs.contains(a),
       s"Unsupported aggregation '$a'"))
-    // epoch-µs ordering key: timestamps convert via unix_micros; numeric
-    // time columns are taken as µs directly (casting a long through
-    // TIMESTAMP would silently reinterpret it as SECONDS)
-    val orderKey = df.schema(pc.time).dataType match {
-      case org.apache.spark.sql.types.TimestampType |
-           org.apache.spark.sql.types.TimestampNTZType |
-           org.apache.spark.sql.types.DateType =>
-        unix_micros(pc.timeCol.cast("timestamp"))
-      case _ => pc.timeCol.cast("long")
-    }
-    val frame = org.apache.spark.sql.expressions.Window
-      .partitionBy(pc.idCol)
-      .orderBy(orderKey)
+    val frame = Window.partitionBy(pc.idCol)
+      .orderBy(TemporalJoins.micros(df, pc.time))
       .rangeBetween(-(windowUs - 1), 0)
     aggs.foldLeft(df) { (d, agg) =>
-      val e = agg match {
-        case "mean" => avg(pc.targetCol).over(frame)
-        case "std" => stddev_samp(pc.targetCol).over(frame)
-        case "var" => var_samp(pc.targetCol).over(frame)
-        case "min" => min(pc.targetCol).over(frame)
-        case "max" => max(pc.targetCol).over(frame)
-        case "sum" => sum(pc.targetCol).over(frame)
-        case "count" => count(pc.targetCol).over(frame)
-        case "median" => percentile(pc.targetCol, lit(0.5)).over(frame)
-      }
-      d.withColumn(s"${pc.target}_troll_$agg", e)
+      d.withColumn(s"${pc.target}_troll_$agg",
+        rollingAggs(agg)(pc.targetCol).over(frame))
     }
   }
 
+  /** `{y}_rolling_{agg}_{w}` with `min_samples` null-gating and optional
+    * centred window (odd window sizes). Reference features/rolling.py:12-72.
+    * All aggs — including median (exact percentile) — run as window
+    * aggregates inside whole-stage codegen; no per-group collection. */
   def rollingFeatures(df: DataFrame, windows: Seq[Int], aggs: Seq[String] = Seq("mean", "std", "min", "max"),
       center: Boolean = false, minSamples: Int = -1)(implicit pc: PanelCols): DataFrame = {
     aggs.foreach(a => require(supportedRollingAggs(a), s"Unsupported aggregation '$a'"))
@@ -148,16 +140,8 @@ object Features {
       val counted = d.withColumn(RollingCount, count(pc.targetCol).over(frame))
       def gate(e: Column): Column = when(col(RollingCount) >= mp, e)
       aggs.foldLeft(counted) { (d2, agg) =>
-        val e = agg match {
-          case "mean" => avg(pc.targetCol).over(frame)
-          case "std" => stddev_samp(pc.targetCol).over(frame)
-          case "var" => var_samp(pc.targetCol).over(frame)
-          case "min" => min(pc.targetCol).over(frame)
-          case "max" => max(pc.targetCol).over(frame)
-          case "sum" => sum(pc.targetCol).over(frame)
-          case "median" => percentile(pc.targetCol, lit(0.5)).over(frame)
-        }
-        d2.withColumn(s"${pc.target}_rolling_${agg}_$n", gate(e))
+        d2.withColumn(s"${pc.target}_rolling_${agg}_$n",
+          gate(rollingAggs(agg)(pc.targetCol).over(frame)))
       }.drop(RollingCount)
     }
   }
@@ -256,16 +240,15 @@ object Features {
     }
   }
 
-  /** Binary `is_holiday` from a provided holiday-date set (the reference
-    * delegates to the `holidays` package — here the dates table is an
-    * input; broadcast-joined against the panel).
-    * Reference features/advanced.py:57-113. */
-  /** Holiday indicator + optional distance features (reference
-    * features/advanced.py:47-110: `days_to_holiday` = days to the first
-    * holiday ≥ date, `days_since_holiday` = days since the last holiday
-    * ≤ date, 365 when none exists on that side). The holiday list is
-    * calendar metadata — a literal array in the plan, so both features
-    * are pure scan-speed expressions with no join or shuffle. */
+  /** Binary `is_holiday` plus optional distance features from a provided
+    * holiday-date set (reference features/advanced.py:47-113; the
+    * reference delegates to the `holidays` package — here the dates are
+    * an input). `is_holiday` is a left join of the panel against the
+    * distinct dates, broadcast so the panel never shuffles.
+    * `days_to_holiday` = days to the first holiday ≥ date,
+    * `days_since_holiday` = days since the last holiday ≤ date, 365 when
+    * none exists on that side: the dates ride the plan as a literal
+    * array, so both distances are per-row expressions with no join. */
   def holidayFeatures(df: DataFrame, holidays: Seq[java.sql.Date],
       distance: Boolean = false)(implicit pc: PanelCols): DataFrame = {
     val spark = df.sparkSession

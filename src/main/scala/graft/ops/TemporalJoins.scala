@@ -66,8 +66,9 @@ object TemporalJoins {
 
   /** Epoch-µs view of a time column (timestamp, date, or numeric). NTZ
     * and DATE cast through LTZ under the session's UTC zone,
-    * value-preserving. */
-  private def micros(df: DataFrame, c: String): Column =
+    * value-preserving; a numeric column is taken as µs directly (casting
+    * a long through TIMESTAMP would silently read it as SECONDS). */
+  private[ops] def micros(df: DataFrame, c: String): Column =
     df.schema(c).dataType match {
       case TimestampType | TimestampNTZType |
            org.apache.spark.sql.types.DateType =>

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import java.sql.Timestamp
+import scala.reflect.runtime.universe.TypeTag
 
 /** Structured-Streaming online learners (reference polars_ts/streaming/):
   * the reference's `partial_fit` state dicts become per-key
@@ -12,12 +13,61 @@ import java.sql.Timestamp
   */
 object StreamingOps {
 
-  /** `tie` breaks equal-ts ordering in the batch twins (the repo-wide
-    * ORDER BY ts, event_id convention — ADVICE r6: ts alone makes the
-    * fold order, and hence gate parity, depend on group-iterator luck
-    * whenever a series has a ts collision). Streams fold in arrival
-    * order, so the field is inert there. */
+  /** One observation of a keyed series. Every keyed fold below sorts a
+    * key's rows by `(ts, tie)` before folding them — all of a key's rows
+    * on a batch Dataset, the rows of one trigger on a stream (across
+    * triggers a stream folds in arrival order). `tie` breaks equal-ts
+    * ordering (the repo-wide ORDER BY ts, event_id convention — ADVICE
+    * r6: ts alone makes the fold order, and hence gate parity, depend on
+    * group-iterator luck whenever a series has a ts collision). */
   case class Obs(uniqueId: String, ts: Timestamp, y: Double, tie: Long = 0L)
+
+  /** Event time to the µs (`getTime` alone stops at the millisecond),
+    * then the tie-break. */
+  private val obsOrder: Ordering[Obs] =
+    Ordering.by(o => (o.ts.getTime, o.ts.getNanos, o.tie))
+
+  /** The keyed fold behind every stateful op: group by `key`, sort each
+    * key's rows by `order`, and fold them through `step` from the state
+    * the key carries (`zero` of its first row when it has none), emitting
+    * what each step returns. On a streaming Dataset the state persists
+    * across triggers; on a batch Dataset Spark calls the function once per
+    * key with empty state — the same one hash shuffle and sort as
+    * `groupByKey.flatMapGroups`, so the batch entry points run this very
+    * fold. */
+  private def keyedFold[I, S <: Product : TypeTag, O <: Product : TypeTag](
+      input: Dataset[I], key: I => String, order: Ordering[I], zero: I => S)(
+      step: (String, S, I) => (S, Option[O])): Dataset[O] =
+    input.groupByKey(key)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (id: String, rows: Iterator[I], state: GroupState[S]) => {
+          var s = state.getOption
+          val out = rows.toSeq.sorted(order).flatMap { o =>
+            val (next, emit) = step(id, s.getOrElse(zero(o)), o)
+            s = Some(next)
+            emit
+          }
+          s.foreach(state.update)
+          out.iterator
+        })(Encoders.product[S], Encoders.product[O])
+
+  /** [[keyedFold]] over [[Obs]]: keyed by `uniqueId`, in `(ts, tie)` order. */
+  private def obsFold[S <: Product : TypeTag, O <: Product : TypeTag](
+      input: Dataset[Obs], zero: Obs => S)(
+      step: (String, S, Obs) => (S, Option[O])): Dataset[O] =
+    keyedFold(input, (o: Obs) => o.uniqueId, obsOrder, zero)(step)
+
+  /** `df`'s id, time, value and optional tie-break columns as [[Obs]] —
+    * the input of every batch entry point. */
+  private def observations(df: DataFrame, idCol: String, tsCol: String,
+      yCol: String, tieCol: Option[String]): Dataset[Obs] = {
+    import df.sparkSession.implicits._
+    df.select(col(idCol).cast("string").as("uniqueId"),
+      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
+      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
+      .as[Obs]
+  }
+
   case class EtsState(level: Double, trend: Double, n: Long)
   case class EtsOutput(uniqueId: String, ts: Timestamp, y: Double,
       level: Double, trend: Double, forecastNext: Double)
@@ -26,28 +76,19 @@ object StreamingOps {
     * the update equations, emitting the one-step-ahead forecast
     * (reference streaming/ets.py:13-280 `partial_fit`/`predict`). */
   def streamingEts(input: Dataset[Obs], alpha: Double = 0.3, beta: Double = 0.1)
-      : Dataset[EtsOutput] = {
-    import input.sparkSession.implicits._
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[EtsState]) => {
-          var s = state.getOption.getOrElse(EtsState(0.0, 0.0, 0L))
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            s =
-              if (s.n == 0L) EtsState(o.y, 0.0, 1L)
-              else if (s.n == 1L) EtsState(o.y, o.y - s.level, 2L) // two-point init, matches Ets.holt
-              else {
-                val prevLevel = s.level
-                val level = alpha * o.y + (1.0 - alpha) * (s.level + s.trend)
-                val trend = beta * (level - prevLevel) + (1.0 - beta) * s.trend
-                EtsState(level, trend, s.n + 1)
-              }
-            EtsOutput(id, o.ts, o.y, s.level, s.trend, s.level + s.trend)
-          }
-          state.update(s)
-          out.iterator
-        })
-  }
+      : Dataset[EtsOutput] =
+    obsFold(input, _ => EtsState(0.0, 0.0, 0L)) { (id, s, o: Obs) =>
+      val next =
+        if (s.n == 0L) EtsState(o.y, 0.0, 1L)
+        else if (s.n == 1L) EtsState(o.y, o.y - s.level, 2L) // two-point init, matches Ets.holt
+        else {
+          val level = alpha * o.y + (1.0 - alpha) * (s.level + s.trend)
+          val trend = beta * (level - s.level) + (1.0 - beta) * s.trend
+          EtsState(level, trend, s.n + 1)
+        }
+      (next, Some(EtsOutput(id, o.ts, o.y, next.level, next.trend,
+        next.level + next.trend)))
+    }
 
   case class KalmanState(x: Double, p: Double, n: Long)
   case class KalmanOutput(uniqueId: String, ts: Timestamp, y: Double,
@@ -56,24 +97,14 @@ object StreamingOps {
   /** Streaming local-level Kalman filter: predict/update per observation
     * (reference streaming/kalman.py:8-158). q = process var, r = obs var. */
   def streamingKalman(input: Dataset[Obs], q: Double = 1e-3, r: Double = 1.0)
-      : Dataset[KalmanOutput] = {
-    import input.sparkSession.implicits._
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[KalmanState]) => {
-          var s = state.getOption.getOrElse(KalmanState(0.0, 1e6, 0L))
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            val pPred = s.p + q
-            val k = pPred / (pPred + r)
-            val x = s.x + k * (o.y - s.x)
-            val p = (1.0 - k) * pPred
-            s = KalmanState(x, p, s.n + 1)
-            KalmanOutput(id, o.ts, o.y, x, p)
-          }
-          state.update(s)
-          out.iterator
-        })
-  }
+      : Dataset[KalmanOutput] =
+    obsFold(input, _ => KalmanState(0.0, 1e6, 0L)) { (id, s, o: Obs) =>
+      val pPred = s.p + q
+      val k = pPred / (pPred + r)
+      val x = s.x + k * (o.y - s.x)
+      val p = (1.0 - k) * pPred
+      (KalmanState(x, p, s.n + 1), Some(KalmanOutput(id, o.ts, o.y, x, p)))
+    }
 
   case class EnkfState(ens: Array[Double], t: Long)
   case class EnkfOutput(uniqueId: String, ts: Timestamp, y: Double,
@@ -88,24 +119,14 @@ object StreamingOps {
     * State is one `nEnsemble`-double array per key (bounded). */
   def streamingEnkf(input: Dataset[Obs], q: Double = 1e-3, r: Double = 1.0,
       nEnsemble: Int = 30, seed: Long = 42L): Dataset[EnkfOutput] = {
-    import input.sparkSession.implicits._
     val sc = graft.kernels.DetRng.seedConst(seed)
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[EnkfState]) => {
-          var s = state.getOption.orNull
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            if (s == null)
-              s = EnkfState(
-                graft.kernels.Bayesian.enkfInitEnsemble(o.y, nEnsemble, sc), 0L)
-            val (ens, m, v) =
-              graft.kernels.Bayesian.enkfStepDet(s.ens, o.y, s.t, q, r, sc)
-            s = EnkfState(ens, s.t + 1)
-            EnkfOutput(id, o.ts, o.y, m, v)
-          }
-          state.update(s)
-          out.iterator
-        })
+    obsFold(input, o => EnkfState(
+        graft.kernels.Bayesian.enkfInitEnsemble(o.y, nEnsemble, sc), 0L)) {
+      (id, s, o: Obs) =>
+        val (ens, m, v) =
+          graft.kernels.Bayesian.enkfStepDet(s.ens, o.y, s.t, q, r, sc)
+        (EnkfState(ens, s.t + 1), Some(EnkfOutput(id, o.ts, o.y, m, v)))
+    }
   }
 
   case class PfState(particles: Array[Double], t: Long)
@@ -120,24 +141,14 @@ object StreamingOps {
   def streamingParticleFilter(input: Dataset[Obs], nParticles: Int = 200,
       sigmaLevel: Double = 1.0, sigmaObs: Double = 1.0,
       resampleThreshold: Double = 0.5, seed: Long = 42L): Dataset[PfOutput] = {
-    import input.sparkSession.implicits._
     val sc = graft.kernels.DetRng.seedConst(seed)
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[PfState]) => {
-          var s = state.getOption.orNull
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            if (s == null)
-              s = PfState(
-                graft.kernels.Bayesian.pfInitParticles(o.y, nParticles, sc), 0L)
-            val (parts, m, v, ess) = graft.kernels.Bayesian.pfStepDet(
-              s.particles, o.y, s.t, sigmaLevel, sigmaObs, resampleThreshold, sc)
-            s = PfState(parts, s.t + 1)
-            PfOutput(id, o.ts, o.y, m, v, ess)
-          }
-          state.update(s)
-          out.iterator
-        })
+    obsFold(input, o => PfState(
+        graft.kernels.Bayesian.pfInitParticles(o.y, nParticles, sc), 0L)) {
+      (id, s, o: Obs) =>
+        val (parts, m, v, ess) = graft.kernels.Bayesian.pfStepDet(
+          s.particles, o.y, s.t, sigmaLevel, sigmaObs, resampleThreshold, sc)
+        (PfState(parts, s.t + 1), Some(PfOutput(id, o.ts, o.y, m, v, ess)))
+    }
   }
 
   case class AnomalyOutput(uniqueId: String, ts: Timestamp, y: Double,
@@ -150,27 +161,26 @@ object StreamingOps {
     * recursion, so stream ≡ batch holds bit-for-bit (deterministic, no
     * draws). State is 4 doubles + a counter per key. */
   def streamingNigAnomaly(input: Dataset[Obs], threshold: Double = 0.01,
-      warmup: Int = 10): Dataset[AnomalyOutput] = {
-    import input.sparkSession.implicits._
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs],
-         state: GroupState[graft.kernels.Bayesian.NigState]) => {
-          var s = state.getOption.orNull
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            if (s == null) s = graft.kernels.Bayesian.nigInit(o.y)
-            val (next, p) = graft.kernels.Bayesian.nigStep(s, o.y, warmup)
-            s = next
-            AnomalyOutput(id, o.ts, o.y, p, p < threshold)
-          }
-          state.update(s)
-          out.iterator
-        })
-  }
+      warmup: Int = 10): Dataset[AnomalyOutput] =
+    obsFold(input, o => graft.kernels.Bayesian.nigInit(o.y)) { (id, s, o: Obs) =>
+      val (next, p) = graft.kernels.Bayesian.nigStep(s, o.y, warmup)
+      (next, Some(AnomalyOutput(id, o.ts, o.y, p, p < threshold)))
+    }
 
   case class WindowState(values: Array[Double], lastTs: Long)
   case class WindowOutput(uniqueId: String, ts: Timestamp, window: Array[Double],
       windowLen: Int)
+
+  /** `s`'s tail buffer with `o` appended, cut to its last `keep` values. */
+  private def pushTail(s: WindowState, o: Obs, keep: Int): WindowState = {
+    val appended = s.values :+ o.y
+    WindowState(
+      if (appended.length > keep) appended.takeRight(keep) else appended,
+      o.ts.getTime)
+  }
+
+  private val emptyTail: Obs => WindowState =
+    _ => WindowState(Array.empty, Long.MinValue)
 
   /** Sliding-window state manager (reference streaming/window.py:10-56):
     * per-key bounded tail buffer maintained in `flatMapGroupsWithState`;
@@ -178,22 +188,10 @@ object StreamingOps {
     * in-process dict-of-deques becomes fault-tolerant keyed state. */
   def slidingWindow(input: Dataset[Obs], windowSize: Int): Dataset[WindowOutput] = {
     require(windowSize > 0, "windowSize must be positive")
-    import input.sparkSession.implicits._
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[WindowState]) => {
-          var s = state.getOption.getOrElse(WindowState(Array.empty, Long.MinValue))
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            val appended = s.values :+ o.y
-            val kept =
-              if (appended.length > windowSize) appended.takeRight(windowSize)
-              else appended
-            s = WindowState(kept, o.ts.getTime)
-            WindowOutput(id, o.ts, kept, kept.length)
-          }
-          state.update(s)
-          out.iterator
-        })
+    obsFold(input, emptyTail) { (id, s, o: Obs) =>
+      val next = pushTail(s, o, windowSize)
+      (next, Some(WindowOutput(id, o.ts, next.values, next.values.length)))
+    }
   }
 
   case class NeuralFcOutput(uniqueId: String, ts: Timestamp,
@@ -226,24 +224,11 @@ object StreamingOps {
     * `forward(tail)` per arrival. `forward` must be serializable
     * (broadcast weights captured in the closure). */
   def streamingModelForecast(input: Dataset[Obs], inputSize: Int,
-      forward: Array[Double] => Array[Double]): Dataset[NeuralFcOutput] = {
-    import input.sparkSession.implicits._
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[WindowState]) => {
-          var s = state.getOption.getOrElse(WindowState(Array.empty, Long.MinValue))
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-            val appended = s.values :+ o.y
-            val kept =
-              if (appended.length > inputSize) appended.takeRight(inputSize)
-              else appended
-            s = WindowState(kept, o.ts.getTime)
-            NeuralFcOutput(id, o.ts, forward(kept))
-          }
-          state.update(s)
-          out.iterator
-        })
-  }
+      forward: Array[Double] => Array[Double]): Dataset[NeuralFcOutput] =
+    obsFold(input, emptyTail) { (id, s, o: Obs) =>
+      val next = pushTail(s, o, inputSize)
+      (next, Some(NeuralFcOutput(id, o.ts, forward(next.values))))
+    }
 
   case class FeatureRow(uniqueId: String, ts: Timestamp, y: Double,
       features: Array[Double])
@@ -254,39 +239,22 @@ object StreamingOps {
     * `gramColumns` maintains the pooled ridge normal equations — the
     * incremental `partial_fit` becomes an incrementally-maintained Gram,
     * which is EXACT (not SGD-approximate) and merges across partitions.
-    * Solve with [[solveRidgeFromGram]] whenever a forecast is needed. */
-  def streamingLagFeatures(input: Dataset[Obs], lags: Seq[Int],
-      windowSize: Int = 100): Dataset[FeatureRow] = {
+    * Per-key state is the last `max(lags)` values, all a feature row
+    * reads. Solve with [[solveRidgeFromGram]] whenever a forecast is
+    * needed. */
+  def streamingLagFeatures(input: Dataset[Obs], lags: Seq[Int])
+      : Dataset[FeatureRow] = {
     require(lags.nonEmpty && lags.forall(_ > 0), "lags must be positive")
-    import input.sparkSession.implicits._
     val maxLag = lags.max
-    // per-key state only ever reads the last maxLag values — the old
-    // max(windowSize, maxLag+1) inflated every key's state store
-    // ~windowSize/maxLag-fold (100 doubles for lags=1,2) for data
-    // nothing consumes; windowSize is kept for signature compatibility
-    // but no longer drives state size
-    val _ = windowSize
-    val keep = maxLag
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[Obs], state: GroupState[WindowState]) => {
-          var s = state.getOption.getOrElse(WindowState(Array.empty, Long.MinValue))
-          val out = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).flatMap { o =>
-            val buf = s.values
-            val row =
-              if (buf.length >= maxLag)
-                Some(FeatureRow(id, o.ts, o.y,
-                  lags.map(k => buf(buf.length - k)).toArray :+ 1.0))
-              else None
-            val appended = buf :+ o.y
-            s = WindowState(
-              if (appended.length > keep) appended.takeRight(keep) else appended,
-              o.ts.getTime)
-            row
-          }
-          state.update(s)
-          out.iterator
-        })
+    obsFold(input, emptyTail) { (id, s, o: Obs) =>
+      val buf = s.values
+      val row =
+        if (buf.length >= maxLag)
+          Some(FeatureRow(id, o.ts, o.y,
+            lags.map(k => buf(buf.length - k)).toArray :+ 1.0))
+        else None
+      (pushTail(s, o, maxLag), row)
+    }
   }
 
   /** Gram-sum aggregate columns for [[streamingLagFeatures]] output: run
@@ -314,32 +282,20 @@ object StreamingOps {
     graft.kernels.ArimaLite.solve(g, b)
   }
 
-  /** Batch-mode replica of the streaming global fit (tests + query
-    * contract): same per-key fold, same Gram aggregation, one batch. */
+  // Batch entry points (tests and the query contract, where no streaming
+  // source exists): each runs its streaming op over `df` as one batch.
+  // `spark` is unused; it stays for the callers' signatures.
+
+  /** The streaming global fit over one batch: [[streamingLagFeatures]],
+    * the [[gramColumns]] aggregate, [[solveRidgeFromGram]]. */
   def globalRidgeBatch(spark: SparkSession, df: DataFrame, idCol: String,
       tsCol: String, yCol: String, lags: Seq[Int],
       tieCol: Option[String] = None): Array[Double] = {
-    import spark.implicits._
-    val ds = df.select(col(idCol).cast("string").as("uniqueId"),
-      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
-      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
-      .as[Obs]
     val p = lags.length + 1
-    val feats = ds.groupByKey(_.uniqueId).flatMapGroups { (id, rows) =>
-      val sorted = rows.toSeq.sortBy(o => (o.ts.getTime, o.tie))
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-      sorted.flatMap { o =>
-        val row =
-          if (buf.length >= lags.max)
-            Some(FeatureRow(id, o.ts, o.y,
-              lags.map(k => buf(buf.length - k)).toArray :+ 1.0))
-          else None
-        buf += o.y
-        row
-      }.iterator
-    }
     val cols = gramColumns(p)
-    val gramRow = feats.toDF().agg(cols.head, cols.tail: _*).head()
+    val gramRow = streamingLagFeatures(
+        observations(df, idCol, tsCol, yCol, tieCol), lags)
+      .agg(cols.head, cols.tail: _*).head()
     // no series long enough for a single feature row → the sums are all
     // null; fail with the actual problem, not a getDouble NPE
     require(!gramRow.isNullAt(0),
@@ -348,135 +304,43 @@ object StreamingOps {
     solveRidgeFromGram(gramRow, p)
   }
 
-  /** Convenience: run a batch panel through the same update equations (the
-    * reference's incremental-batch mode) — used by tests and the query
-    * contract, where no streaming source exists. */
+  /** [[streamingEts]] over one batch (the reference's incremental-batch
+    * mode). */
   def etsBatch(spark: SparkSession, df: DataFrame, idCol: String, tsCol: String,
       yCol: String, alpha: Double = 0.3, beta: Double = 0.1,
-      tieCol: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val ds = df.select(col(idCol).cast("string").as("uniqueId"),
-      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
-      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
-      .as[Obs]
-    // same fold, expressed over grouped batch data
-    val folded = ds.groupByKey(_.uniqueId).flatMapGroups { (id, rows) =>
-      var s = EtsState(0.0, 0.0, 0L)
-      rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-        s =
-          if (s.n == 0L) EtsState(o.y, 0.0, 1L)
-          else if (s.n == 1L) EtsState(o.y, o.y - s.level, 2L) // two-point init, matches Ets.holt
-          else {
-            val prevLevel = s.level
-            val level = alpha * o.y + (1.0 - alpha) * (s.level + s.trend)
-            val trend = beta * (level - prevLevel) + (1.0 - beta) * s.trend
-            EtsState(level, trend, s.n + 1)
-          }
-        EtsOutput(id, o.ts, o.y, s.level, s.trend, s.level + s.trend)
-      }.iterator
-    }
-    folded.toDF()
-  }
+      tieCol: Option[String] = None): DataFrame =
+    streamingEts(observations(df, idCol, tsCol, yCol, tieCol), alpha, beta).toDF()
 
-  /** Batch twin of [[streamingKalman]] (same update equations, grouped
-    * batch data) — the gate query for the streaming filter math. */
+  /** [[streamingKalman]] over one batch. */
   def kalmanBatch(spark: SparkSession, df: DataFrame, idCol: String,
       tsCol: String, yCol: String, q: Double = 1e-3, r: Double = 1.0,
-      tieCol: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val ds = df.select(col(idCol).cast("string").as("uniqueId"),
-      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
-      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
-      .as[Obs]
-    ds.groupByKey(_.uniqueId).flatMapGroups { (id, rows) =>
-      var s = KalmanState(0.0, 1e6, 0L)
-      rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-        val pPred = s.p + q
-        val k = pPred / (pPred + r)
-        val x = s.x + k * (o.y - s.x)
-        val p = (1.0 - k) * pPred
-        s = KalmanState(x, p, s.n + 1)
-        KalmanOutput(id, o.ts, o.y, x, p)
-      }.iterator
-    }.toDF()
-  }
+      tieCol: Option[String] = None): DataFrame =
+    streamingKalman(observations(df, idCol, tsCol, yCol, tieCol), q, r).toDF()
 
-  /** Batch twin of [[slidingWindow]]: per arrival, the refreshed bounded
-    * tail window (emitted as length + left-fold sum so the gate compares
-    * scalars, not array cells). */
+  /** [[slidingWindow]] over one batch. */
   def windowBatch(spark: SparkSession, df: DataFrame, idCol: String,
       tsCol: String, yCol: String, windowSize: Int,
-      tieCol: Option[String] = None): DataFrame = {
-    require(windowSize > 0, "windowSize must be positive")
-    import spark.implicits._
-    val ds = df.select(col(idCol).cast("string").as("uniqueId"),
-      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
-      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
-      .as[Obs]
-    ds.groupByKey(_.uniqueId).flatMapGroups { (id, rows) =>
-      var buf = Array.empty[Double]
-      rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-        val appended = buf :+ o.y
-        buf = if (appended.length > windowSize) appended.takeRight(windowSize)
-          else appended
-        WindowOutput(id, o.ts, buf, buf.length)
-      }.iterator
-    }.toDF()
-  }
+      tieCol: Option[String] = None): DataFrame =
+    slidingWindow(observations(df, idCol, tsCol, yCol, tieCol), windowSize).toDF()
 
-  /** Batch twin of [[streamingEnkf]] (r12: the gate query for the
-    * streaming ensemble fold — same init + stepDet per row, same
-    * (ts, tie) order, so it IS the streamed math over batch data; the
-    * DuckDB oracle is the ts_enkf replay at this query's subset). */
+  /** [[streamingEnkf]] over one batch (the DuckDB oracle of its gate query
+    * is the ts_enkf replay at that query's subset). */
   def enkfBatch(spark: SparkSession, df: DataFrame, idCol: String,
       tsCol: String, yCol: String, q: Double = 1e-3, r: Double = 1.0,
       nEnsemble: Int = 30, seed: Long = 42L,
-      tieCol: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val ds = df.select(col(idCol).cast("string").as("uniqueId"),
-      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
-      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
-      .as[Obs]
-    val sc = graft.kernels.DetRng.seedConst(seed)
-    ds.groupByKey(_.uniqueId).flatMapGroups { (id, rows) =>
-      var ens: Array[Double] = null
-      var t = 0L
-      rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-        if (ens == null)
-          ens = graft.kernels.Bayesian.enkfInitEnsemble(o.y, nEnsemble, sc)
-        val (e2, m, v) = graft.kernels.Bayesian.enkfStepDet(ens, o.y, t, q, r, sc)
-        ens = e2; t += 1
-        EnkfOutput(id, o.ts, o.y, m, v)
-      }.iterator
-    }.toDF()
-  }
+      tieCol: Option[String] = None): DataFrame =
+    streamingEnkf(observations(df, idCol, tsCol, yCol, tieCol),
+      q, r, nEnsemble, seed).toDF()
 
-  /** Batch twin of [[streamingParticleFilter]] (r12 gate query; the
-    * DuckDB oracle is the ts_particle replay at this query's subset). */
+  /** [[streamingParticleFilter]] over one batch (the DuckDB oracle of its
+    * gate query is the ts_particle replay at that query's subset). */
   def pfBatch(spark: SparkSession, df: DataFrame, idCol: String,
       tsCol: String, yCol: String, nParticles: Int = 200,
       sigmaLevel: Double = 1.0, sigmaObs: Double = 1.0,
       resampleThreshold: Double = 0.5, seed: Long = 42L,
-      tieCol: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val ds = df.select(col(idCol).cast("string").as("uniqueId"),
-      col(tsCol).cast("timestamp").as("ts"), col(yCol).cast("double").as("y"),
-      tieCol.map(c => col(c).cast("long")).getOrElse(lit(0L)).as("tie"))
-      .as[Obs]
-    val sc = graft.kernels.DetRng.seedConst(seed)
-    ds.groupByKey(_.uniqueId).flatMapGroups { (id, rows) =>
-      var parts: Array[Double] = null
-      var t = 0L
-      rows.toSeq.sortBy(o => (o.ts.getTime, o.tie)).map { o =>
-        if (parts == null)
-          parts = graft.kernels.Bayesian.pfInitParticles(o.y, nParticles, sc)
-        val (p2, m, v, ess) = graft.kernels.Bayesian.pfStepDet(
-          parts, o.y, t, sigmaLevel, sigmaObs, resampleThreshold, sc)
-        parts = p2; t += 1
-        PfOutput(id, o.ts, o.y, m, v, ess)
-      }.iterator
-    }.toDF()
-  }
+      tieCol: Option[String] = None): DataFrame =
+    streamingParticleFilter(observations(df, idCol, tsCol, yCol, tieCol),
+      nParticles, sigmaLevel, sigmaObs, resampleThreshold, seed).toDF()
 
   case class Doc(docId: Long, ts: Timestamp, text: String)
 
@@ -563,6 +427,8 @@ object StreamingOps {
       y: Double, tie: Long = 0L)
   case class AsofOut(uniqueId: String, ts: Timestamp, y: Double,
       asofTs: Option[Timestamp], asofY: Option[Double])
+  /** Per-key state of [[streamingAsofEnrich]]: the latest right payload. */
+  case class AsofState(asofTs: Option[Timestamp], asofY: Option[Double])
 
   /** Streaming backward as-of enrichment — the online twin of
     * [[graft.ops.TemporalJoins.asofJoin]] (direction = backward): each
@@ -577,24 +443,14 @@ object StreamingOps {
     * event-time in-order — a right row arriving after a left row it
     * should have matched is not retroactively applied. Out-of-order
     * backfills belong to the batch operator. */
-  def streamingAsofEnrich(input: Dataset[TaggedObs]): Dataset[AsofOut] = {
-    import input.sparkSession.implicits._
-    input.groupByKey(_.uniqueId)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (id: String, rows: Iterator[TaggedObs],
-         state: GroupState[(Long, Double)]) => {
-          var s = state.getOption
-          val out = rows.toSeq
-            .sortBy(o => (o.ts.getTime, if (o.isRight) 0 else 1, o.tie))
-            .flatMap { o =>
-              if (o.isRight) { s = Some((o.ts.getTime, o.y)); None }
-              else Some(AsofOut(id, o.ts, o.y,
-                s.map(p => new Timestamp(p._1)), s.map(_._2)))
-            }
-          s.foreach(state.update)
-          out.iterator
-        })
-  }
+  def streamingAsofEnrich(input: Dataset[TaggedObs]): Dataset[AsofOut] =
+    keyedFold(input, (o: TaggedObs) => o.uniqueId,
+        Ordering.by((o: TaggedObs) =>
+          (o.ts.getTime, o.ts.getNanos, if (o.isRight) 0 else 1, o.tie)),
+        (_: TaggedObs) => AsofState(None, None)) { (id, s, o: TaggedObs) =>
+      if (o.isRight) (AsofState(Some(o.ts), Some(o.y)), None)
+      else (s, Some(AsofOut(id, o.ts, o.y, s.asofTs, s.asofY)))
+    }
 
   /** Streaming curation gate: the batch funnel's metric stack and verdict
     * chain are pure column expressions
@@ -771,34 +627,31 @@ object StreamingOps {
   }
 
   /** Full streaming curation funnel (VERDICT r6 ask #9): first-seen exact
-    * dedup → Bloom-prefiltered exact decontamination → the stateless
-    * curation gate, composed into ONE streaming plan.
+    * dedup → exact decontamination → the stateless curation gate,
+    * composed into ONE streaming plan.
     *
-    * Decontamination here is per-row and STATELESS: the bench grams ride
-    * two broadcasts — a Bloom filter (~1.2 B/gram at 1% fpp, the
-    * membership fast path) and the exact gram set that kills the Bloom's
-    * false positives. Benchmark suites are MBs against a TB/day stream,
-    * so the exact set is driver-bounded by construction — the same
-    * bounded-broadcast contract as the batch
-    * [[graft.ops.Decontam.ngramOverlapBloom]], minus its verify JOIN,
-    * which would need a streaming groupBy (stateful, watermark-delayed
-    * emission) to rebuild the per-doc flag. No false negatives + exact
-    * verify ⇒ the flag is bit-identical to the batch funnel's
+    * Decontamination here is per-row and STATELESS: the bench grams are
+    * collected once (the one Spark job building this DataFrame starts)
+    * and ride one broadcast as an exact set. Benchmark suites are MBs against a
+    * TB/day stream, so the set is driver-bounded by construction — unlike
+    * the batch [[graft.ops.Decontam.ngramOverlapBloom]], whose Bloom
+    * filter stands in for a gram table too large to broadcast and needs a
+    * verify JOIN, which here would need a streaming groupBy (stateful,
+    * watermark-delayed emission) to rebuild the per-doc flag. Exact
+    * membership ⇒ the flag is bit-identical to the batch funnel's
     * [[graft.ops.Decontam.ngramOverlap]]; the verdict chain and split
     * reuse the batch expressions verbatim, so stream and batch cannot
     * drift. Output: (doc_id, reason, keep, split) per FIRST-SEEN doc. */
   def streamingFunnel(input: Dataset[Doc], bench: DataFrame, n: Int = 5,
       watermarkDelay: String = "1 hour"): DataFrame = {
-    val spark = input.sparkSession
-    val benchGrams = bench.select(explode(array_distinct(
-      graft.ops.Decontam.wordGrams(col("text"), n))).as("gram")).distinct()
-    val grams = benchGrams.collect().map(_.getString(0))
-    val bloom = benchGrams.stat.bloomFilter("gram",
-      math.max(grams.length.toLong, 1L), 0.01)
-    val bcBloom = spark.sparkContext.broadcast(bloom)
-    val bcSet = spark.sparkContext.broadcast(grams.toSet)
-    val contaminated = udf((gs: Seq[String]) => gs != null && gs.exists(g =>
-      bcBloom.value.mightContainString(g) && bcSet.value.contains(g)))
+    // the driver-side set dedups: a distinct() would add a shuffle, and so
+    // a second job under AQE
+    val grams = bench.select(explode(array_distinct(
+        graft.ops.Decontam.wordGrams(col("text"), n))))
+      .collect().map(_.getString(0)).toSet
+    val bcSet = input.sparkSession.sparkContext.broadcast(grams)
+    val contaminated = udf((gs: Seq[String]) =>
+      gs != null && gs.exists(bcSet.value.contains))
     val flagged = streamingDedup(input, watermarkDelay)
       .withColumnRenamed("docId", "doc_id")
       .withColumn("contaminated", contaminated(array_distinct(

@@ -5,13 +5,15 @@ import java.nio.file.Files
 import graft.TestSpark
 import graft.TestSpark.jobsDuring
 import graft.ops.{Distances, TemporalJoins}
+import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a DataFrame starts no Spark job the caller did not ask for:
   * every public [[TemporalJoins]] op (the as-of joins' skew handling
   * waits for shuffle statistics at run time), the [[Distances]] pair
-  * joins (always broadcast, no series count) and a re-read of an
+  * joins (always broadcast, no series count), the batch entry points of
+  * the streaming folds and a re-read of an
   * unchanged table through [[IO.table]] (whose schema and row-group
   * count are memoized). Also pins the memo's invalidation and the
   * row-group-aware scan width. */
@@ -79,6 +81,23 @@ class JobFreeBuildSpec extends AnyFunSuite {
         maxDist = Some(2.0), topK = 3)
       Distances.pairwiseMulti(panel, Seq("y", "y2"), "dtw_multi")
       Distances.pairwiseCross(panel, panel.filter(col("unique_id") < 5), "dtw", topK = 2)
+    }
+    assert(jobs === 0)
+  }
+
+  test("building the batch streaming folds starts no job") {
+    val ev = spark.range(0L, 2000L).select(
+      (col("id") % 20).as("k"),
+      timestamp_micros(col("id") * 1000000L).as("t"),
+      sin(col("id") / 5.0).as("v"), col("id").as("tie"))
+    val tie = Some("tie")
+    val (_, jobs) = jobsDuring {
+      StreamingOps.etsBatch(spark, ev, "k", "t", "v", tieCol = tie)
+      StreamingOps.kalmanBatch(spark, ev, "k", "t", "v", tieCol = tie)
+      StreamingOps.windowBatch(spark, ev, "k", "t", "v", windowSize = 5,
+        tieCol = tie)
+      StreamingOps.enkfBatch(spark, ev, "k", "t", "v", tieCol = tie)
+      StreamingOps.pfBatch(spark, ev, "k", "t", "v", tieCol = tie)
     }
     assert(jobs === 0)
   }

@@ -1,12 +1,13 @@
 package graft.streaming
 
 import graft.TestSpark
+import graft.TestSpark.jobsDuring
 import graft.ops.{Decontam, Sampling, TextOps}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The composed streaming funnel (dedup → Bloom decontam → curation
+/** The composed streaming funnel (dedup → exact decontam → curation
   * gate) must equal the batch doc_curation_pipeline composition on the
   * same data, restricted to first-seen documents (VERDICT r6 ask #9 —
   * the full funnel, not just the stateless gate). */
@@ -82,6 +83,17 @@ class StreamingFunnelSpec extends AnyFunSuite {
       assert(!streamed.map(_.head).contains(7L) &&
         !streamed.map(_.head).contains(8L), "dups must be suppressed")
     } finally query.stop()
+  }
+
+  test("building the funnel starts one job: the bench-gram collect") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val bench = Seq((100L, "the meaning of life here is a question philosophers debate"))
+      .toDF("doc_id", "text")
+    val source = MemoryStream[StreamingOps.Doc]
+    val (_, jobs) = jobsDuring(
+      StreamingOps.streamingFunnel(source.toDS(), bench, n = 5))
+    assert(jobs === 1)
   }
 
   test("stream funnel == batch pipeline on the real sf0.001 corpus") {

@@ -120,8 +120,15 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val data = (0 until 20).map(i => obs("k", i, math.sin(i * 0.4) * 3 + 10))
+    // reference: the scalar local-level Kalman recursion, written out here
+    val (q, r) = (1e-3, 1.0)
+    val expected = data.scanLeft((0.0, 1e6)) { case ((x, p), o) =>
+      val pPred = p + q
+      val k = pPred / (pPred + r)
+      (x + k * (o.y - x), (1.0 - k) * pPred)
+    }.tail
     val source = MemoryStream[Obs]
-    val out = StreamingOps.streamingKalman(source.toDS())
+    val out = StreamingOps.streamingKalman(source.toDS(), q, r)
     val query = out.writeStream.format("memory").queryName("kb_out")
       .outputMode("append").start()
     try {
@@ -132,13 +139,11 @@ class StreamingSpec extends AnyFunSuite {
       val streamed = spark.table("kb_out").as[StreamingOps.KalmanOutput]
         .collect().sortBy(_.ts.getTime)
       val batch = StreamingOps.kalmanBatch(spark, data.toDF(),
-        "uniqueId", "ts", "y").as[StreamingOps.KalmanOutput]
+        "uniqueId", "ts", "y", q, r).as[StreamingOps.KalmanOutput]
         .collect().sortBy(_.ts.getTime)
-      assert(streamed.length == batch.length && batch.length == 20)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.filtered == b.filtered && s.variance == b.variance,
-          s"mismatch at ${s.ts}: $s vs $b")
-      }
+      assert(streamed.length == 20 && batch.length == 20)
+      for (rows <- Seq(streamed, batch); (o, (x, p)) <- rows.zip(expected))
+        assert(o.filtered == x && o.variance == p, s"mismatch at ${o.ts}: $o vs ($x, $p)")
     } finally query.stop()
   }
 
@@ -146,6 +151,8 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val data = (0 until 15).map(i => obs("w2", i, i.toDouble * 1.5))
+    // reference: each prefix's last four values
+    val expected = (1 to data.length).map(n => data.take(n).map(_.y).takeRight(4))
     val source = MemoryStream[Obs]
     val out = StreamingOps.slidingWindow(source.toDS(), windowSize = 4)
     val query = out.writeStream.format("memory").queryName("wb_out")
@@ -158,11 +165,26 @@ class StreamingSpec extends AnyFunSuite {
       val batch = StreamingOps.windowBatch(spark, data.toDF(),
         "uniqueId", "ts", "y", windowSize = 4).as[StreamingOps.WindowOutput]
         .collect().sortBy(_.ts.getTime)
-      assert(streamed.length == batch.length && batch.length == 15)
-      streamed.zip(batch).foreach { case (s, b) =>
-        assert(s.window.toSeq == b.window.toSeq && s.windowLen == b.windowLen)
-      }
+      assert(streamed.length == 15 && batch.length == 15)
+      for (rows <- Seq(streamed, batch); (o, tail) <- rows.zip(expected))
+        assert(o.window.toSeq == tail && o.windowLen == tail.length,
+          s"at ${o.ts}: ${o.window.toSeq} vs $tail")
     } finally query.stop()
+  }
+
+  test("batch folds order rows within one millisecond by their microseconds") {
+    import spark.implicits._
+    def at(micros: Int, y: Double, tie: Long) = {
+      val ts = new Timestamp(1704067200000L)
+      ts.setNanos(micros * 1000)
+      Obs("m", ts, y, tie)
+    }
+    // the tie-break disagrees with the µs order; time must win
+    val data = Seq(at(100, 1.0, tie = 2L), at(200, 2.0, tie = 1L))
+    val last = StreamingOps.windowBatch(spark, data.toDF(),
+        "uniqueId", "ts", "y", windowSize = 2, tieCol = Some("tie"))
+      .as[StreamingOps.WindowOutput].collect().maxBy(_.windowLen)
+    assert(last.window.toSeq == Seq(1.0, 2.0))
   }
 
   test("streaming curation gate matches the batch composition row-for-row") {
